@@ -7,7 +7,9 @@ from __future__ import annotations
 
 import datetime as dt
 import json
+import os
 
+import pyarrow.parquet as pq
 import pytest
 
 from pyspark.sql import functions as F
@@ -185,3 +187,66 @@ def test_pipeline_uniq_mv_partials_merge(spark, tmp_path, cfg):
     merged = {r.name: r.uniq_hosts for r in P.merge_uniq(stored).collect()}
     # T1 overwrites host with the agent hostname, so distinct hosts = 1 per name
     assert merged == {"cpu": 1, "mem": 1}
+
+
+def _layout_bodies(run: int, n_files: int):
+    """One body per landing file, each spanning two dates, so a batch
+    read from ``n_files`` splits touches both date partitions."""
+    bodies = []
+    for i in range(n_files):
+        metrics, logs, events = [], [], []
+        for day in ("2024-05-01", "2024-05-02"):
+            for j in range(3):
+                ts = f"{day}T10:{j:02d}:{(i * 7 + run) % 60:02d}Z"
+                metrics.append(_metric(ts, "gauge", f"g{(i + j) % 4}", float(i + j), {"c": str(j)}))
+                metrics.append(_metric(ts, "counter", f"c{(i * j) % 3}", 1.0))
+                logs.append({"t": ts, "h": "w", "s": f"svc{(i + j) % 3}", "l": "info", "d": "x", "g": {}})
+                events.append({"t": ts, "h": "w", "e": f"ev{(i - j) % 3}", "d": "{}", "g": {}})
+        bodies.append(_batch(metrics, logs, events))
+    return bodies
+
+
+def _files_by_date(table_dir):
+    return {part.name: sorted(part.glob("*.parquet")) for part in sorted(table_dir.glob("date=*"))}
+
+
+def _run_two_layout_batches(spark, tmp_path, cfg):
+    # more landing files than cores: without a rebalance the text source
+    # splits each batch by file, and every split writes its own file per date
+    n_files = int(os.environ["SPARK_GRAFT_CPUS"]) + 2
+    for run in range(2):
+        for body in _layout_bodies(run, n_files):
+            _write_landing(tmp_path / "landing", [body])
+        P.run_pipeline_once(spark, cfg)
+    return tmp_path / "out"
+
+
+def _assert_one_sorted_file_per_date_per_batch(out, tables, batches=2):
+    for table in tables:
+        by_date = _files_by_date(out / table)
+        assert sorted(by_date) == ["date=2024-05-01", "date=2024-05-02"], table
+        for date, files in by_date.items():
+            assert len(files) == batches, (table, date, [f.name for f in files])
+            keys = [*P.SORT_KEYS[table], "when"]
+            for f in files:
+                rows = pq.read_table(f, columns=keys).to_pylist()
+                ordered = [tuple(r[k] for k in keys) for r in rows]
+                assert ordered == sorted(ordered), (table, f.name)
+
+
+def test_block_mode_writes_one_sorted_file_per_date_per_batch(spark, tmp_path, cfg):
+    out = _run_two_layout_batches(spark, tmp_path, cfg)
+    _assert_one_sorted_file_per_date_per_batch(out, ("metrics", "logs", "events"))
+    # the fused writer persists the batch; a rebalance under that cache
+    # would escape AQE's coalescing and write one file per shuffle partition
+    for table in ("metrics_gauge_lts", "metrics_counter_lts"):
+        by_date = _files_by_date(out / table)
+        assert sorted(by_date) == ["date=2024-05-01", "date=2024-05-02"], table
+        assert all(len(files) <= 2 for files in by_date.values()), (table, by_date)
+
+
+def test_exact_mode_detail_writes_one_sorted_file_per_date_per_batch(spark, tmp_path, cfg):
+    cfg.rollup_mode = "exact"
+    cfg.watermark = P.WATERMARK
+    out = _run_two_layout_batches(spark, tmp_path, cfg)
+    _assert_one_sorted_file_per_date_per_batch(out, ("metrics", "logs", "events"))

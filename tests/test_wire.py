@@ -7,6 +7,8 @@ from __future__ import annotations
 
 import datetime as dt
 
+from pyspark.sql import functions as F
+
 from yamon_spark.sources import wire
 
 UTC = dt.timezone.utc
@@ -159,3 +161,57 @@ def test_malformed_lines_reject_and_dont_poison(spark):
     assert metrics.first().name == "cpu"
     rejects = parse_rejects(lines)
     assert rejects.count() == 3  # garbage, truncated, empty body — not {}
+
+
+_PARSERS = {
+    "batch": wire.parse_batch,
+    "post": wire.parse_post_data,
+    "script": wire.parse_script_result,
+}
+
+# null elements, empty arrays, missing keys and `{}` bodies per format
+_EDGE_BODIES = {
+    "batch": [
+        '{"m":[null,{"t":"2024-05-01T10:00:00Z","m":"gauge","n":"a","v":1}],"l":[],"e":[null]}',
+        '{"m":[],"l":[{"t":"2024-05-01T10:00:01Z","s":"x"},null]}',
+        '{"e":[{}],"m":null,"l":null}',
+        "{}",
+        "not json",
+    ],
+    "post": [
+        '{"metrics":[null,{"t":"2024-05-01T10:00:00Z","m":"counter","n":"b","v":2}],"events":[],"logs":[null]}',
+        '{"logs":[{}],"events":[{"t":"2024-05-01T10:00:02Z","e":"deploy"},null]}',
+        "{}",
+    ],
+    "script": [
+        '{"metrics":[null,{"type":"gauge","name":"a","value":1,"time":1714558800}],"logs":[],"event":null}',
+        '{"metric":{"type":"counter","name":"b","value":2,"time":1714558801},'
+        '"events":[null,{"type":"t","time":1714558802}],"logs":[{"service":"s","time":1714558803},null]}',
+        "{}",
+    ],
+}
+
+
+def test_each_stream_parses_the_landing_line_once(spark):
+    # an inner explode gets an inferred size()>0 filter that re-runs
+    # from_json below the projection that already parses the line
+    for fmt, parse in _PARSERS.items():
+        for table, df in parse(_lines(spark, "{}")).items():
+            plan = df._jdf.queryExecution().optimizedPlan().toString()
+            assert plan.count("from_json(") == 1, (fmt, table, plan)
+
+
+def test_parse_rows_match_explode(spark, monkeypatch):
+    def rows(fmt):
+        out = _PARSERS[fmt](_lines(spark, *_EDGE_BODIES[fmt]))
+        return {t: sorted(map(repr, df.collect())) for t, df in out.items()}
+
+    got = {fmt: rows(fmt) for fmt in _PARSERS}
+    monkeypatch.setattr(
+        wire, "_elements", lambda df, arr, alias, *keep: df.select(F.explode(arr).alias(alias), *keep)
+    )
+    for fmt in _PARSERS:
+        assert got[fmt] == rows(fmt), fmt
+        assert all(got[fmt].values()), (fmt, got[fmt])  # every stream has rows
+    # null array elements survive as rows, as under explode
+    assert len(got["batch"]["events"]) == 2 and len(got["post"]["logs"]) == 2

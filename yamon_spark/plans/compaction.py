@@ -3,8 +3,10 @@
 MergeTree background merges, clickhouse storage the reference relies on
 via res/schema.sql partitioning).
 
-Streaming micro-batches write one file per trigger per partition; a
-5-second trigger produces ~17k files/day/partition — death by file
+Streaming micro-batches write one file per trigger per date partition
+(``streaming/pipeline`` rebalances each detail write by date; AQE
+splits a date only above its advisory partition size), so a 5-second
+trigger still produces ~17k files/day/partition — death by file
 listing at 100 TB. Compaction rewrites each date partition to
 ``ceil(bytes / target_file_bytes)`` files, restoring the table's sort
 order (ORDER BY keys) inside each file so min/max pruning and tag bloom

@@ -140,8 +140,23 @@ def _tags(col: Column) -> Column:
     return F.coalesce(col, F.create_map().cast(_TAGS))
 
 
+def _elements(df: DataFrame, arr: Column | str, alias: str, *keep: str) -> DataFrame:
+    """One row per element of ``arr`` with ``explode``'s rows: null and
+    empty arrays emit nothing, null elements are kept. Written as
+    ``posexplode_outer`` + ``pos IS NOT NULL`` because Catalyst infers a
+    ``size(arr) > 0 AND isnotnull(arr)`` filter under an inner
+    ``explode`` (InferFiltersFromGenerate), which re-evaluates the
+    landing line's ``from_json`` below the projection that parses it;
+    outer generators get no inferred filter, so each line parses once."""
+    return (
+        df.select(F.posexplode_outer(arr).alias("_pos", alias), *keep)
+        .where(F.col("_pos").isNotNull())
+        .drop("_pos")
+    )
+
+
 def _streams_from_struct(parsed: DataFrame, m: str, lg: str, e: str) -> dict[str, DataFrame]:
-    metrics = parsed.select(F.explode(m).alias("r")).select(
+    metrics = _elements(parsed, m, "r").select(
         _ts(F.col("r.t")).alias("when"),
         F.col("r.m").alias("type"),
         F.coalesce(F.col("r.h"), F.lit("")).alias("host"),
@@ -149,7 +164,7 @@ def _streams_from_struct(parsed: DataFrame, m: str, lg: str, e: str) -> dict[str
         F.col("r.v").alias("value"),
         _tags(F.col("r.g")).alias("tags"),
     )
-    logs = parsed.select(F.explode(lg).alias("r")).select(
+    logs = _elements(parsed, lg, "r").select(
         _ts(F.col("r.t")).alias("when"),
         F.coalesce(F.col("r.h"), F.lit("")).alias("host"),
         F.col("r.s").alias("service"),
@@ -157,7 +172,7 @@ def _streams_from_struct(parsed: DataFrame, m: str, lg: str, e: str) -> dict[str
         F.coalesce(F.col("r.d"), F.lit("")).alias("data"),
         _tags(F.col("r.g")).alias("tags"),
     )
-    events = parsed.select(F.explode(e).alias("r")).select(
+    events = _elements(parsed, e, "r").select(
         _ts(F.col("r.t")).alias("when"),
         F.coalesce(F.col("r.h"), F.lit("")).alias("host"),
         F.col("r.e").alias("type"),
@@ -199,7 +214,7 @@ def parse_script_result(lines: DataFrame, col: str = "value") -> dict[str, DataF
         F.concat(F.coalesce("r.events", F.array()), F.array("r.event")), lambda x: x.isNotNull()
     )
     metrics = (
-        b.select(F.explode(metrics_arr).alias("m"), "ingest_ts")
+        _elements(b, metrics_arr, "m", "ingest_ts")
         .where(F.col("m.type").isin("gauge", "counter"))  # type dispatch, script.go:28-39
         .select(
             script_time(F.col("m.time"), F.col("ingest_ts")).alias("when"),
@@ -210,7 +225,7 @@ def parse_script_result(lines: DataFrame, col: str = "value") -> dict[str, DataF
             _tags(F.col("m.tags")).alias("tags"),
         )
     )
-    logs = b.select(F.explode(logs_arr).alias("l"), "ingest_ts").select(
+    logs = _elements(b, logs_arr, "l", "ingest_ts").select(
         script_time(F.col("l.time"), F.col("ingest_ts")).alias("when"),
         F.lit("").alias("host"),
         F.col("l.service").alias("service"),
@@ -218,7 +233,7 @@ def parse_script_result(lines: DataFrame, col: str = "value") -> dict[str, DataF
         F.coalesce(F.col("l.data"), F.lit("")).alias("data"),
         _tags(F.col("l.tags")).alias("tags"),
     )
-    events = b.select(F.explode(events_arr).alias("e"), "ingest_ts").select(
+    events = _elements(b, events_arr, "e", "ingest_ts").select(
         script_time(F.col("e.time"), F.col("ingest_ts")).alias("when"),
         F.lit("").alias("host"),
         F.col("e.type").alias("type"),

@@ -24,12 +24,16 @@ row-count thresholds (forward.go:134-161).
 Every operator here works identically on batch DataFrames (tests,
 backfill) and streaming DataFrames — builders take either.
 
-Scale notes (1000-executor / 100 TB): the only shuffle in the pipeline
-is the rollup groupBy (keyed on host,name,tags — high cardinality,
-well-distributed); detail writes are shuffle-free map-only appends.
-State size for the rollups is bounded by watermark horizon x active
-series, and the date partitioning makes retention (D4) a pure
-partition drop.
+Scale notes (1000-executor / 100 TB): the rollup groupBy shuffles on
+host,name,tags (high cardinality, well-distributed), and each detail
+write carries one AQE-sized rebalance by date. The text source splits a
+micro-batch by cores, so without it every split writes its own file per
+date and the file count follows the core count, not the bytes; with it
+a batch writes one file per date (the ClickHouse insert's one part per
+partition) and splits a date only above
+``spark.sql.adaptive.advisoryPartitionSizeInBytes``. State size for the
+rollups is bounded by watermark horizon x active series, and the date
+partitioning makes retention (D4) a pure partition drop.
 """
 
 from __future__ import annotations
@@ -191,12 +195,17 @@ class PipelineConfig:
 
 
 def _write_detail_batch(batch: DataFrame, table: str, cfg: PipelineConfig) -> None:
-    """Append one detail block: stamp date partition column, sort within
+    """Append one detail block: stamp date partition column, rebalance
+    by date (one file per date per batch, AQE-sized), sort within
     partitions by the reference ORDER BY key (D6 -> parquet row-group
     min/max skipping), materialize flattened tag_keys/tag_values with
     parquet bloom filters (D7 — the ClickHouse mapKeys/mapValues bloom
     indexes, res/schema.sql:9-10), write ZSTD parquet partitioned by
-    date (D5 -> partition pruning; D4 retention drops whole dirs)."""
+    date (D5 -> partition pruning; D4 retention drops whole dirs).
+
+    The rebalance lives in this write's own plan: AQE cannot coalesce a
+    shuffle under the fused metrics writer's ``persist()``, so the
+    cached batch must stay unshuffled."""
     from yamon_spark.plans.layout import with_hot_tag_cols, with_tag_blooms, with_tag_index_cols
 
     # date LEADS the sort: the partitioned write requires ordering by the
@@ -208,6 +217,7 @@ def _write_detail_batch(batch: DataFrame, table: str, cfg: PipelineConfig) -> No
     writer = (
         with_hot_tag_cols(with_tag_index_cols(batch), cfg.hot_tag_keys)
         .withColumn("date", F.to_date("when"))
+        .hint("rebalance", "date")
         .sortWithinPartitions(*sort_cols)
         .write.mode("append")
         .partitionBy("date")
