@@ -40,7 +40,6 @@ def cfg(tmp_path):
         checkpoint_dir=str(tmp_path / "ckpt"),
         hostname="agent-1",
         static_tags={"dc": "eu"},
-        watermark=None,
         clickhouse=CH.ClickHouseSinkConfig(url="jdbc:clickhouse://ch:8123/yamon"),
     )
 
@@ -136,7 +135,6 @@ def test_failed_insert_replays_same_epoch(spark, tmp_path):
         out_dir=str(tmp_path / "out"),
         checkpoint_dir=str(tmp_path / "ckpt"),
         hostname="agent-1",
-        watermark=None,
         clickhouse=CH.ClickHouseSinkConfig(
             url="jdbc:clickhouse://ch:8123/yamon", executor=flaky
         ),

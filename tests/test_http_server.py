@@ -52,18 +52,40 @@ def test_submit_batch_lands_and_parses(spark, tmp_path, server):
     assert streams["events"].collect()[0].type == "deploy"
 
 
+def test_submit_batch_cr_line_breaks_keep_every_row(spark, tmp_path, server):
+    # Spark's text source also breaks lines on a lone CR: a CRLF-indented
+    # body must land as one line, or its rows silently vanish after the 204
+    from yamon_spark.sources.wire import parse_batch
+
+    body = json.dumps(BATCH, indent=1).replace("\n", "\r\n")
+    assert _post(server.port, "/v1/submit-batch", body.encode()) == 204
+    streams = parse_batch(spark.read.text(str(tmp_path / "landing" / "submit_batch")))
+    assert {t: df.count() for t, df in streams.items()} == {"metrics": 1, "logs": 1, "events": 1}
+    assert streams["metrics"].collect()[0].tags == {"dc": "a"}
+
+
+def test_push_endpoints_land_one_format(tmp_path, server):
+    body = json.dumps(BATCH).encode()
+    assert _post(server.port, "/v1/submit-batch", body) == 204
+    assert _post(server.port, "/v1/data", json.dumps({"metrics": BATCH["m"]}).encode()) == 204
+    assert _post(server.port, "/v1/webhook", body, {"Content-Type": "application/json"}) == 204
+    landing = tmp_path / "landing"
+    assert [p.name for p in landing.iterdir()] == ["submit_batch"]
+    assert len(list((landing / "submit_batch").glob("*.jsonl"))) == 3
+
+
 def test_post_data_long_form(spark, tmp_path, server):
-    from yamon_spark.sources.wire import parse_post_data
+    from yamon_spark.sources.wire import parse_batch
 
     body = {"metrics": BATCH["m"], "events": BATCH["e"]}
     assert _post(server.port, "/v1/data", json.dumps(body).encode()) == 204
-    streams = parse_post_data(spark.read.text(str(tmp_path / "landing" / "post_data")))
+    streams = parse_batch(spark.read.text(str(tmp_path / "landing" / "submit_batch")))
     assert streams["metrics"].collect()[0].name == "cpu.load"
     assert streams["events"].collect()[0].type == "deploy"
 
 
 def test_webhook_wraps_to_event(spark, tmp_path, server):
-    from yamon_spark.sources.wire import parse_post_data
+    from yamon_spark.sources.wire import parse_batch
 
     assert (
         _post(
@@ -84,7 +106,7 @@ def test_webhook_wraps_to_event(spark, tmp_path, server):
         )
         == 204
     )
-    events = parse_post_data(spark.read.text(str(tmp_path / "landing" / "post_data")))[
+    events = parse_batch(spark.read.text(str(tmp_path / "landing" / "submit_batch")))[
         "events"
     ].collect()
     assert len(events) == 2
@@ -143,7 +165,7 @@ def test_oversized_body_rejected_413(tmp_path, server):
     except urllib.error.URLError:
         status = 413  # server may cut the connection after responding
     assert status == 413
-    assert not (tmp_path / "landing" / "post_data").exists()
+    assert not (tmp_path / "landing" / "submit_batch").exists()
 
 
 def test_unknown_paths_bucket_in_stats(server):
@@ -211,7 +233,6 @@ def test_http_push_to_streaming_pipeline_end_to_end(spark, tmp_path, server):
             landing_dir=str(tmp_path / "landing" / "submit_batch"),
             out_dir=str(tmp_path / "store"),
             checkpoint_dir=str(tmp_path / "ckpt"),
-            watermark=None,  # availableNow run: emit all windows at end of input
         ),
     )
 
@@ -238,6 +259,8 @@ def test_engine_serve_composition(spark, tmp_path):
         trigger={"processingTime": "1 second"},
     )
     try:
+        # one query per detail table: metrics (with its rollups), logs, events
+        assert len(queries) == 3
         batch = {"m": [{"t": "2024-05-01T10:00:05Z", "m": "gauge", "h": "h9", "n": "mem.used", "v": 7.0}]}
         assert _post(receiver.port, "/v1/submit-batch", json.dumps(batch).encode()) == 204
         for q in queries:
@@ -453,8 +476,8 @@ def test_documents_survive_u2028_in_json_strings(tmp_path, server):
 
 def test_engine_serve_consumes_post_data_and_webhook(spark, tmp_path):
     """Every endpoint the receiver 204-acknowledges must have a consumer:
-    serve() runs a second post-format pipeline over the post_data landing,
-    so /v1/data metrics and /v1/webhook events reach the tables too."""
+    /v1/data and /v1/webhook land as submit-batch lines, so their metrics
+    and events reach the tables through serve()'s one pipeline."""
     from yamon_spark.engine import serve
 
     receiver, queries, engine = serve(

@@ -230,7 +230,7 @@ def test_rollup_single_exchange(spark):
         F.create_map(F.lit("dc"), F.lit("eu")).alias("tags"),
     )
     for mk in (gauge_rollup, counter_rollup):
-        plan = mk(metrics, watermark=None)._jdf.queryExecution().executedPlan().toString()
+        plan = mk(metrics)._jdf.queryExecution().executedPlan().toString()
         n_exchanges = plan.count("Exchange ")
         assert n_exchanges == 1, f"{mk.__name__}: expected 1 shuffle, plan has {n_exchanges}"
         # and the one shuffle is preceded by a map-side partial aggregate

@@ -153,7 +153,6 @@ def test_hot_tag_columns_push_down_and_survive_compaction(spark, tmp_path):
         landing_dir=str(landing),
         out_dir=str(tmp_path / "store"),
         checkpoint_dir=str(tmp_path / "ckpt"),
-        watermark=None,
         hot_tag_keys=("env",),
     )
     run_pipeline_once(spark, cfg)
@@ -228,7 +227,6 @@ def test_maintain_end_to_end_under_streaming_pipeline(spark, tmp_path):
         landing_dir=str(landing),
         out_dir=str(tmp_path / "store"),
         checkpoint_dir=str(tmp_path / "ckpt"),
-        watermark=None,
     )
 
     def land(i: int, date_s: str) -> None:
@@ -334,9 +332,7 @@ def test_uniq_rollup_partials_merge_exact(spark):
         )
 
     # overlapping host sets across two "micro-batches"
-    partials = uniq_rollup(batch(0, 500), watermark=None).unionByName(
-        uniq_rollup(batch(250, 800), watermark=None)
-    )
+    partials = uniq_rollup(batch(0, 500)).unionByName(uniq_rollup(batch(250, 800)))
     merged = merge_uniq(partials).collect()
     assert len(merged) == 1
     row = merged[0]

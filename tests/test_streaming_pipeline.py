@@ -40,7 +40,6 @@ def cfg(tmp_path):
         checkpoint_dir=str(tmp_path / "ckpt"),
         hostname="agent-1",
         static_tags={"dc": "eu"},
-        watermark=None,  # availableNow run: emit all windows at end of input
     )
 
 
@@ -210,7 +209,7 @@ def _files_by_date(table_dir):
     return {part.name: sorted(part.glob("*.parquet")) for part in sorted(table_dir.glob("date=*"))}
 
 
-def _run_two_layout_batches(spark, tmp_path, cfg):
+def test_block_mode_writes_one_sorted_file_per_date_per_batch(spark, tmp_path, cfg):
     # more landing files than cores: without a rebalance the text source
     # splits each batch by file, and every split writes its own file per date
     n_files = int(os.environ["SPARK_GRAFT_CPUS"]) + 2
@@ -218,35 +217,20 @@ def _run_two_layout_batches(spark, tmp_path, cfg):
         for body in _layout_bodies(run, n_files):
             _write_landing(tmp_path / "landing", [body])
         P.run_pipeline_once(spark, cfg)
-    return tmp_path / "out"
-
-
-def _assert_one_sorted_file_per_date_per_batch(out, tables, batches=2):
-    for table in tables:
+    out = tmp_path / "out"
+    for table in ("metrics", "logs", "events"):
         by_date = _files_by_date(out / table)
         assert sorted(by_date) == ["date=2024-05-01", "date=2024-05-02"], table
         for date, files in by_date.items():
-            assert len(files) == batches, (table, date, [f.name for f in files])
+            assert len(files) == 2, (table, date, [f.name for f in files])
             keys = [*P.SORT_KEYS[table], "when"]
             for f in files:
                 rows = pq.read_table(f, columns=keys).to_pylist()
                 ordered = [tuple(r[k] for k in keys) for r in rows]
                 assert ordered == sorted(ordered), (table, f.name)
-
-
-def test_block_mode_writes_one_sorted_file_per_date_per_batch(spark, tmp_path, cfg):
-    out = _run_two_layout_batches(spark, tmp_path, cfg)
-    _assert_one_sorted_file_per_date_per_batch(out, ("metrics", "logs", "events"))
     # the fused writer persists the batch; a rebalance under that cache
     # would escape AQE's coalescing and write one file per shuffle partition
     for table in ("metrics_gauge_lts", "metrics_counter_lts"):
         by_date = _files_by_date(out / table)
         assert sorted(by_date) == ["date=2024-05-01", "date=2024-05-02"], table
         assert all(len(files) <= 2 for files in by_date.values()), (table, by_date)
-
-
-def test_exact_mode_detail_writes_one_sorted_file_per_date_per_batch(spark, tmp_path, cfg):
-    cfg.rollup_mode = "exact"
-    cfg.watermark = P.WATERMARK
-    out = _run_two_layout_batches(spark, tmp_path, cfg)
-    _assert_one_sorted_file_per_date_per_batch(out, ("metrics", "logs", "events"))

@@ -6,8 +6,10 @@ yamon-debug inspection with asserted goldens."""
 from __future__ import annotations
 
 import datetime as dt
+import urllib.request
 
 from pyspark.sql import functions as F
+from pyspark.sql.types import ArrayType, StructField, StructType
 
 from yamon_spark.sources import wire
 
@@ -52,10 +54,76 @@ def test_parse_batch_null_sections_and_tags(spark):
     assert out["logs"].count() == 0 and out["events"].count() == 0
 
 
-def test_parse_post_data_long_keys(spark):
-    body = '{"metrics":[{"t":"2024-05-01T00:00:00Z","m":"gauge","n":"x","v":1}],"events":[],"logs":[]}'
-    out = wire.parse_post_data(_lines(spark, body))
-    assert out["metrics"].count() == 1
+# POST /v1/data's long-form keys (agent/http.go:36-40) over the same
+# short-key records: the reference the receiver's re-keying must match
+_LONG_FORM = StructType(
+    [
+        StructField("metrics", ArrayType(wire.WIRE_METRIC)),
+        StructField("events", ArrayType(wire.WIRE_EVENT)),
+        StructField("logs", ArrayType(wire.WIRE_LOG)),
+    ]
+)
+
+_DATA_BODIES = [
+    '{"metrics":[{"t":"2024-05-01T00:00:00Z","m":"gauge","n":"x","v":1}],"events":[],"logs":[]}',
+    # null elements, empty arrays, {} records and bodies
+    '{"metrics":[null,{"t":"2024-05-01T10:00:00Z","m":"counter","n":"b","v":2}],"events":[],"logs":[null]}',
+    '{"logs":[{}],"events":[{"t":"2024-05-01T10:00:02Z","e":"deploy"},null]}',
+    "{}",
+    # extra keys, short keys (a long-form body never used them), short records
+    '{"metrics":[{"n":"c","v":3,"x":[1]}],"m":[{"n":"short","v":9}],"e":[{}],"extra":{"logs":[{}]}}',
+    # a non-list section before and after a good one
+    '{"logs":[{"s":"before"}],"metrics":{"n":"d","v":4},"events":[{"e":"after"}]}',
+    # out-of-range and string-typed values, numbers in string fields
+    '{"metrics":[{"n":"e","v":1e400},{"n":"f","v":"1.5"},{"n":"g","v":-1e400,"h":1.50}],'
+    '"events":[{"e":"num","d":{"x":1.0e-7,"y":[true,null]},"g":{"k":12345678901234567890}}]}',
+    # duplicate keys: the last one wins
+    '{"metrics":[{"n":"first","v":1}],"metrics":[{"n":"second","v":2,"n":"third"}]}',
+    # non-ASCII and lone-surrogate strings
+    '{"events":[{"e":"déploiement","d":"\\ud800 ok","g":{"ключ":"值"}}],'
+    '"logs":[{"s":"☃","d":"\\udfff","h":"h\\u00e9"}]}',
+]
+
+
+def _long_form_rows(lines):
+    """The long-form parse: from_json with the long-form keys, then
+    parse_batch's row projection."""
+    b = lines.select(F.from_json("value", _LONG_FORM).alias("b"))
+    when = F.col("r.t").cast("timestamp")
+    host = F.coalesce("r.h", F.lit(""))
+    data = F.coalesce("r.d", F.lit(""))
+    tags = F.coalesce("r.g", F.create_map().cast("map<string,string>"))
+    cols = {
+        "metrics": [when, "r.m", host, "r.n", "r.v", tags],
+        "logs": [when, host, "r.s", F.coalesce("r.l", F.lit("")), data, tags],
+        "events": [when, host, "r.e", data, tags],
+    }
+    return {t: b.select(F.explode(f"b.{t}").alias("r")).select(*c) for t, c in cols.items()}
+
+
+def test_data_endpoint_lands_rows_of_the_long_form_parse(spark, tmp_path):
+    """/v1/data re-keys its body to the submit-batch keys before landing;
+    parse_batch over the landed lines yields exactly the rows a long-form
+    from_json yields over the raw bodies."""
+    from yamon_spark.sources.http_server import SUBMIT_BATCH_DIR, IngestHTTPServer
+
+    srv = IngestHTTPServer(str(tmp_path)).start()
+    try:
+        for body in _DATA_BODIES:
+            req = urllib.request.Request(
+                f"http://127.0.0.1:{srv.port}/v1/data", data=body.encode(), method="POST"
+            )
+            with urllib.request.urlopen(req) as resp:
+                assert resp.status == 204, body
+    finally:
+        srv.stop()
+
+    def rows(streams):
+        return {t: sorted(repr(tuple(r)) for r in df.collect()) for t, df in streams.items()}
+
+    got = rows(wire.parse_batch(spark.read.text(str(tmp_path / SUBMIT_BATCH_DIR))))
+    assert got == rows(_long_form_rows(_lines(spark, *_DATA_BODIES)))
+    assert all(got.values()), got
 
 
 def test_parse_script_result_singular_plural_and_time(spark):
@@ -165,7 +233,6 @@ def test_malformed_lines_reject_and_dont_poison(spark):
 
 _PARSERS = {
     "batch": wire.parse_batch,
-    "post": wire.parse_post_data,
     "script": wire.parse_script_result,
 }
 
@@ -177,11 +244,6 @@ _EDGE_BODIES = {
         '{"e":[{}],"m":null,"l":null}',
         "{}",
         "not json",
-    ],
-    "post": [
-        '{"metrics":[null,{"t":"2024-05-01T10:00:00Z","m":"counter","n":"b","v":2}],"events":[],"logs":[null]}',
-        '{"logs":[{}],"events":[{"t":"2024-05-01T10:00:02Z","e":"deploy"},null]}',
-        "{}",
     ],
     "script": [
         '{"metrics":[null,{"type":"gauge","name":"a","value":1,"time":1714558800}],"logs":[],"event":null}',
@@ -214,4 +276,4 @@ def test_parse_rows_match_explode(spark, monkeypatch):
         assert got[fmt] == rows(fmt), fmt
         assert all(got[fmt].values()), (fmt, got[fmt])  # every stream has rows
     # null array elements survive as rows, as under explode
-    assert len(got["batch"]["events"]) == 2 and len(got["post"]["logs"]) == 2
+    assert len(got["batch"]["events"]) == 2 and len(got["batch"]["logs"]) == 2

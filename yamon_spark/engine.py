@@ -268,8 +268,6 @@ def serve(
     from yamon_spark.sources.http_server import SUBMIT_BATCH_DIR, IngestHTTPServer
     from yamon_spark.streaming.pipeline import PipelineConfig, start_pipeline, stream_landing
 
-    from yamon_spark.sources.http_server import POST_DATA_DIR
-
     receiver = IngestHTTPServer(landing_dir, keys=keys, host=host, port=port).start()
     queries: list = []
     try:
@@ -280,24 +278,12 @@ def serve(
             trigger=trigger or {"processingTime": "5 seconds"},
             hot_tag_keys=hot_tag_keys,
         )
-        # ONE pipeline per wire format the receiver lands: submit-batch
-        # (forward server) AND long-form pushes (/v1/data + /v1/webhook,
-        # which land as post_data) — every 204-acknowledged body has a
-        # consumer. Separate checkpoint roots; both append to the same
-        # detail/rollup tables (block-mode partials merge at read).
-        post_cfg = PipelineConfig(
-            landing_dir=os.path.join(landing_dir, POST_DATA_DIR),
-            out_dir=data_dir,
-            checkpoint_dir=os.path.join(checkpoint_dir, "post"),
-            fmt="post",
-            trigger=trigger or {"processingTime": "5 seconds"},
-            hot_tag_keys=hot_tag_keys,
-        )
-        # the file source needs the directories to exist before the streams start
+        # the receiver lands every push endpoint (/v1/submit-batch,
+        # /v1/data, /v1/webhook) as submit-batch lines in this one dir,
+        # so one pipeline consumes every 204-acknowledged body; the file
+        # source needs the directory to exist before the streams start
         os.makedirs(cfg.landing_dir, exist_ok=True)
-        os.makedirs(post_cfg.landing_dir, exist_ok=True)
         queries = start_pipeline(spark, cfg)
-        queries += start_pipeline(spark, post_cfg)
         if deadman_horizon_s is not None:
             from yamon_spark.streaming.alerts import deadman_alerts
 

@@ -1,4 +1,4 @@
-"""As-of join — generic 'latest prior right-row for each left-row' operator.
+"""As-of join — 'latest prior right-row for each left-row' over the events table.
 
 Spark has no native ASOF JOIN; the scalable formulation is union both
 sides, window by key ordered by (time, id), and carry the last non-null
@@ -15,44 +15,8 @@ counter semantics common/metric.go:9-14): "value at / just before t".
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
-
-
-def asof_join(
-    left: DataFrame,
-    right: DataFrame,
-    key: str,
-    time_col: str,
-    id_col: str,
-    carry_col: str,
-    out_alias: str = "asof_value",
-) -> DataFrame:
-    """Generic as-of: the most recent strictly-prior ``carry_col`` from
-    ``right`` sharing ``key``; 'prior' means strictly earlier in the
-    total order (time_col, id_col, left-before-right). The third
-    tiebreak matters when the two tables' id spaces overlap: without it
-    a right row tied on (time, id) with a left row lands in or out of
-    the preceding frame by arbitrary partition sort order — the same
-    query could return different answers across runs/task retries.
-    Left rows sort FIRST on ties, so an exactly-simultaneous right row
-    is excluded (the 'strictly earlier' contract).
-
-    Both inputs must share the key/time/id column names. Output carries
-    (key, time_col, id_col, out_alias) ONLY — other left columns are
-    projected away (re-join on the id to recover them); the events
-    specializations below keep their full declared shapes.
-    """
-    lhs = left.select(key, time_col, id_col, F.lit(None).cast(right.schema[carry_col].dataType).alias("_carry"), F.lit(1).alias("_is_left"))
-    rhs = right.select(key, time_col, id_col, F.col(carry_col).alias("_carry"), F.lit(0).alias("_is_left"))
-    u = lhs.unionByName(rhs)
-    w = (
-        Window.partitionBy(key)
-        .orderBy(time_col, id_col, F.desc("_is_left"))
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    annotated = u.withColumn(out_alias, F.last("_carry", ignorenulls=True).over(w))
-    return annotated.where(F.col("_is_left") == 1).drop("_carry", "_is_left")
 
 
 def asof_join_events(events: DataFrame, left_type: str, right_type: str) -> DataFrame:

@@ -8,17 +8,20 @@ agent/http.go:16-95):
   optional shared-key auth (``Authorization: <name>:<key>``,
   forward_server.go:37-57).
 - ``POST /v1/data`` — the agent's long-form metrics/events/logs push
-  (agent/http.go:42-70).
+  (agent/http.go:42-70), re-keyed to the submit-batch ``m``/``l``/``e``
+  keys before landing.
 - ``POST /v1/webhook`` — arbitrary webhook wrap into a
-  ``yamon-agent.webhook`` event (agent/http.go:73-95).
+  ``yamon-agent.webhook`` event (agent/http.go:73-95), landed as a
+  one-event submit-batch body.
 - ``GET /metrics`` — self-metrics in Prometheus text exposition
   (both servers mount promhttp.Handler()).
 
 Architecture: the receiver does NO Spark work. Each accepted body is
 published atomically (tmp + rename, the landing-zone contract shared
-with exec_source._publish) into a per-endpoint landing directory; the
-streaming pipeline picks files up via ``readStream.text`` and the wire
-parsers (``parse_batch`` / ``parse_post_data``). That keeps acquisition
+with exec_source._publish) into a landing directory. All three push
+endpoints land ONE format, submit-batch bodies in ``submit_batch/``, so
+one streaming pipeline (``readStream.text`` + ``parse_batch``) consumes
+every acknowledged body. That keeps acquisition
 at the edge and lets ingestion scale by adding receivers, not executors
 — on a 1000-executor cluster the receivers write to object storage and
 the file stream source lists new objects, so the intake path has no
@@ -41,12 +44,13 @@ from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
 from urllib.parse import parse_qs
 
 SUBMIT_BATCH_DIR = "submit_batch"
+# POST /v1/data's long-form top-level keys (agent/http.go:36-40) ->
+# the submit-batch keys (common/batch.go:3-7) every landed line uses
+_LONG_KEYS = {"metrics": "m", "logs": "l", "events": "e"}
 # Intake endpoints face untrusted clients: cap accepted bodies so a single
 # request cannot balloon receiver memory (reference relies on chi defaults;
 # http.server has no built-in limit).
 MAX_BODY_BYTES = 32 * 1024 * 1024
-POST_DATA_DIR = "post_data"
-WEBHOOK_DIR = "post_data"  # webhooks are landed as long-form event pushes
 DOCUMENTS_DIR = "documents"
 REJECTS_DIR = "rejects"
 
@@ -141,9 +145,9 @@ class IngestHTTPServer:
                     if not outer._authorized(self.headers.get("Authorization", "")):
                         self._respond(path, 401)
                         return
-                    self._land_json(body, SUBMIT_BATCH_DIR, "batch")
+                    self._land_json(body, "batch")
                 elif path == "/v1/data":
-                    self._land_json(body, POST_DATA_DIR, "data")
+                    self._land_json(body, "data", long_form=True)
                 elif path == "/v1/documents":
                     # corpus intake: one JSON document per line (the
                     # streaming corpus pipeline's wire format). Each line
@@ -159,7 +163,9 @@ class IngestHTTPServer:
                             continue
                         try:
                             json.loads(line)
-                            good.append(line.replace("\n", " "))
+                            # a lone CR breaks the line for Spark's text
+                            # source; it is whitespace (see _land_json)
+                            good.append(line.replace("\r", " "))
                         except ValueError:
                             bad.append(line)
                     if bad:
@@ -177,12 +183,12 @@ class IngestHTTPServer:
                         self.headers.get("Content-Type", ""),
                         self.client_address[0],
                     )
-                    _publish_line(os.path.join(outer.landing_root, WEBHOOK_DIR), line, "webhook")
+                    _publish_line(os.path.join(outer.landing_root, SUBMIT_BATCH_DIR), line, "webhook")
                     self._respond(path, 204)
                 else:
                     self._respond("other", 404)
 
-            def _land_json(self, body: bytes, subdir: str, prefix: str) -> None:
+            def _land_json(self, body: bytes, prefix: str, long_form: bool = False) -> None:
                 # stats label is the NORMALIZED path: labeling with raw
                 # self.path would mint a new (endpoint, status) Counter key
                 # per distinct query string — unbounded metric cardinality
@@ -191,19 +197,26 @@ class IngestHTTPServer:
                 path = self.path.split("?", 1)[0]
                 text = body.decode("utf-8", errors="replace")
                 try:
+                    doc = json.loads(text)
                     # a scalar/array parses but can never produce rows in
                     # the struct-typed wire parsers — reject like the
                     # reference (whose json.Unmarshal into the Batch
                     # struct fails) instead of 204-ing into a void
-                    if not isinstance(json.loads(text), dict):
+                    if not isinstance(doc, dict):
                         raise ValueError("top-level JSON object required")
                 except ValueError:
                     _publish_line(os.path.join(outer.landing_root, REJECTS_DIR), text, "reject")
                     self._respond(path, 400)
                     return
-                _publish_line(
-                    os.path.join(outer.landing_root, subdir), text.replace("\n", " "), prefix
-                )
+                if long_form:
+                    # only the three long-form keys survive: the long-form
+                    # parse never read any other key, short ones included
+                    text = json.dumps({s: doc[k] for k, s in _LONG_KEYS.items() if k in doc})
+                # Spark's text source breaks lines on LF, CR and CRLF;
+                # json.loads rejects raw control characters inside
+                # strings, so any raw LF/CR here is whitespace
+                line = text.replace("\n", " ").replace("\r", " ")
+                _publish_line(os.path.join(outer.landing_root, SUBMIT_BATCH_DIR), line, prefix)
                 self._respond(path, 204)
 
         self._server = ThreadingHTTPServer((host, port), Handler)
@@ -231,11 +244,11 @@ class IngestHTTPServer:
         )
 
     def _webhook_line(self, body: bytes, content_type: str, remote_addr: str) -> str:
-        """Wrap a webhook request as one long-form event push line
-        (agent/http.go:73-95 semantics): form values that parse as JSON
-        inline, others stay strings; remote-addr + content-type become
-        tags. The landed line is a valid POST /v1/data body, so the
-        pipeline reuses parse_post_data with no webhook-specific parser."""
+        """Wrap a webhook request as one event (agent/http.go:73-95
+        semantics): form values that parse as JSON inline, others stay
+        strings; remote-addr + content-type become tags. The line is a
+        one-event submit-batch body, the single landing format, so the
+        pipeline needs no webhook-specific parser."""
         data: dict = {}
         text = body.decode("utf-8", errors="replace")
         if content_type.startswith("application/x-www-form-urlencoded"):
@@ -255,7 +268,7 @@ class IngestHTTPServer:
             "d": json.dumps(data, sort_keys=True),
             "g": {"remote-addr": remote_addr, "content-type": content_type},
         }
-        return json.dumps({"events": [event]})
+        return json.dumps({"e": [event]})
 
     def start(self) -> "IngestHTTPServer":
         self._thread = threading.Thread(target=self._server.serve_forever, daemon=True)

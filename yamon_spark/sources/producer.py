@@ -24,7 +24,7 @@ import json
 import time
 from dataclasses import dataclass
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from yamon_spark.sources.collectors import COLLECTOR_PARSERS
@@ -103,12 +103,3 @@ def parse_snapshots(lines: DataFrame, col: str = "value") -> DataFrame:
     for o in outs[1:]:
         df = df.unionByName(o)
     return df.where(F.col("value").isNotNull())
-
-
-def run_producer(spark: SparkSession, landing_dir: str, ticks: int = 1, interval_s: float = 0.0) -> None:
-    """Drive N collection ticks into the landing zone (the test/demo
-    loop; production runs this from the agent host's scheduler)."""
-    for i in range(ticks):
-        snapshot_once(landing_dir)
-        if interval_s and i + 1 < ticks:
-            time.sleep(interval_s)

@@ -13,7 +13,8 @@ against the Go struct tags):
                    metric ``t/m/h/n/v/g`` (common/metric.go:17-22),
                    log ``t/h/s/l/d/g`` (common/log.go:6-11),
                    event ``t/h/e/d/g`` (common/event.go:9-13)
-- PostDataRequest  reference agent/http.go:36-40 (long-form keys)
+                   (POST /v1/data's long-form keys are re-keyed to these
+                   by the HTTP receiver before landing)
 - ScriptResult     reference script.go:19-86 (singular+plural fan-out,
                    unix-seconds time override)
 - journald entry   reference journal/client.go:44-75 (field routing)
@@ -78,15 +79,6 @@ WIRE_BATCH = StructType(
         StructField("m", ArrayType(WIRE_METRIC)),
         StructField("l", ArrayType(WIRE_LOG)),
         StructField("e", ArrayType(WIRE_EVENT)),
-    ]
-)
-
-# long-form structs (agent HTTP push API)
-HTTP_BATCH = StructType(
-    [
-        StructField("metrics", ArrayType(WIRE_METRIC)),
-        StructField("events", ArrayType(WIRE_EVENT)),
-        StructField("logs", ArrayType(WIRE_LOG)),
     ]
 )
 
@@ -155,8 +147,11 @@ def _elements(df: DataFrame, arr: Column | str, alias: str, *keep: str) -> DataF
     )
 
 
-def _streams_from_struct(parsed: DataFrame, m: str, lg: str, e: str) -> dict[str, DataFrame]:
-    metrics = _elements(parsed, m, "r").select(
+def parse_batch(lines: DataFrame, col: str = "value") -> dict[str, DataFrame]:
+    """One submit-batch JSON body per row -> the three typed streams
+    (the forward server's decode, forward_server.go:58-78)."""
+    parsed = lines.select(F.from_json(F.col(col), WIRE_BATCH).alias("b")).select("b.*")
+    metrics = _elements(parsed, "m", "r").select(
         _ts(F.col("r.t")).alias("when"),
         F.col("r.m").alias("type"),
         F.coalesce(F.col("r.h"), F.lit("")).alias("host"),
@@ -164,7 +159,7 @@ def _streams_from_struct(parsed: DataFrame, m: str, lg: str, e: str) -> dict[str
         F.col("r.v").alias("value"),
         _tags(F.col("r.g")).alias("tags"),
     )
-    logs = _elements(parsed, lg, "r").select(
+    logs = _elements(parsed, "l", "r").select(
         _ts(F.col("r.t")).alias("when"),
         F.coalesce(F.col("r.h"), F.lit("")).alias("host"),
         F.col("r.s").alias("service"),
@@ -172,7 +167,7 @@ def _streams_from_struct(parsed: DataFrame, m: str, lg: str, e: str) -> dict[str
         F.coalesce(F.col("r.d"), F.lit("")).alias("data"),
         _tags(F.col("r.g")).alias("tags"),
     )
-    events = _elements(parsed, e, "r").select(
+    events = _elements(parsed, "e", "r").select(
         _ts(F.col("r.t")).alias("when"),
         F.coalesce(F.col("r.h"), F.lit("")).alias("host"),
         F.col("r.e").alias("type"),
@@ -180,20 +175,6 @@ def _streams_from_struct(parsed: DataFrame, m: str, lg: str, e: str) -> dict[str
         _tags(F.col("r.g")).alias("tags"),
     )
     return {"metrics": metrics, "logs": logs, "events": events}
-
-
-def parse_batch(lines: DataFrame, col: str = "value") -> dict[str, DataFrame]:
-    """One submit-batch JSON body per row -> the three typed streams
-    (the forward server's decode, forward_server.go:58-78)."""
-    parsed = lines.select(F.from_json(F.col(col), WIRE_BATCH).alias("b")).select("b.*")
-    return _streams_from_struct(parsed, "m", "l", "e")
-
-
-def parse_post_data(lines: DataFrame, col: str = "value") -> dict[str, DataFrame]:
-    """One POST /v1/data body per row (agent/http.go:42-70); long-form
-    keys, records embed the same short-key structs."""
-    parsed = lines.select(F.from_json(F.col(col), HTTP_BATCH).alias("b")).select("b.*")
-    return _streams_from_struct(parsed, "metrics", "logs", "events")
 
 
 def parse_script_result(lines: DataFrame, col: str = "value") -> dict[str, DataFrame]:

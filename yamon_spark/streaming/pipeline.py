@@ -10,7 +10,7 @@ re-expressed as Spark streams over a file landing zone):
             116-117 — for row-group min/max skipping)
         --> rollup MVs:     metrics_gauge_lts/  (1-min tumbling AVG)
                             metrics_counter_lts/ (1-min tumbling SUM)
-            with event-time watermark, grouped by host,name,tags
+            aggregated per micro-batch, grouped by host,name,tags
             (res/schema.sql:39-50,71-82)
 
 Semantics upgrades over the reference (SURVEY §7.4 — intended, not
@@ -31,8 +31,8 @@ micro-batch by cores, so without it every split writes its own file per
 date and the file count follows the core count, not the bytes; with it
 a batch writes one file per date (the ClickHouse insert's one part per
 partition) and splits a date only above
-``spark.sql.adaptive.advisoryPartitionSizeInBytes``. State size for the
-rollups is bounded by watermark horizon x active series, and the date
+``spark.sql.adaptive.advisoryPartitionSizeInBytes``. The rollups keep no
+streaming state (each micro-batch aggregates on its own), and the date
 partitioning makes retention (D4) a pure partition drop.
 """
 
@@ -56,8 +56,6 @@ SORT_KEYS = {
     "events": ("type", "host"),
 }
 
-WATERMARK = "10 minutes"
-
 
 def canon_tags(tags: Column) -> Column:
     """Spark can't group by MapType; canonicalize to key-sorted
@@ -66,31 +64,27 @@ def canon_tags(tags: Column) -> Column:
     return F.array_sort(F.map_entries(tags))
 
 
-def gauge_rollup(metrics: DataFrame, watermark: str | None = WATERMARK) -> DataFrame:
+def gauge_rollup(metrics: DataFrame) -> DataFrame:
     """1-minute tumbling AVG over gauges, grouped by the full dimension
     set — the metrics_gauge_lts MV (res/schema.sql:39-50)."""
-    return _rollup(metrics, "gauge", F.avg("value"), watermark)
+    return _rollup(metrics, "gauge", F.avg("value"))
 
 
-def counter_rollup(metrics: DataFrame, watermark: str | None = WATERMARK) -> DataFrame:
+def counter_rollup(metrics: DataFrame) -> DataFrame:
     """1-minute tumbling SUM over counters — the metrics_counter_lts MV
     (res/schema.sql:71-82)."""
-    return _rollup(metrics, "counter", F.sum("value"), watermark)
+    return _rollup(metrics, "counter", F.sum("value"))
 
 
-def uniq_rollup(metrics: DataFrame, watermark: str | None = WATERMARK) -> DataFrame:
+def uniq_rollup(metrics: DataFrame) -> DataFrame:
     """uniqState MV: per 1-minute window per metric name, an HLL sketch
     of distinct hosts (binary Datasketches partial). Partials from
     different micro-batches / windows MERGE at read time via
     ``merge_uniq`` — ClickHouse's uniqState→uniqMerge cascade, the only
-    way distinct counts survive pre-aggregation. Works in block mode
-    (per-batch partials append, no streaming state) exactly like the
-    avg/sum rollups."""
-    src = metrics
-    if watermark and src.isStreaming:
-        src = src.withWatermark("when", watermark)
+    way distinct counts survive pre-aggregation. Per-batch partials
+    append with no streaming state, exactly like the avg/sum rollups."""
     return (
-        src.groupBy(F.window("when", "1 minute").alias("w"), "name")
+        metrics.groupBy(F.window("when", "1 minute").alias("w"), "name")
         .agg(F.hll_sketch_agg("host").alias("hosts_sketch"), F.count(F.lit(1)).alias("n_rows"))
         .select(F.col("w.start").alias("when"), "name", "hosts_sketch", "n_rows")
     )
@@ -110,12 +104,10 @@ def merge_uniq(rollup: DataFrame, bucket: Column | None = None) -> DataFrame:
     )
 
 
-def _rollup(metrics: DataFrame, mtype: str, agg: Column, watermark: str | None) -> DataFrame:
-    src = metrics.where(F.col("type") == mtype)
-    if watermark and src.isStreaming:
-        src = src.withWatermark("when", watermark)
+def _rollup(metrics: DataFrame, mtype: str, agg: Column) -> DataFrame:
     return (
-        src.groupBy(
+        metrics.where(F.col("type") == mtype)
+        .groupBy(
             F.window("when", "1 minute").alias("w"),
             "host",
             "name",
@@ -136,8 +128,9 @@ def stream_landing(
     spark: SparkSession, landing_dir: str, fmt: str = "batch"
 ) -> dict[str, DataFrame]:
     """readStream over a JSON-lines landing zone (the file stand-in for
-    the HTTP hop, SURVEY §2.1 S23). fmt: 'batch' (submit-batch bodies),
-    'post' (PostDataRequest), 'script' (ScriptResult), 'journald'."""
+    the HTTP hop, SURVEY §2.1 S23). fmt: 'batch' (submit-batch bodies,
+    the one format the HTTP receiver lands), 'script' (ScriptResult),
+    'journald'."""
     lines = spark.readStream.text(landing_dir)
     return _parse(lines, fmt)
 
@@ -150,8 +143,6 @@ def read_landing(spark: SparkSession, landing_dir: str, fmt: str = "batch") -> d
 def _parse(lines: DataFrame, fmt: str) -> dict[str, DataFrame]:
     if fmt == "batch":
         return wire.parse_batch(lines)
-    if fmt == "post":
-        return wire.parse_post_data(lines)
     if fmt == "script":
         return wire.parse_script_result(lines)
     if fmt == "journald":
@@ -168,15 +159,6 @@ class PipelineConfig:
     hostname: str = ""
     static_tags: dict[str, str] = field(default_factory=dict)
     trigger: dict = field(default_factory=lambda: {"availableNow": True})
-    watermark: str | None = WATERMARK
-    # 'block': per-micro-batch partial rollups, stateless — EXACT parity
-    #   with the reference MVs, which aggregate each ClickHouse insert
-    #   block independently into a plain-MergeTree target (possibly
-    #   several rows per minute; res/schema.sql:30,49 ENGINE=MergeTree).
-    # 'exact': watermarked streaming aggregation, one final row per
-    #   window — the semantic upgrade when downstream wants closed
-    #   windows; needs a watermark and keeps bounded state.
-    rollup_mode: str = "block"
     # optional uniqState MV: HLL sketch partials of distinct hosts per
     # (window, name) appended per micro-batch to metrics_uniq_lts;
     # merge at read time with merge_uniq. Off by default (new sink =
@@ -226,7 +208,7 @@ def _write_detail_batch(batch: DataFrame, table: str, cfg: PipelineConfig) -> No
 
 
 def _detail_writer(df: DataFrame, table: str, cfg: PipelineConfig) -> StreamingQuery:
-    """Standalone detail sink (logs/events, and metrics in exact mode)."""
+    """Standalone detail sink (logs and events)."""
 
     def write_epoch(batch: DataFrame, _epoch: int) -> None:
         _write_detail_batch(batch, table, cfg)
@@ -251,30 +233,27 @@ def _fused_metrics_writer(metrics: DataFrame, cfg: PipelineConfig) -> StreamingQ
     dominates, so the fused form cuts ~3x of the parse work (measured
     ~1.6x ingest throughput at the bench's 2M-row block) and gives the
     sinks shared fate + one checkpoint, i.e. block-atomic MV parity
-    instead of three independently-progressing cursors."""
+    instead of three independently-progressing cursors.
+
+    Each block aggregates on its own into plain appends, possibly
+    several rows per minute across blocks — EXACT parity with the
+    reference MVs, which aggregate each ClickHouse insert block
+    independently into a plain-MergeTree target (res/schema.sql:30,49)."""
+    rollups = {"metrics_gauge_lts": gauge_rollup, "metrics_counter_lts": counter_rollup}
+    if cfg.uniq_mv:
+        rollups["metrics_uniq_lts"] = uniq_rollup
 
     def write_epoch(batch: DataFrame, _epoch: int) -> None:
         batch.persist()
         try:
             _write_detail_batch(batch, "metrics", cfg)
-            for table, mtype, agg in (
-                ("metrics_gauge_lts", "gauge", F.avg("value")),
-                ("metrics_counter_lts", "counter", F.sum("value")),
-            ):
+            for table, rollup in rollups.items():
                 (
-                    _rollup(batch, mtype, agg, watermark=None)
+                    rollup(batch)
                     .withColumn("date", F.to_date("when"))
                     .write.mode("append")
                     .partitionBy("date")
                     .parquet(os.path.join(cfg.out_dir, table))
-                )
-            if cfg.uniq_mv:
-                (
-                    uniq_rollup(batch, watermark=None)
-                    .withColumn("date", F.to_date("when"))
-                    .write.mode("append")
-                    .partitionBy("date")
-                    .parquet(os.path.join(cfg.out_dir, "metrics_uniq_lts"))
                 )
         finally:
             batch.unpersist()
@@ -282,20 +261,6 @@ def _fused_metrics_writer(metrics: DataFrame, cfg: PipelineConfig) -> StreamingQ
     return (
         metrics.writeStream.foreachBatch(write_epoch)
         .option("checkpointLocation", os.path.join(cfg.checkpoint_dir, "metrics"))
-        .trigger(**cfg.trigger)
-        .start()
-    )
-
-
-def _rollup_writer_exact(rollup: DataFrame, table: str, cfg: PipelineConfig) -> StreamingQuery:
-    path = os.path.join(cfg.out_dir, table)
-    return (
-        rollup.withColumn("date", F.to_date("when"))
-        .writeStream.format("parquet")
-        .outputMode("append")  # windows emit once the watermark passes
-        .option("path", path)
-        .option("checkpointLocation", os.path.join(cfg.checkpoint_dir, table))
-        .partitionBy("date")
         .trigger(**cfg.trigger)
         .start()
     )
@@ -314,19 +279,9 @@ def start_pipeline(spark: SparkSession, cfg: PipelineConfig) -> list[StreamingQu
         df = stamp(df)
         if table == "metrics":
             df = metric_type_gate(df)
-            if cfg.rollup_mode == "block":
-                # fused cascade: detail + block MVs (+uniq) from ONE
-                # parsed+cached batch — the ClickHouse insert-block shape
-                queries.append(_fused_metrics_writer(df, cfg))
-            else:
-                # exact mode: watermarked streaming aggregations need
-                # their own queries (stateful operators can't run inside
-                # a foreachBatch), so each sink re-parses independently
-                queries.append(_rollup_writer_exact(gauge_rollup(df, cfg.watermark), "metrics_gauge_lts", cfg))
-                queries.append(_rollup_writer_exact(counter_rollup(df, cfg.watermark), "metrics_counter_lts", cfg))
-                if cfg.uniq_mv:
-                    queries.append(_uniq_writer_block(df, "metrics_uniq_lts", cfg))
-                queries.append(_detail_writer(df, table, cfg))
+            # fused cascade: detail + block MVs (+uniq) from ONE
+            # parsed+cached batch — the ClickHouse insert-block shape
+            queries.append(_fused_metrics_writer(df, cfg))
         else:
             queries.append(_detail_writer(df, table, cfg))
         if cfg.clickhouse is not None:
@@ -336,29 +291,6 @@ def start_pipeline(spark: SparkSession, cfg: PipelineConfig) -> list[StreamingQu
                 clickhouse_sink(df, table, cfg.clickhouse, cfg.checkpoint_dir, cfg.trigger)
             )
     return queries
-
-
-def _uniq_writer_block(metrics: DataFrame, table: str, cfg: PipelineConfig) -> StreamingQuery:
-    """Per-block uniqState MV: each micro-batch appends its own HLL
-    sketch partials (same stateless cascade as the avg/sum block
-    rollups); merge_uniq combines partials at read time."""
-    path = os.path.join(cfg.out_dir, table)
-
-    def write_epoch(batch: DataFrame, _epoch: int) -> None:
-        (
-            uniq_rollup(batch, watermark=None)
-            .withColumn("date", F.to_date("when"))
-            .write.mode("append")
-            .partitionBy("date")
-            .parquet(path)
-        )
-
-    return (
-        metrics.writeStream.foreachBatch(write_epoch)
-        .option("checkpointLocation", os.path.join(cfg.checkpoint_dir, table))
-        .trigger(**cfg.trigger)
-        .start()
-    )
 
 
 def run_pipeline_once(spark: SparkSession, cfg: PipelineConfig) -> None:
