@@ -334,242 +334,150 @@ def main() -> None:
 
 # stdout-line name compression. Deterministic, documented, and bijective
 # over the registry (asserted at emit time); bench_out.json always carries
-# the full names, so the mapping only needs to be stable round-to-round:
+# the full names, so the mapping only needs to be stable round-to-round
+# (tests/test_bench_contract.py pins a digest of it):
 #   qNN_*         -> NN           (bare digits; unique numeric prefixes)
-#   multimodal_*  -> mm_*         dedup_*  -> dd_*      text_* -> tx_*
-#   sample_*      -> sp_*         embed_*  -> em_*      corpus_* -> co_*
-#   domain_mix[_*]-> dmix[_*]
-# plus a handful of one-off long names shortened whole.
+#   sim_* -> sm_*   multimodal_* -> mm_*   dedup_* -> dd_*   text_* -> tx_*
+#   sample_* -> sp_*   embed_* -> em_*   corpus_* -> co_*
+# plus the whole-name mnemonics below, kept to 2-5 chars so every query
+# fits the stdout cap (1950, under the driver's 2000-char tail capture).
 _SHORT_WHOLE = {
-    "contamination_ngram": "contam",
-    "vocab_coverage": "vocab",
-    "hybrid_rank_rrf": "rrf",
-    "pack_sequences": "pack",
-    "pack_boundary_report": "packb",
-    "domain_mix": "dmix",
-    "domain_mix_temperature": "dmixt",
-    "sim_ivf_recall": "ivfr",
-    "sim_ivf_pareto": "ivfp",
-    "sim_pq_recall": "pqr",
-    "multimodal_bmp_roundtrip": "mm_bmp",
-    "multimodal_avi_roundtrip": "mm_avi",
-    "multimodal_wav_roundtrip": "mm_wav",
-    "multimodal_adpcm_roundtrip": "mm_adpcm",
-    "sim_near_dup_pairs": "ndp",
-    "text_quality_filter": "qual",
-    "ann_range_search": "annr",
-    "dedup_minhash_lsh": "mhlsh",
-    "dedup_threshold_sweep": "dtsw",
-    "text_unigram_logprob": "uni",
-    "text_zipf_slope": "zipf",
-    "bpe_pair_counts": "bpe",
-    "quality_logit": "qlogit",
-    "quality_score_psi": "psi",
-    "text_perplexity_buckets": "ppl",
-    "dsir_weights": "dsir",
-    # r5 tightening so ALL entries fit the stdout cap (1950, under the
-    # driver's 2000-char tail capture) with six
-    # more queries registered; renames from the r4 line, old -> new:
-    "sim_ivf_recall_batch": "ivfrb",      # sm_ivf_rec_b
-    "sim_truncation_recall": "trunc",     # sm_trunc_rec
-    "multimodal_audio_windows": "aud",    # mm_audio_windows
-    "multimodal_video_frames": "vid",     # mm_video_frames
-    "multimodal_features": "feat",        # mm_features
-    "sim_near_dup_lsh": "ndl",            # sm_near_dup_lsh (auto-scaled planes since r10)
-    "sim_cosine_topk": "cos",             # sm_cosine_topk
-    "sim_ivf_topk": "ivf",                # sm_ivf_topk
-    "sim_knn_join": "knn",                # sm_knn_join
-    "sim_lsh_topk": "lsh",                # sm_lsh_topk
-    "sim_mmr_topk": "mmr",                # (new in r5)
-    "text_fingerprint": "tx_fp",             # tx_fingerprint
-    "text_token_count": "tx_tok",            # tx_token_count
-    "text_repetition": "tx_rep",             # tx_repetition
-    "text_pii_scrub": "tx_pii",              # tx_pii_scrub
-    "embed_norm_stats": "em_norm",           # em_norm_stats
-    "embed_centroids": "em_cent",            # em_centroids
-    "sample_rebalanced": "rebal",         # sp_rebalanced
-    "dedup_canonical": "dd_canon",           # dd_canonical
-    "dedup_substring": "dd_sub",             # dd_substr
-    "dedup_semantic": "dd_sem",              # (new in r5)
-    "sq8_codes": "sq8",                      # (new in r5)
-    "sim_sq8_topk": "sq8t",                # (new in r5)
-    "sim_sq8_recall": "sq8r",             # (new in r5)
-    "sample_stratified": "strat",         # sp_stratified
-    # round-6 curation additions
-    "text_tfidf_pairs": "tfidf",
-    "text_ngram_novelty": "novel",
-    "sample_weighted": "spw",
-    "dedup_clusters": "dd_clus",             # dd_clusters
-    "dedup_jaccard": "dd_jac",               # dd_jaccard
-    "dedup_simhash": "dd_sim",               # dd_simhash
-    "text_entropy": "tx_ent",                # tx_entropy
-    "text_bigrams": "tx_bigr",               # tx_bigrams
-    "text_lang_id": "tx_lang",               # tx_lang_id
-    "text_winnow": "tx_win",                 # tx_winnow
-    "corpus_profile": "co_prof",             # co_profile
-    "corpus_shuffle": "co_shuf",             # co_shuffle
-    "multimodal_frames": "mm_frm",           # mm_frames
-    # batch-three ops (new in r5)
-    "sim_hamming_topk": "ham",
-    "sim_hamming_recall": "hamr",
-    "hard_negative_mining": "hneg",
-    "text_chunk_windows": "chunk",
-    "dedup_containment": "cont",
-    "bpe_merge_step": "bpe2",
-    "sim_cascade_topk": "casc",
-    "sim_cascade_recall": "cascr",
-    "chunk_dup_groups": "chdup",
-    "sim_ivfpq_topk": "ivfpq",
-    "sim_ivfpq_recall": "ivfpqr",
-    "vocab_growth": "vgrow",
-    "lang_id_confusion": "langc",
-    "embed_label_metrics": "elabel",
-    "mix_budget_plan": "budget",
-}
-# r6 tightening: 167 registered queries pushed the encoded line ~150 chars
-# past the cap, so every remaining >=6-char id shrinks to a 2-5-char
-# mnemonic (bijectivity still asserted at emit time; full names always in
-# bench_out.json). Overrides of r4/r5 values are deliberate.
-_SHORT_WHOLE.update({
-    "dedup_simhash_pairs": "shp",
-    "dedup_minhash_err": "mherr",
-    "dedup_incremental": "incr",
-    "multimodal_png_roundtrip": "png",
-    "multimodal_bmp_roundtrip": "bmp",
-    "multimodal_avi_roundtrip": "avi",
-    "multimodal_wav_roundtrip": "wav",
-    "multimodal_meta": "meta",
-    "multimodal_frames": "frm",
-    "embed_pca_power": "pca",
-    "embed_kmeans": "km",
-    "embed_centroids": "cent",
-    "embed_norm_stats": "norm",
-    "train_test_split": "split",
-    "bpe_apply": "bpea",
-    "dedup_funnel": "funl",
-    "text_search": "srch",
-    "dedup_exact": "ddx",
-    "dedup_canonical": "canon",
-    "pq_codes": "pqc",
-    "text_stats": "stats",
-    "dedup_clusters": "clus",
-    "dedup_substring": "sub",
-    "dedup_simhash": "sh16",
-    "dedup_semantic": "sem",
-    "dedup_jaccard": "jac",
-    "text_entropy": "ent",
-    "text_bigrams": "bigr",
-    "text_lang_id": "lang",
-    "text_winnow": "win",
-    "text_repetition": "rep",
-    "text_pii_scrub": "pii",
-    "text_token_count": "tok",
-    "text_bm25": "bm25",
-    "text_pmi": "pmi",
-    "text_fingerprint": "fp",
-    "corpus_profile": "prof",
-    "corpus_shuffle": "shuf",
-    "dedup_minhash_lsh": "mh",
-    "mix_budget_plan": "bud",
-    "quality_logit": "qlog",
-    "lang_id_confusion": "lgc",
-    "embed_label_metrics": "elb",
-    "sim_ivfpq_recall": "ipqr",
-    "sample_stratified": "str",
-    "sample_rebalanced": "reb",
-    "chunk_dup_groups": "chd",
-    "vocab_growth": "vgr",
-    "contamination_ngram": "ctm",
-    "source_divergence": "sdiv",
-    "source_overlap": "sovl",
-})
-# second r6 tightening: 172 registered queries re-folded the line, so the
-# remaining >=4-char mnemonics shrink to 3 (same bijectivity assert).
-_SHORT_WHOLE.update({
-    "pq_topk": "pqt",
-    "dedup_canonical": "cnn",
-    "dedup_minhash_err": "mhe",
-    "domain_mix_temperature": "dmt",
-    "sim_cascade_recall": "csr",
-    "sim_ivf_recall_batch": "ivb",
-    "sim_ivfpq_topk": "ipq",
-    "sim_ivfpq_recall": "ipr",
-    "sim_truncation_recall": "trc",
-    "text_chunk_windows": "chk",
-    "text_ngram_novelty": "nvl",
-    "text_stats": "sts",
-    "text_tfidf_pairs": "tfi",
-    "train_test_split": "spl",
-    "vocab_coverage": "vcb",
     "ann_range_search": "anr",
     "bpe_apply": "bpa",
     "bpe_merge_step": "bp2",
+    "bpe_pair_counts": "bpe",
+    "chunk_dup_groups": "chd",
+    "contamination_ngram": "ctm",
+    "contamination_report": "ctr",
+    "contamination_semantic": "cts",
     "corpus_profile": "prf",
     "corpus_shuffle": "shf",
+    "corpus_snapshot_diff": "cosd",
+    "curriculum_mix": "curm",
+    "curriculum_plan": "curp",
+    "dedup_budget_impact": "dbi",
+    "dedup_canonical": "cnn",
+    "dedup_cap_plan": "dcp",
+    "dedup_cluster_sizes": "dcs",
     "dedup_clusters": "cls",
     "dedup_containment": "ctn",
-    "dedup_incremental": "inc",
-    "dedup_simhash": "s16",
-    "domain_mix": "dmx",
-    "sim_hamming_recall": "hmr",
-    "quality_logit": "qlg",
-    "source_divergence": "sdv",
-    "source_overlap": "sov",
+    "dedup_exact": "ddx",
     "dedup_funnel": "fnl",
-    "hard_negative_mining": "hng",
-    "sim_cascade_topk": "csc",
-    "text_search": "sch",
-    "multimodal_meta": "mta",
-})
-# r7 additions
-_SHORT_WHOLE.update({
-    "multimodal_jpeg_roundtrip": "jpg",
+    "dedup_incremental": "inc",
+    "dedup_jaccard": "jac",
+    "dedup_lsh_band_tuning": "dlb",
+    "dedup_minhash_err": "mhe",
+    "dedup_minhash_lsh": "mh",
+    "dedup_semantic": "sem",
+    "dedup_simhash": "s16",
     "dedup_simhash64": "s64",
     "dedup_simhash64_pairs": "s6p",
-    "quality_logit_train": "qlt",
-})
-# r13 additions
-_SHORT_WHOLE.update({
-    "curriculum_plan": "curp",
-    "curriculum_mix": "curm",
-})
-# r12 tightening: 213 registered queries + the sweep_attempts field
-# re-folded the line, so every remaining >=6-char mnemonic shrinks to 3-5
-# (same bijectivity assert; full names always in bench_out.json)
-_SHORT_WHOLE.update({
-    "quality_head_calibration": "qhc",
-    "quality_threshold_sweep": "qts",
-    "contamination_semantic": "cts",
-    "embedding_assign_delta": "ead",
-    "contamination_report": "ctr",
-    "quality_gopher_rules": "qgr",
-    "shard_balance_report": "sbr",
-    "doc_length_survival": "dls",
-    "quality_drift_alarm": "qda",
-    "tokenizer_fertility": "tkf",
-    "dedup_lsh_band_tuning": "dlb",
-    "multimodal_mjpeg_roundtrip": "mjpg",
-    "quality_head_model": "qhm",
-    "sim_centroid_margin": "scm",
-    "text_bigram_logprob": "tbl",
-    "text_trigram_logprob": "ttl",
-    "corpus_snapshot_diff": "cosd",
-    "dedup_budget_impact": "dbi",
-    "dedup_cluster_sizes": "dcs",
+    "dedup_simhash_pairs": "shp",
     "dedup_source_matrix": "dsm",
-    "embed_intrinsic_dim": "eid",
-    "embed_outlier_score": "eos",
-    "quality_head_ece": "qhe",
-    "sketch_count_min": "skcm",
-    "mix_repeat_plan": "mrp",
-    "text_boilerplate": "tbp",
-    "multimodal_audio_trim": "mtrim",
-    "sample_eval_slice": "sevs",
+    "dedup_substring": "sub",
     "dedup_survivors": "dsv",
-    "dedup_cap_plan": "dcp",
+    "dedup_threshold_sweep": "dtsw",
+    "doc_length_survival": "dls",
+    "domain_mix": "dmx",
+    "domain_mix_temperature": "dmt",
+    "dsir_weights": "dsir",
+    "embed_centroids": "cent",
+    "embed_intrinsic_dim": "eid",
+    "embed_kmeans": "km",
+    "embed_label_metrics": "elb",
+    "embed_norm_stats": "norm",
+    "embed_outlier_score": "eos",
+    "embed_pca_power": "pca",
+    "embedding_assign_delta": "ead",
+    "hard_negative_mining": "hng",
+    "hybrid_rank_rrf": "rrf",
+    "lang_id_confusion": "lgc",
+    "mix_budget_plan": "bud",
+    "mix_repeat_plan": "mrp",
     "multimodal_adpcm_roundtrip": "adpcm",
+    "multimodal_audio_trim": "mtrim",
+    "multimodal_audio_windows": "aud",
+    "multimodal_avi_roundtrip": "avi",
+    "multimodal_bmp_roundtrip": "bmp",
+    "multimodal_features": "feat",
+    "multimodal_frames": "frm",
+    "multimodal_jpeg_roundtrip": "jpg",
+    "multimodal_meta": "mta",
+    "multimodal_mjpeg_roundtrip": "mjpg",
+    "multimodal_png_roundtrip": "png",
+    "multimodal_video_frames": "vid",
+    "multimodal_wav_roundtrip": "wav",
+    "pack_boundary_report": "packb",
+    "pack_sequences": "pack",
+    "pq_codes": "pqc",
+    "pq_topk": "pqt",
+    "quality_drift_alarm": "qda",
+    "quality_gopher_rules": "qgr",
+    "quality_head_calibration": "qhc",
+    "quality_head_ece": "qhe",
+    "quality_head_model": "qhm",
+    "quality_logit": "qlg",
+    "quality_logit_train": "qlt",
+    "quality_score_psi": "psi",
+    "quality_threshold_sweep": "qts",
+    "sample_eval_slice": "sevs",
+    "sample_rebalanced": "reb",
+    "sample_stratified": "str",
+    "sample_weighted": "spw",
+    "shard_balance_report": "sbr",
+    "sim_cascade_recall": "csr",
+    "sim_cascade_topk": "csc",
+    "sim_centroid_margin": "scm",
+    "sim_cosine_topk": "cos",
+    "sim_hamming_recall": "hmr",
+    "sim_hamming_topk": "ham",
+    "sim_ivf_pareto": "ivfp",
+    "sim_ivf_recall": "ivfr",
+    "sim_ivf_recall_batch": "ivb",
+    "sim_ivf_topk": "ivf",
+    "sim_ivfpq_recall": "ipr",
+    "sim_ivfpq_topk": "ipq",
+    "sim_knn_join": "knn",
+    "sim_lsh_topk": "lsh",
+    "sim_mmr_topk": "mmr",
+    "sim_near_dup_lsh": "ndl",
+    "sim_near_dup_pairs": "ndp",
+    "sim_pq_recall": "pqr",
+    "sim_sq8_recall": "sq8r",
+    "sim_sq8_topk": "sq8t",
+    "sim_truncation_recall": "trc",
+    "sketch_count_min": "skcm",
+    "source_divergence": "sdv",
+    "source_overlap": "sov",
+    "sq8_codes": "sq8",
+    "text_bigram_logprob": "tbl",
+    "text_bigrams": "bigr",
+    "text_bm25": "bm25",
+    "text_boilerplate": "tbp",
+    "text_chunk_windows": "chk",
+    "text_entropy": "ent",
+    "text_fingerprint": "fp",
+    "text_lang_id": "lang",
     "text_mattr": "mattr",
-})
+    "text_ngram_novelty": "nvl",
+    "text_perplexity_buckets": "ppl",
+    "text_pii_scrub": "pii",
+    "text_pmi": "pmi",
+    "text_quality_filter": "qual",
+    "text_repetition": "rep",
+    "text_search": "sch",
+    "text_stats": "sts",
+    "text_tfidf_pairs": "tfi",
+    "text_token_count": "tok",
+    "text_trigram_logprob": "ttl",
+    "text_unigram_logprob": "uni",
+    "text_winnow": "win",
+    "text_zipf_slope": "zipf",
+    "tokenizer_fertility": "tkf",
+    "train_test_split": "spl",
+    "vocab_coverage": "vcb",
+    "vocab_growth": "vgr",
+}
 _SHORT_PREFIX = [
     ("multimodal_", "mm_"), ("dedup_", "dd_"), ("text_", "tx_"),
     ("sample_", "sp_"), ("embed_", "em_"), ("corpus_", "co_"),

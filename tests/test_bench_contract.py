@@ -97,6 +97,21 @@ def test_fresh_headline_basket_is_registered():
     assert len(set(shorts)) == len(shorts)
 
 
+def test_short_names_are_pinned():
+    """The stdout line's short names are the driver's keys across rounds:
+    a digest over every registered (name, short name) pair pins them, so
+    an edit to the whole-name table or the prefix rules cannot silently
+    rename a query on the contract line."""
+    import hashlib
+
+    import bench
+    from yamon_spark.queries import all_queries
+
+    pairs = sorted((n, bench._short_name(n)) for n in all_queries())
+    digest = hashlib.sha256("".join(f"{n}\t{s}\n" for n, s in pairs).encode()).hexdigest()
+    assert digest == "3c38470420558e3b4c7ae617230aaeb2a6f3fd46f1c6d44ab944436e5bac6e36"
+
+
 def test_fresh_one_subprocess_contract():
     """One real fresh-JVM child at sf0.001: prints a RESULT line with two
     positive walls (the parent-side parser depends on this exact shape)."""

@@ -1,11 +1,12 @@
 """Input-sized AQE wide start (yamon_spark.session).
 
-The r13 fresh-JVM probe (scripts/minhash_probe.py) measured the fixed
-512-wide start costing the minhash shuffle chain 1.43-1.98x at sf0.1
-(17 MB input), while the r12 partition-knee measurement shows the same
-width HALVING the posting-list kernel at a ~700 MB corpus. The rule that
-holds across scales is bytes-per-initial-partition; these tests pin the
-sizing function and its clamps (no SparkSession needed).
+The r13 fresh-JVM probe (`git show 8b1a8f1:scripts/minhash_probe.py`)
+measured the fixed 512-wide start costing the minhash shuffle chain
+1.43-1.98x at sf0.1 (17 MB input), while the r12 partition-knee
+measurement shows the same width HALVING the posting-list kernel at a
+~700 MB corpus. The rule that holds across scales is
+bytes-per-initial-partition; these tests pin the sizing function, its
+clamps and get_spark's use of it (no SparkSession needed).
 """
 
 import os
@@ -54,30 +55,25 @@ def test_walk_is_recursive(tmp_path):
     assert _sized_initial_partitions(str(d), floor=8) == 51
 
 
-def test_env_override_beats_data_dir(tmp_path, monkeypatch):
-    # harnesses pin widths via SPARK_GRAFT_INIT_PARTITIONS; the sizing
-    # must never preempt an explicit measurement config. get_spark's
-    # resolution order is env > data_dir > fixed 512 — assert the env
-    # read happens first by checking the code path's observable: with
-    # env set, _sized_initial_partitions must not even be consulted.
+def test_get_spark_resolves_master_and_wide_start(tmp_path, monkeypatch):
+    # get_spark's session settings without starting a JVM: getOrCreate is
+    # the only JVM-touching call, so a stub records the builder's options
     import yamon_spark.session as sess
 
-    monkeypatch.setenv("SPARK_GRAFT_INIT_PARTITIONS", "64")
-    called = []
-    monkeypatch.setattr(sess, "_sized_initial_partitions", lambda *a: called.append(a) or 1)
-    # build the builder chain without starting a JVM: getOrCreate is the
-    # only JVM-touching call, so stub it out via a builder probe
-    real = sess.SparkSession.builder.__class__.getOrCreate
-    confs = {}
+    confs = []
 
     def fake_get_or_create(self):
-        confs.update(self._options)
-        return None
+        confs.append(dict(self._options))
 
     monkeypatch.setattr(sess.SparkSession.builder.__class__, "getOrCreate", fake_get_or_create)
-    try:
-        sess.get_spark("sizing-test", data_dir=_mkdata(tmp_path, 10))
-    finally:
-        monkeypatch.setattr(sess.SparkSession.builder.__class__, "getOrCreate", real)
-    assert confs["spark.sql.adaptive.coalescePartitions.initialPartitionNum"] == "64"
-    assert not called
+    monkeypatch.setenv("SPARK_GRAFT_CPUS", "6")
+    d = _mkdata(tmp_path, _INPUT_BYTES_PER_INITIAL_PARTITION * 50)
+    sess.get_spark("sizing-test", data_dir=d)
+    sess.get_spark("sizing-test")
+    sized, fixed = confs
+    for c in (sized, fixed):
+        assert c["spark.master"] == "local[6]"
+        assert c["spark.sql.shuffle.partitions"] == "6"
+    width = "spark.sql.adaptive.coalescePartitions.initialPartitionNum"
+    assert sized[width] == "51"
+    assert fixed[width] == "512"

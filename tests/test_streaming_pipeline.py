@@ -91,6 +91,32 @@ def test_pipeline_checkpoint_resume_no_duplicates(spark, tmp_path, cfg):
     assert sorted(r.name for r in detail.collect()) == ["g1", "g2"]  # no dupes, no loss
 
 
+def test_malformed_timestamp_lands_with_null_when(spark, tmp_path, cfg):
+    # a "t" that is not a timestamp (garbage text, or a JSON number, which
+    # from_json turns into a string) must not fail the micro-batch of an
+    # acknowledged body: the record lands with a NULL when, like a missing t
+    good, bad = "2024-05-01T10:00:05Z", ("garbage", 1714521600)
+    _write_landing(
+        tmp_path / "landing",
+        [
+            _batch(
+                metrics=[_metric(t, "gauge", f"m{i}", 1.0) for i, t in enumerate((good, *bad))],
+                logs=[{"t": t, "s": f"s{i}", "d": "x"} for i, t in enumerate((good, *bad))],
+                events=[{"t": t, "e": f"e{i}", "d": "{}"} for i, t in enumerate((good, *bad))],
+            )
+        ],
+    )
+    P.run_pipeline_once(spark, cfg)
+
+    for table, key, p in (("metrics", "name", "m"), ("logs", "service", "s"), ("events", "type", "e")):
+        rows = spark.read.parquet(f"{cfg.out_dir}/{table}").collect()
+        assert {r[key]: r.when for r in rows} == {
+            f"{p}0": dt.datetime(2024, 5, 1, 10, 0, 5),
+            f"{p}1": None,
+            f"{p}2": None,
+        }, table
+
+
 def test_audit_batch_coalesce(spark):
     lines = spark.createDataFrame(
         [

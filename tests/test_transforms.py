@@ -1,4 +1,4 @@
-"""Unit goldens for the per-record transforms T1-T9 (SURVEY §2.2) —
+"""Unit goldens for the per-record transforms T1-T8 (SURVEY §2.2) —
 the asserted replacement for the reference's yamon-debug manual
 inspection (cmd/yamon-debug/main.go:33-54)."""
 
@@ -74,19 +74,3 @@ def test_script_time_override(spark):
         for r in df.select(T.script_time(F.col("st"), F.col("ingest")).alias("w")).collect()
     ]
     assert got == ["2024-05-01T10:20:00", "2024-06-01T00:00:00", "2024-06-01T00:00:00"]
-
-
-def test_webhook_event_json_coercion(spark):
-    # agent/http.go:82-90 — values parse as JSON when valid else string
-    df = spark.createDataFrame(
-        [({"n": "42", "j": '{"a":1}', "s": "plain text"},)], "form map<string,string>"
-    )
-    ev = df.select(
-        T.webhook_event(F.col("form"), F.lit("1.2.3.4:5"), F.lit("multipart/form-data")).alias("e")
-    ).collect()[0].e
-    assert ev.type == "yamon-agent.webhook"
-    assert ev.tags == {"remote-addr": "1.2.3.4:5", "content-type": "multipart/form-data"}
-    import json
-
-    data = json.loads(ev.data)
-    assert data == {"n": 42, "j": {"a": 1}, "s": "plain text"}

@@ -1,4 +1,5 @@
-"""Per-record ingestion transforms (SURVEY §2.2, T1-T9).
+"""Per-record ingestion transforms (SURVEY §2.2, T1-T8; the T9 webhook
+wrap is ``sources/http_server.IngestHTTPServer._webhook_line``).
 
 Each transform is a pure ``DataFrame -> DataFrame`` function built only
 from JVM-side built-ins (``pyspark.sql.functions``) so every one stays
@@ -15,7 +16,6 @@ Reference parity (semantics only, re-expressed Spark-first):
 - T6  prom tag merge      reference prom/scrape.go:69-82
 - T7  metric type gate    reference common/metric.go:9-14, res/schema.sql:4
 - T8  script ts override  reference script.go:35-38,54-56,71-74
-- T9  webhook JSON wrap   reference agent/http.go:72-95
 """
 
 from __future__ import annotations
@@ -182,53 +182,3 @@ def script_time(script_time_secs: Column, ingest_time: Column) -> Column:
         script_time_secs.isNotNull() & (script_time_secs > 0),
         F.timestamp_seconds(script_time_secs),
     ).otherwise(ingest_time)
-
-
-# ---------------------------------------------------------------------------
-# T9: webhook form -> event JSON coercion
-# ---------------------------------------------------------------------------
-
-
-def _json_quote(c: Column) -> Column:
-    """JSON-quote a plain string with the engine's own escaping: wrap it
-    in a one-field struct, to_json, strip the {"x": ... } envelope."""
-    j = F.to_json(F.struct(c.alias("x")))
-    return j.substr(F.lit(6), F.length(j) - F.lit(6))
-
-
-def webhook_event(form: Column, remote_addr: Column, content_type: Column) -> Column:
-    """Wrap a webhook form map into the ``yamon-agent.webhook`` event
-    struct: values that parse as JSON are inlined, others kept as JSON
-    strings — try-parse via a validity probe, all JVM-side."""
-    body = F.concat(
-        F.lit("{"),
-        F.array_join(
-            F.transform(
-                F.map_entries(form),
-                lambda e: F.concat(
-                    _json_quote(e.getField("key")),
-                    F.lit(":"),
-                    # valid JSON -> inline raw; NULL -> literal null
-                    # (_json_quote(NULL) collapses to "", yielding the
-                    # malformed '{"k":}'); else JSON-quoted string
-                    F.when(
-                        F.try_parse_json(e.getField("value")).isNotNull(), e.getField("value")
-                    )
-                    .when(e.getField("value").isNull(), F.lit("null"))
-                    .otherwise(_json_quote(e.getField("value"))),
-                ),
-            ),
-            ",",
-        ),
-        F.lit("}"),
-    )
-    return F.struct(
-        F.current_timestamp().alias("when"),
-        F.lit("").alias("host"),
-        F.lit("yamon-agent.webhook").alias("type"),
-        body.alias("data"),
-        F.map_from_arrays(
-            F.array(F.lit("remote-addr"), F.lit("content-type")),
-            F.array(remote_addr, content_type),
-        ).alias("tags"),
-    )

@@ -43,8 +43,9 @@ from yamon_spark.operators.text import words_col
 # shingles; a df>1024 shingle contributes no discriminative evidence)
 # and far above every verification fixture's max df (25 at sf0.1, and
 # the scale-sweep replicas are vocabulary-disjoint so df never grows
-# with the factor) — measured inert: scripts/stop_shingle_bench.py
-# shows byte-identical output on the fixtures and bounded wall on a
+# with the factor) — measured inert: the stop-shingle bench
+# (`git show 8b1a8f1:scripts/stop_shingle_bench.py`) showed
+# byte-identical output on the fixtures and bounded wall on a
 # planted-boilerplate corpus, and tests/test_dedup_cap.py equality-pins
 # capped == uncapped at the oracle SFs. Pass max_doc_freq=None for
 # exact uncapped semantics.

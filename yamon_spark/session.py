@@ -29,9 +29,10 @@ DEFAULT_SHUFFLE_PARTITIONS = 32
 # compressed input per initial partition kept per-task shuffle volume
 # bounded through the family's explode amplification (~40x uncompressed).
 # Below that scale the wide start is pure scheduling overhead: the r13
-# fresh-JVM probe (scripts/minhash_probe.py) measured the minhash chain
-# of SMALL shuffles paying 1.43-1.98x at sf0.1 (17 MB input) under a
-# fixed 512 vs letting shuffles start at spark.sql.shuffle.partitions.
+# fresh-JVM probe (`git show 8b1a8f1:scripts/minhash_probe.py`) measured
+# the minhash chain of SMALL shuffles paying 1.43-1.98x at sf0.1 (17 MB
+# input) under a fixed 512 vs letting shuffles start at
+# spark.sql.shuffle.partitions.
 _INPUT_BYTES_PER_INITIAL_PARTITION = 1_400_000
 # Ceiling for the sized width. Locally this bounds scheduling overhead;
 # on a real cluster you would raise it to ~2-4x total executor cores
@@ -74,15 +75,17 @@ def get_spark(
     if shuffle_partitions is None:
         shuffle_partitions = int(cpus)
 
-    # SPARK_GRAFT_MASTER lets measurement harnesses swap the single-JVM
-    # local[N] for e.g. local-cluster[2,16,24576] — same session knobs,
-    # heap split across worker JVMs (used to de-confound GC effects in
-    # scale sweeps; see scripts/split_jvm_knee.py). Default unchanged.
-    master = os.environ.get("SPARK_GRAFT_MASTER", f"local[{cpus}]")
-
-    builder = (
+    # Wide start: sized from the input's on-disk bytes when the caller
+    # knows its data_dir (the rule that holds across scales; see module
+    # constants), else the fixed 512 of r12 — scale-safe for the corpus
+    # sizes the scale sweeps run, mild overhead on tiny data.
+    if data_dir and os.path.isdir(data_dir):
+        init_parts = _sized_initial_partitions(data_dir, shuffle_partitions)
+    else:
+        init_parts = 512
+    return (
         SparkSession.builder.appName(app_name)
-        .master(master)
+        .master(f"local[{cpus}]")
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.adaptive.enabled", "true")
@@ -96,6 +99,7 @@ def get_spark(
         # extra width for free (probe: 9.2 vs 9.0 s over 6 queries, noise).
         # On a real cluster this is the standard sizing (start wide,
         # coalesce down) — a fixed 32 would be the deployment bug.
+        .config("spark.sql.adaptive.coalescePartitions.initialPartitionNum", str(init_parts))
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.parquet.compression.codec", "zstd")
@@ -103,36 +107,7 @@ def get_spark(
         # them; 64MB is safe with 128GiB local, and typical for big clusters
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         .config("spark.sql.parquet.filterPushdown", "true")
-    )
-    # Wide-start resolution order:
-    #   1. SPARK_GRAFT_INIT_PARTITIONS env — measurement harnesses pin a
-    #      width ("off" = don't set it at all, so shuffles start at
-    #      spark.sql.shuffle.partitions); scripts/minhash_probe.py uses
-    #      this to isolate the wide-start cost on shuffle-chain-heavy ops.
-    #   2. data_dir given — size the width from the input's on-disk bytes
-    #      (the rule that holds across scales; see module constants).
-    #   3. neither — fixed 512, the r12 default: scale-safe for the
-    #      corpus sizes the scale sweeps run, mild overhead on tiny data.
-    init_parts = os.environ.get("SPARK_GRAFT_INIT_PARTITIONS")
-    if init_parts is None:
-        if data_dir and os.path.isdir(data_dir):
-            init_parts = str(_sized_initial_partitions(data_dir, shuffle_partitions))
-        else:
-            init_parts = "512"
-    if init_parts != "off":
-        builder = builder.config(
-            "spark.sql.adaptive.coalescePartitions.initialPartitionNum", init_parts
-        )
-    builder = (
-        builder
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "8g"))
         .config("spark.ui.enabled", "false")
+        .getOrCreate()
     )
-    if master.startswith("local-cluster"):
-        # worker JVMs need an explicit executor heap; the memory-per-worker
-        # field in local-cluster[n,cores,mem] is the worker's budget, the
-        # executor must fit inside it
-        builder = builder.config(
-            "spark.executor.memory", os.environ.get("SPARK_EXECUTOR_MEMORY", "20g")
-        )
-    return builder.getOrCreate()

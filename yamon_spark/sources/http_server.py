@@ -17,18 +17,18 @@ agent/http.go:16-95):
   (both servers mount promhttp.Handler()).
 
 Architecture: the receiver does NO Spark work. Each accepted body is
-published atomically (tmp + rename, the landing-zone contract shared
-with exec_source._publish) into a landing directory. All three push
-endpoints land ONE format, submit-batch bodies in ``submit_batch/``, so
-one streaming pipeline (``readStream.text`` + ``parse_batch``) consumes
-every acknowledged body. That keeps acquisition
-at the edge and lets ingestion scale by adding receivers, not executors
-— on a 1000-executor cluster the receivers write to object storage and
-the file stream source lists new objects, so the intake path has no
-coupling to cluster size. Bodies that fail JSON validation are 400'd
-AND dead-lettered to ``rejects/`` (the reference only 400s,
-forward_server.go:61-63; persisting them feeds wire.parse_rejects so
-nothing is silently lost).
+published atomically by exec_source._publish (tmp + rename, the
+landing-zone contract every acquisition shim shares) into a landing
+directory. All three push endpoints land ONE format, submit-batch
+bodies in ``submit_batch/``, so one streaming pipeline
+(``readStream.text`` + ``parse_batch``) consumes every acknowledged
+body. That keeps acquisition at the edge and lets ingestion scale by
+adding receivers, not executors — on a 1000-executor cluster the
+receivers write to object storage and the file stream source lists new
+objects, so the intake path has no coupling to cluster size. Bodies
+that fail JSON validation are 400'd AND dead-lettered to ``rejects/``
+(the reference only 400s, forward_server.go:61-63; persisting them
+feeds wire.parse_rejects so nothing is silently lost).
 """
 
 from __future__ import annotations
@@ -38,10 +38,11 @@ import json
 import os
 import threading
 import time
-import uuid
 from collections import Counter
 from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
 from urllib.parse import parse_qs
+
+from yamon_spark.sources.exec_source import _publish
 
 SUBMIT_BATCH_DIR = "submit_batch"
 # POST /v1/data's long-form top-level keys (agent/http.go:36-40) ->
@@ -53,20 +54,6 @@ _LONG_KEYS = {"metrics": "m", "logs": "l", "events": "e"}
 MAX_BODY_BYTES = 32 * 1024 * 1024
 DOCUMENTS_DIR = "documents"
 REJECTS_DIR = "rejects"
-
-
-def _publish_line(landing_dir: str, line: str, prefix: str) -> str:
-    os.makedirs(landing_dir, exist_ok=True)
-    path = os.path.join(landing_dir, f"{prefix}-{int(time.time() * 1000)}-{uuid.uuid4().hex[:8]}.jsonl")
-    # DOT-prefixed tmp name (same contract as exec_source._publish):
-    # Spark's file listing ignores '.'/'_'-prefixed names but NOT a
-    # '.tmp' suffix, so a suffix-only tmp is visible mid-write —
-    # partial/duplicate ingestion under load
-    tmp = os.path.join(landing_dir, "." + os.path.basename(path) + ".tmp")
-    with open(tmp, "w") as f:
-        f.write(line.rstrip("\n") + "\n")
-    os.rename(tmp, path)
-    return path
 
 
 class IngestHTTPServer:
@@ -168,14 +155,8 @@ class IngestHTTPServer:
                             good.append(line.replace("\r", " "))
                         except ValueError:
                             bad.append(line)
-                    if bad:
-                        _publish_line(
-                            os.path.join(outer.landing_root, REJECTS_DIR), "\n".join(bad), "reject"
-                        )
-                    if good:
-                        _publish_line(
-                            os.path.join(outer.landing_root, DOCUMENTS_DIR), "\n".join(good), "docs"
-                        )
+                    _publish(os.path.join(outer.landing_root, REJECTS_DIR), bad, "reject")
+                    _publish(os.path.join(outer.landing_root, DOCUMENTS_DIR), good, "docs")
                     self._respond(path, 204 if good else 400)
                 elif path == "/v1/webhook":
                     line = outer._webhook_line(
@@ -183,7 +164,7 @@ class IngestHTTPServer:
                         self.headers.get("Content-Type", ""),
                         self.client_address[0],
                     )
-                    _publish_line(os.path.join(outer.landing_root, SUBMIT_BATCH_DIR), line, "webhook")
+                    _publish(os.path.join(outer.landing_root, SUBMIT_BATCH_DIR), [line], "webhook")
                     self._respond(path, 204)
                 else:
                     self._respond("other", 404)
@@ -205,7 +186,7 @@ class IngestHTTPServer:
                     if not isinstance(doc, dict):
                         raise ValueError("top-level JSON object required")
                 except ValueError:
-                    _publish_line(os.path.join(outer.landing_root, REJECTS_DIR), text, "reject")
+                    _publish(os.path.join(outer.landing_root, REJECTS_DIR), [text.rstrip("\n")], "reject")
                     self._respond(path, 400)
                     return
                 if long_form:
@@ -216,7 +197,7 @@ class IngestHTTPServer:
                 # json.loads rejects raw control characters inside
                 # strings, so any raw LF/CR here is whitespace
                 line = text.replace("\n", " ").replace("\r", " ")
-                _publish_line(os.path.join(outer.landing_root, SUBMIT_BATCH_DIR), line, prefix)
+                _publish(os.path.join(outer.landing_root, SUBMIT_BATCH_DIR), [line], prefix)
                 self._respond(path, 204)
 
         self._server = ThreadingHTTPServer((host, port), Handler)

@@ -123,8 +123,11 @@ SCRIPT_RESULT = StructType(
 
 def _ts(col: Column) -> Column:
     """RFC3339 (Go time.Time JSON) -> timestamp; Spark's cast handles the
-    offset and fractional seconds."""
-    return col.cast("timestamp")
+    offset and fractional seconds. ``try_cast``: a malformed ``t`` (e.g.
+    a JSON number, which ``from_json`` turns into a string) yields a NULL
+    ``when`` like a missing one, instead of raising under ANSI mode and
+    failing the micro-batch of an already-acknowledged body."""
+    return col.try_cast("timestamp")
 
 
 def _tags(col: Column) -> Column:
