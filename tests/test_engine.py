@@ -45,7 +45,7 @@ def test_sql_over_views(spark, ingested):
 
 def test_tag_filter_uses_index_columns(spark, ingested):
     df = ingested.table("metrics")
-    assert "tag_keys" in df.columns  # pipeline wrote the D7 index cols
+    assert "tag_keys" not in df.columns  # one tag index: the map, no array copies
     rows = Engine.tag_filter(df, "iface", "eth0").collect()
     assert len(rows) == 4 and all(r.tags["iface"] == "eth0" for r in rows)
     assert Engine.tag_filter(df, "iface", "lo").count() == 0

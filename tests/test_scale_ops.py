@@ -108,7 +108,8 @@ def test_parquet_bloom_reality_scalar_yes_array_no(spark, tmp_path):
     size signal), and do NOT arm on array leaves at any cardinality on
     this Spark/parquet version. If an upgrade flips the array case,
     this test fails and the layout docs + hot-column workaround should
-    be revisited."""
+    be revisited. ``with_tag_blooms`` arms only the hot-key columns, so
+    the array options are set here."""
     from yamon_spark.plans.layout import with_tag_blooms
 
     df = spark.range(60_000).select(
@@ -121,6 +122,10 @@ def test_parquet_bloom_reality_scalar_yes_array_no(spark, tmp_path):
         w = df.coalesce(1).write.mode("overwrite")
         if with_blooms:
             w = with_tag_blooms(w, hot_keys=("env",))
+            for col in ("tag_keys", "tag_values"):
+                w = w.option(f"parquet.bloom.filter.enabled#{col}", "true").option(
+                    f"parquet.bloom.filter.expected.ndv#{col}", "100000"
+                )
         w.parquet(str(tmp_path / writer_dir))
         return sum(f.stat().st_size for f in (tmp_path / writer_dir).rglob("*.parquet"))
 
@@ -163,7 +168,7 @@ def test_hot_tag_columns_push_down_and_survive_compaction(spark, tmp_path):
     plan = scan._jdf.queryExecution().executedPlan().toString()
     assert "EqualTo(tag_env,prod)" in plan  # fully-pushed IO-skipping filter
     assert scan.count() == 10
-    # non-hot key falls back to the array lead-in, same answers
+    # non-hot key falls back to the map probe, same answers
     assert Engine.tag_filter(metrics, "dc", "dc1").count() == 10
 
     compact_table(spark, str(tmp_path / "store" / "metrics"), target_file_bytes=1 << 30,

@@ -186,6 +186,38 @@ def test_retention_partition_drop(spark, tmp_path):
     assert [r.value for r in left.collect()] == [2.0]
 
 
+def test_retention_expires_null_date_files_by_age(spark, tmp_path, cfg):
+    """Records with a NULL ``when`` land in the default partition, which
+    has no date: its files expire by modification time on the table's
+    TTL, a fresh file survives, and compaction leaves the partition out
+    (a rewrite would reset its files' age)."""
+    from yamon_spark.plans.compaction import partition_stats
+    from yamon_spark.plans.retention import apply_retention
+
+    null_part = tmp_path / "out" / "metrics" / "date=__HIVE_DEFAULT_PARTITION__"
+    _write_landing(
+        tmp_path / "landing",
+        [_batch([_metric("garbage", "gauge", "old", 1.0), _metric("2024-05-01T10:00:00Z", "gauge", "good", 2.0)])],
+    )
+    P.run_pipeline_once(spark, cfg)
+    aged = (dt.datetime.now(dt.timezone.utc) - dt.timedelta(days=40)).timestamp()
+    old_files = sorted(f.name for f in null_part.iterdir())
+    assert any(n.endswith(".parquet") for n in old_files)
+    for name in old_files:
+        os.utime(null_part / name, (aged, aged))
+
+    _write_landing(tmp_path / "landing", [_batch([_metric("garbage", "gauge", "fresh", 3.0)])])
+    P.run_pipeline_once(spark, cfg)
+    assert "date=__HIVE_DEFAULT_PARTITION__" not in partition_stats(str(tmp_path / "out" / "metrics"))
+
+    dropped = apply_retention(str(tmp_path / "out"), {"metrics": 30})
+    assert dropped["metrics"] == [
+        "date=2024-05-01", *(f"date=__HIVE_DEFAULT_PARTITION__/{n}" for n in old_files)
+    ]
+    left = spark.read.parquet(str(tmp_path / "out" / "metrics")).collect()
+    assert [(r.name, r.when) for r in left] == [("fresh", None)]
+
+
 def test_pipeline_uniq_mv_partials_merge(spark, tmp_path, cfg):
     """uniq_mv sink: two micro-batch runs append independent sketch
     partials; merge_uniq over the stored table gives the exact distinct

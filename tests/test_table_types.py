@@ -85,3 +85,23 @@ def test_unix_micros_consumers_resolve_on_every_encoding(spark, tmp_path):
     # identical values regardless of the file's physical encoding
     assert results["ns_int64"] == results["us_ntz"] == results["us_ltz"]
     assert results["us_ntz"] == [(2, 7, 1), (4, 8, 3)]
+
+
+def test_table_memo_miss_sweeps_stopped_sessions(spark, tmp_path):
+    """A memo miss drops the entries of every stopped session, not only
+    the key being loaded (a process cycling sessions would otherwise keep
+    each stopped session and its frame alive)."""
+    from types import SimpleNamespace
+
+    from yamon_spark.queries import _TABLE_MEMO
+
+    sc = SimpleNamespace(isStopped=lambda: True)
+    stopped = SimpleNamespace(sparkContext=SimpleNamespace(_jsc=SimpleNamespace(sc=lambda: sc)))
+    dead_key = ("stopped-session", "/elsewhere", "events")
+    _TABLE_MEMO[dead_key] = (stopped, SimpleNamespace(sparkSession=stopped))
+
+    sf = str(tmp_path / "sf")
+    _write_events(sf, ENCODINGS["us_ltz"])
+    df = table(spark, sf, "events")
+    assert dead_key not in _TABLE_MEMO
+    assert table(spark, sf, "events") is df  # the live entry is kept

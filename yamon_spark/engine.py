@@ -10,8 +10,8 @@ ANSI SQL:
 - ``time_bucket``       toStartOfInterval(when, INTERVAL n unit)
 - ``rate``/``delta``    counter-series derivative (the query the
                         ``counter`` metric type exists for)
-- ``tag_filter``        tags['k'] = 'v' with bloom/stats-indexable
-                        rewrite when the tag index columns are present
+- ``tag_filter``        tags['k'] = 'v', pushed into the scan when the
+                        key is a materialized hot tag column
 - ``series``            time-range + name/host/tag scan with partition
                         pruning on the date column
 
@@ -104,17 +104,11 @@ class Engine:
 
     @staticmethod
     def tag_filter(df: DataFrame, key: str, value: str | None = None) -> DataFrame:
-        """``tags[key] [= value]`` against the best layout the table
-        carries (D7): a materialized hot-key scalar column gives a
-        fully-pushed equality (row-group stats/dictionary/bloom IO
-        skip); flattened ``tag_keys``/``tag_values`` arrays give the
-        row-level membership lead-in; else a plain map probe."""
-        from yamon_spark.plans.layout import hot_tag_col
-
-        if hot_tag_col(key) in df.columns or "tag_keys" in df.columns:
-            return df.where(tag_predicate(key, value, df=df))
-        probe = F.element_at("tags", key)
-        return df.where(probe.isNotNull() if value is None else (probe == value))
+        """``tags[key] [= value]`` (D7): equality on a materialized
+        hot-key scalar column pushes into the parquet scan (row-group
+        IO skip); any other key is a plain map probe
+        (plans/layout.tag_predicate)."""
+        return df.where(tag_predicate(key, value, df=df))
 
     def series(
         self,

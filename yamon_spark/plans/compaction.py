@@ -10,7 +10,9 @@ trigger still produces ~17k files/day/partition — death by file
 listing at 100 TB. Compaction rewrites each date partition to
 ``ceil(bytes / target_file_bytes)`` files, restoring the table's sort
 order (ORDER BY keys) inside each file so min/max pruning and tag bloom
-filters stay effective.
+filters stay effective (other columns, such as the tag arrays older
+versions wrote, pass through). Only ``date=YYYY-MM-DD`` partitions are
+rewritten: retention ages the NULL-date partition by file mtime.
 
 The rewrite is atomic per partition: write to a DOT-PREFIXED sibling
 tmp dir, then directory-swap. The dot prefix matters twice over —
@@ -31,6 +33,9 @@ import shutil
 from pathlib import Path
 
 from pyspark.sql import SparkSession
+
+from yamon_spark.plans.layout import with_tag_blooms
+from yamon_spark.plans.retention import _PART_RE
 
 # hidden sibling names: "." + <partition> + suffix (never "date=..."-shaped)
 _TMP_SUFFIX = ".compact-tmp"
@@ -58,14 +63,14 @@ def _recover(root: Path) -> None:
 
 
 def partition_stats(table_path: str) -> dict[str, tuple[int, int]]:
-    """{partition_dir_name: (n_files, total_bytes)} for date= partitions."""
+    """{partition_dir_name: (n_files, total_bytes)} for dated partitions."""
     out: dict[str, tuple[int, int]] = {}
     root = Path(table_path)
     if not root.is_dir():
         return out
     _recover(root)
     for part in sorted(root.iterdir()):
-        if not part.is_dir() or not part.name.startswith("date="):
+        if not part.is_dir() or not _PART_RE.match(part.name):
             continue
         files = [f for f in part.rglob("*.parquet") if f.is_file()]
         out[part.name] = (len(files), sum(f.stat().st_size for f in files))
@@ -96,19 +101,11 @@ def compact_table(
         if keys:
             df = df.sortWithinPartitions(*keys)
         writer = df.write.mode("overwrite").option("compression", "zstd")
-        if {"tag_keys", "tag_values"} <= set(df.columns):
-            # detail tables carry the D7 tag-index columns: the rewrite
-            # must re-arm their parquet bloom filters (incl. any hot-key
-            # scalar columns), or compaction silently trades small files
-            # for lost tag skipping
-            from yamon_spark.plans.layout import with_tag_blooms
-
-            hot = tuple(
-                c[len("tag_"):]
-                for c in df.columns
-                if c.startswith("tag_") and c not in ("tag_keys", "tag_values")
-            )
-            writer = with_tag_blooms(writer, hot_keys=hot)
+        # re-arm the blooms of whatever hot-key tag_<key> columns the
+        # partition carries (D7), or compaction trades small files for
+        # lost tag skipping
+        hot = tuple(c[len("tag_"):] for c in df.columns if c.startswith("tag_"))
+        writer = with_tag_blooms(writer, hot_keys=hot)
         writer.parquet(str(tmp_dir))
         # atomic-ish swap: old dir out of the way (hidden), tmp in, old
         # dropped; _recover handles a crash at any point in between

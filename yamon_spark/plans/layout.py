@@ -2,28 +2,23 @@
 
 The reference puts bloom-filter skip indexes on ``mapKeys(tags)`` /
 ``mapValues(tags)`` (res/schema.sql:9-10) so ``tags['k']='v'``
-predicates can skip granules. The Spark-native restatement has two
-layers, by what parquet can physically index:
+predicates can skip granules. Parquet cannot index a map, and on this
+Spark/parquet version bloom options on array leaves write no bloom and
+``array_contains`` is not a pushed filter (tests/test_scale_ops.py pins
+both). So the store has one tag index, decided here alone:
 
-1. **Hot-key scalar columns** (:func:`with_hot_tag_cols`): for the
-   handful of tag keys that queries actually filter on (env, dc, ...),
-   materialize ``tag_<key>`` STRING columns. Equality on a scalar
-   column is a fully-pushed parquet filter — row-group min/max stats,
-   dictionary filtering, AND bloom filters all arm, and `.explain`
-   shows it in PushedFilters. This is the layer that skips IO, and the
-   honest equivalent of ClickHouse's per-map-key bloom granule index.
-2. **Flattened array columns** (:func:`with_tag_index_cols`): sorted
-   ``tag_keys``/``tag_values`` arrays beside the map, with
-   :func:`tag_predicate` rewriting a tag lookup to lead with cheap
-   array membership before the map probe. Row-level and vectorized,
-   but NOT an IO skip: measured on Spark 4.1.2 / parquet-mr, bloom
-   options on repeated (array) leaves write no bloom at any
-   cardinality, and array_contains is not a pushed filter — the bloom
-   options stay armed only for forward compatibility
-   (tests/test_bucketing.py pins the current behavior either way).
+- **Hot-key scalar columns** (:func:`with_hot_tag_cols`): the handful of
+  tag keys that queries filter on (env, dc, ...) are materialized as
+  ``tag_<key>`` STRING columns. Equality on one is a pushed parquet
+  filter (row-group min/max, dictionary, and bloom once cardinality
+  defeats the dictionary) — the honest equivalent of ClickHouse's
+  per-map-key bloom granule index.
+- **Every other key** is a plain ``tags`` map probe: no IO skip, and no
+  extra column to write or read.
 
-This is the one optimizer-shaped piece of the whole port and it needs
-no Catalyst rule — helper functions suffice (SURVEY §4 conclusion).
+Partitions written by older versions may also carry sorted key/value
+array columns; readers ignore them and compaction passes them through.
+No Catalyst rule is needed — helper functions suffice (SURVEY §4).
 """
 
 from __future__ import annotations
@@ -35,22 +30,26 @@ from pyspark.sql import functions as F
 from pyspark.sql.readwriter import DataFrameWriter
 
 
-def with_tag_index_cols(df: DataFrame) -> DataFrame:
-    """Materialize sorted tag_keys / tag_values arrays next to ``tags``."""
-    return df.withColumn("tag_keys", F.array_sort(F.map_keys("tags"))).withColumn(
-        "tag_values", F.array_sort(F.map_values("tags"))
-    )
-
-
 def hot_tag_col(key: str) -> str:
     """Column name for a materialized hot tag key ('env' -> 'tag_env')."""
     return "tag_" + re.sub(r"[^A-Za-z0-9_]", "_", key)
 
 
+def check_hot_tag_keys(keys: tuple[str, ...]) -> None:
+    """Raise ValueError when distinct hot keys map to one column
+    (``"a.b"``/``"a_b"``; ``"Env"``/``"env"``, as Spark resolves column
+    names case-insensitively): the last one would answer for both."""
+    by_col: dict[str, list[str]] = {}
+    for k in dict.fromkeys(keys):
+        by_col.setdefault(hot_tag_col(k).lower(), []).append(k)
+    clashes = [ks for ks in by_col.values() if len(ks) > 1]
+    if clashes:
+        raise ValueError(f"hot tag keys map to the same column: {clashes}")
+
+
 def with_hot_tag_cols(df: DataFrame, keys: tuple[str, ...]) -> DataFrame:
     """Materialize ``tag_<key>`` scalar columns for the declared hot tag
-    keys (null when the row lacks the tag). Scalar equality on these is
-    a fully-pushed parquet predicate — the IO-skipping tag index."""
+    keys (null when the row lacks the tag)."""
     for k in keys:
         df = df.withColumn(hot_tag_col(k), F.element_at("tags", k))
     return df
@@ -62,16 +61,12 @@ def with_tag_blooms(
     ndv: int = 100_000,
     hot_keys: tuple[str, ...] = (),
 ) -> DataFrameWriter:
-    """Enable parquet bloom filters on the tag index columns.
+    """Enable parquet bloom filters on the hot-key scalar columns.
 
-    Blooms physically arm on the scalar hot-key columns (and skip
-    row-groups at read time once cardinality defeats the dictionary —
     parquet-mr omits the bloom while a column stays fully
     dictionary-encoded, because the dictionary is already an exact
-    filter). The array-column options are retained for forward
-    compatibility; current parquet-mr writes no blooms for repeated
-    leaves (see module docstring)."""
-    for col in ("tag_keys", "tag_values", *(hot_tag_col(k) for k in hot_keys)):
+    filter."""
+    for col in (hot_tag_col(k) for k in hot_keys):
         writer = (
             writer.option(f"parquet.bloom.filter.enabled#{col}", "true")
             .option(f"parquet.bloom.filter.fpp#{col}", str(fpp))
@@ -81,23 +76,21 @@ def with_tag_blooms(
 
 
 def tag_predicate(key: str, value: str | None = None, df: DataFrame | None = None) -> Column:
-    """``tags[key] [= value]`` rewritten against the best available
-    layout: a materialized hot-key scalar column when the frame carries
-    one (fully-pushed equality — IO skip), else the flattened array
-    membership lead-in before the exact map probe (row-level
-    short-circuit).
+    """``tags[key] [= value]``, using the frame's hot-key column for
+    equality; "has tag" means the key maps to a NON-NULL value.
 
-    Semantics are identical across layouts by definition: "has tag"
-    means the key maps to a NON-NULL value (a hot scalar column cannot
-    distinguish a null-valued entry from an absent key, so the array
-    layout applies the same rule — one logical query, one row set,
-    whichever table it runs against)."""
+    A hot column reads NULL where a row lacks the tag and in every file
+    written while the key was not hot (a restart may add or drop hot
+    keys), so a NULL is left to the map probe: ``(tag_k = v OR tag_k IS
+    NULL) AND coalesce(tag_k, tags[k]) = v``. The scan pushes the first
+    conjunct, which skips row groups by min/max and null count only:
+    parquet-mr's dictionary and bloom filters cannot rule out its NULL
+    branch (they still serve a plain ``tag_k = v`` in SQL)."""
+    probe = F.element_at("tags", key)
     hot = hot_tag_col(key)
-    if df is not None and hot in df.columns:
-        if value is None:
-            return F.col(hot).isNotNull()
-        return F.col(hot) == value
-    has_key = F.array_contains("tag_keys", key)
     if value is None:
-        return has_key & F.element_at("tags", key).isNotNull()
-    return has_key & F.array_contains("tag_values", value) & (F.element_at("tags", key) == value)
+        return probe.isNotNull()
+    if df is None or hot not in df.columns:
+        return probe == value
+    col = F.col(hot)
+    return ((col == value) | col.isNull()) & (F.coalesce(col, probe) == value)

@@ -6,6 +6,10 @@ date ages out. The Spark-native equivalent over date-partitioned parquet
 is a pure directory drop: O(#partitions) metadata work, zero data
 rewrite — the same cost model. Detail tables keep 30 days; rollups keep
 365 (res/schema.sql defaults).
+
+Records with a NULL ``when`` (missing or malformed ``t``) land in
+``date=__HIVE_DEFAULT_PARTITION__``; its files expire by modification
+time on the same TTL (compaction never rewrites them).
 """
 
 from __future__ import annotations
@@ -25,12 +29,14 @@ DEFAULT_TTLS = {
 }
 
 _PART_RE = re.compile(r"^date=(\d{4}-\d{2}-\d{2})$")
+_NULL_PART = "date=__HIVE_DEFAULT_PARTITION__"
 
 
 def expired_partitions(table_path: str, ttl_days: int, today: dt.date) -> list[Path]:
-    """date=YYYY-MM-DD partition dirs strictly older than the TTL."""
+    """date=YYYY-MM-DD partition dirs strictly older than the TTL, and
+    NULL-date partition files last modified (UTC) before the same day."""
     cutoff = today - dt.timedelta(days=ttl_days)
-    out = []
+    out: list[Path] = []
     root = Path(table_path)
     if not root.is_dir():
         return out
@@ -38,6 +44,11 @@ def expired_partitions(table_path: str, ttl_days: int, today: dt.date) -> list[P
         m = _PART_RE.match(child.name)
         if m and dt.date.fromisoformat(m.group(1)) < cutoff:
             out.append(child)
+        elif child.name == _NULL_PART and child.is_dir():
+            out += [
+                f for f in sorted(child.iterdir())
+                if dt.datetime.fromtimestamp(f.stat().st_mtime, dt.timezone.utc).date() < cutoff
+            ]
     return out
 
 
@@ -47,7 +58,8 @@ def apply_retention(
     today: dt.date | None = None,
     dry_run: bool = False,
 ) -> dict[str, list[str]]:
-    """Drop expired date partitions per table. Returns {table: [dropped]}.
+    """Drop expired date partitions (and NULL-date files) per table.
+    Returns {table: [dropped]}, paths relative to the table.
 
     On a real deployment this is a scheduled job against the table
     location (or ``ALTER TABLE ... DROP PARTITION`` on a catalog table /
@@ -61,16 +73,16 @@ def apply_retention(
     today = today or dt.datetime.now(dt.timezone.utc).date()
     dropped: dict[str, list[str]] = {}
     for table, ttl in ttl_days.items():
-        parts = expired_partitions(str(Path(out_dir) / table), ttl, today)
+        root = Path(out_dir) / table
         dropped[table] = []
-        for p in parts:
+        for p in expired_partitions(str(root), ttl, today):
             if not dry_run:
                 # tolerate a partition vanishing mid-sweep (concurrent
                 # maintenance): one lost dir must not abort retention
                 # for every remaining partition and table
                 try:
-                    shutil.rmtree(p)
+                    shutil.rmtree(p) if p.is_dir() else p.unlink()
                 except FileNotFoundError:
                     continue
-            dropped[table].append(p.name)
+            dropped[table].append(p.relative_to(root).as_posix())
     return dropped

@@ -19,6 +19,8 @@ from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
 
+from yamon_spark.operators._memo import sweep_dead_sessions
+
 
 @dataclass(frozen=True)
 class DeclaredQuery:
@@ -49,7 +51,7 @@ def register(name: str, oracle: str | None, doc: str = ""):
 # decomposition). The memo returns the SAME immutable DataFrame (a
 # source PLAN — no data is cached or persisted; every action still
 # scans the parquet), keyed by the live session object + resolved path.
-# Entries of stopped sessions are dropped on access. If the files under
+# Entries of stopped sessions are dropped on every miss. If the files under
 # a path are REPLACED mid-session the memoized plan would go stale —
 # not a supported pattern anywhere in this repo (testdata is immutable
 # per process); a new session or path sees fresh state.
@@ -80,12 +82,13 @@ def table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         session, df = hit
         try:
             # `session is spark` guards id() reuse after gc; the stopped
-            # check drops entries of dead sessions
+            # check skips entries of dead sessions
             if session is spark and not spark.sparkContext._jsc.sc().isStopped():
                 return df
         except Exception:  # noqa: BLE001 — memo is an optimization, never a dependency
             pass
-        _TABLE_MEMO.pop(key, None)
+    # a miss drops every entry of a stopped session, not only this key's
+    sweep_dead_sessions(_TABLE_MEMO, frame_of=lambda v: v[1])
     path = os.path.join(sf_dir, f"{name}.parquet")
     if name == "events":
         try:

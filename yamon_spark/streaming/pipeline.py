@@ -46,6 +46,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
 from yamon_spark.functions.transforms import metadata_filter, metric_type_gate
+from yamon_spark.plans.layout import check_hot_tag_keys, with_hot_tag_cols, with_tag_blooms
 from yamon_spark.sources import wire
 
 # reference sort keys per table (res/schema.sql:14,98,117) minus the
@@ -166,8 +167,8 @@ class PipelineConfig:
     uniq_mv: bool = False
     # hot tag keys to materialize as scalar tag_<key> columns on the
     # detail tables (D7's IO-skipping layer: scalar equality is a
-    # fully-pushed parquet predicate with stats/dictionary/bloom skip;
-    # array columns physically cannot bloom — plans/layout.py).
+    # pushed parquet predicate; every other key is a map probe —
+    # plans/layout.py). Keys that map to one column are rejected.
     hot_tag_keys: tuple[str, ...] = ()
     # optional ClickHouse detail sink (clickhouse_writer.go): when set,
     # each detail table ALSO streams into ClickHouse over JDBC with its
@@ -180,16 +181,14 @@ def _write_detail_batch(batch: DataFrame, table: str, cfg: PipelineConfig) -> No
     """Append one detail block: stamp date partition column, rebalance
     by date (one file per date per batch, AQE-sized), sort within
     partitions by the reference ORDER BY key (D6 -> parquet row-group
-    min/max skipping), materialize flattened tag_keys/tag_values with
-    parquet bloom filters (D7 — the ClickHouse mapKeys/mapValues bloom
+    min/max skipping), materialize the hot tag keys as bloom-filtered
+    ``tag_<key>`` columns (D7 — the ClickHouse mapKeys/mapValues bloom
     indexes, res/schema.sql:9-10), write ZSTD parquet partitioned by
     date (D5 -> partition pruning; D4 retention drops whole dirs).
 
     The rebalance lives in this write's own plan: AQE cannot coalesce a
     shuffle under the fused metrics writer's ``persist()``, so the
     cached batch must stay unshuffled."""
-    from yamon_spark.plans.layout import with_hot_tag_cols, with_tag_blooms, with_tag_index_cols
-
     # date LEADS the sort: the partitioned write requires ordering by the
     # partition column and would otherwise insert its OWN sort on date
     # over the just-sorted data (a wasted sort per micro-batch whose
@@ -197,7 +196,7 @@ def _write_detail_batch(batch: DataFrame, table: str, cfg: PipelineConfig) -> No
     # secondary (name, host, when) order that D6 min/max skipping needs)
     sort_cols = ["date", *SORT_KEYS[table], "when"]
     writer = (
-        with_hot_tag_cols(with_tag_index_cols(batch), cfg.hot_tag_keys)
+        with_hot_tag_cols(batch, cfg.hot_tag_keys)
         .withColumn("date", F.to_date("when"))
         .hint("rebalance", "date")
         .sortWithinPartitions(*sort_cols)
@@ -269,6 +268,7 @@ def _fused_metrics_writer(metrics: DataFrame, cfg: PipelineConfig) -> StreamingQ
 def start_pipeline(spark: SparkSession, cfg: PipelineConfig) -> list[StreamingQuery]:
     """Wire the full ingest graph and start all sinks. Returns the
     running queries (callers awaitTermination / processAllAvailable)."""
+    check_hot_tag_keys(cfg.hot_tag_keys)
     streams = stream_landing(spark, cfg.landing_dir, cfg.fmt)
     stamp = metadata_filter(cfg.hostname, cfg.static_tags)
     queries: list[StreamingQuery] = []
