@@ -7,6 +7,8 @@ memo discipline (operators/_memo.py)."""
 
 from __future__ import annotations
 
+from types import SimpleNamespace
+
 from pyspark.sql import functions as F
 
 from yamon_spark.operators.text import _BPE_MEMO, _bpe_vocab_merges, bpe_apply
@@ -57,18 +59,36 @@ def test_eviction_safety_results_survive_unpersist(spark):
     assert before == after
 
 
+def _frame_of_session(jsc):
+    """A stub frame whose session's SparkContext holds ``jsc``."""
+    return SimpleNamespace(sparkSession=SimpleNamespace(sparkContext=SimpleNamespace(_jsc=jsc)))
+
+
 def test_dead_session_entries_swept(spark):
-    from yamon_spark.operators._memo import sweep_dead_sessions
-
-    class _DeadFrame:
-        @property
-        def sparkSession(self):
-            raise RuntimeError("session gone")
-
-    _BPE_MEMO[("dead-session-key",)] = (_DeadFrame(), ["ab"])
+    # SparkContext.stop() leaves _jsc = None: a stopped session
+    _BPE_MEMO[("dead-session-key",)] = (_frame_of_session(None), ["ab"])
     docs = load_table(spark, SF, "documents")
     _bpe_vocab_merges(docs, 2)  # access runs the sweep
     assert ("dead-session-key",) not in _BPE_MEMO
+
+
+def test_sweep_evicts_only_confirmed_stops():
+    from yamon_spark.operators._memo import sweep_dead_sessions
+
+    def context(is_stopped):
+        return SimpleNamespace(sc=lambda: SimpleNamespace(isStopped=is_stopped))
+
+    def probe_fails():
+        raise RuntimeError("py4j hiccup")
+
+    memo = {
+        "cleared": (_frame_of_session(None),),
+        "reports_stopped": (_frame_of_session(context(lambda: True)),),
+        "reports_live": (_frame_of_session(context(lambda: False)),),
+        "probe_raises": (_frame_of_session(context(probe_fails)),),
+    }
+    sweep_dead_sessions(memo)
+    assert sorted(memo) == ["probe_raises", "reports_live"]
 
 
 def test_learning_matches_unmemoized_replay(spark):

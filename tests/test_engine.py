@@ -10,7 +10,7 @@ import pytest
 
 from pyspark.sql import functions as F
 
-from yamon_spark.engine import Engine, time_bucket
+from yamon_spark.engine import TABLES, Engine, time_bucket
 from yamon_spark.streaming import pipeline as P
 
 
@@ -80,3 +80,39 @@ def test_adhoc_rollup(spark, ingested):
     assert len(r) == 1 and r[0].value == 650.0  # all four samples in one 5-min bucket
     g = ingested.rollup("gauge", 60).collect()
     assert len(g) == 1 and g[0].value == 36.6
+
+
+def test_every_engine_table_has_sort_keys():
+    # the writers and Engine.maintain both take a table's order from here
+    assert set(TABLES) <= set(P.SORT_KEYS)
+
+
+def test_tag_insertion_order_never_splits_a_rollup_group(spark, tmp_path):
+    """One series in one minute, its tags inserted as {a,b} and {b,a}:
+    every rollup gives one row, with the tags' keys sorted."""
+    metrics = spark.sql(
+        """SELECT `when`, host, name, type, value, tags FROM VALUES
+             (timestamp'2024-05-01 10:00:05', 'x', 'cpu', 'gauge', 1.0D, map('a', '1', 'b', '2')),
+             (timestamp'2024-05-01 10:00:35', 'x', 'cpu', 'gauge', 3.0D, map('b', '2', 'a', '1')),
+             (timestamp'2024-05-01 10:00:10', 'x', 'reqs', 'counter', 2.0D, map('b', '2', 'a', '1')),
+             (timestamp'2024-05-01 10:00:50', 'x', 'reqs', 'counter', 4.0D, map('a', '1', 'b', '2'))
+           AS t(`when`, host, name, type, value, tags)"""
+    )
+    # map_keys, not a collected dict: PySpark hands maps back key-sorted
+    keys = F.map_keys("tags").alias("keys")
+    assert {tuple(r.keys) for r in metrics.select(keys).collect()} == {("a", "b"), ("b", "a")}
+    metrics.withColumn("date", F.to_date("when")).write.partitionBy("date").parquet(
+        str(tmp_path / "metrics")
+    )
+    engine = Engine(spark, str(tmp_path))
+    cases = {
+        "gauge_rollup": (P.gauge_rollup(metrics), 2.0),
+        "counter_rollup": (P.counter_rollup(metrics), 6.0),
+        "Engine.rollup(gauge)": (engine.rollup("gauge", 60), 2.0),
+        "Engine.rollup(counter)": (engine.rollup("counter", 60), 6.0),
+    }
+    for label, (df, value) in cases.items():
+        rows = df.select("value", "tags", keys).collect()
+        assert [(r.value, r.tags, r.keys) for r in rows] == [
+            (value, {"a": "1", "b": "2"}, ["a", "b"])
+        ], label

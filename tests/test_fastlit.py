@@ -78,3 +78,20 @@ def test_rejects_non_numeric():
         lit_array([True], "array<boolean>")
     with pytest.raises(ValueError):
         lit_array([float("nan")], "array<double>")
+
+
+def test_rejects_int_outside_int64(spark):
+    # the int64 bounds themselves render
+    _assert_identical(spark, [-(1 << 63), (1 << 63) - 1], "array<bigint>")
+    for v in (1 << 63, -(1 << 63) - 1):
+        with pytest.raises(ValueError, match="int64"):
+            lit_array([v], "array<bigint>")
+
+
+def test_simhash_pairs_at_64_bits_fails_at_build(spark):
+    # 64-bit masks include 1 << 63, one past the largest bigint
+    from yamon_spark.operators.dedup import simhash_hamming_pairs
+
+    docs = spark.createDataFrame([(1, "a b c"), (2, "a b d")], "doc_id long, text string")
+    with pytest.raises(ValueError, match="int64"):
+        simhash_hamming_pairs(docs, bits=64, max_hamming=1)

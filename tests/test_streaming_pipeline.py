@@ -267,7 +267,17 @@ def _files_by_date(table_dir):
     return {part.name: sorted(part.glob("*.parquet")) for part in sorted(table_dir.glob("date=*"))}
 
 
-def test_block_mode_writes_one_sorted_file_per_date_per_batch(spark, tmp_path, cfg):
+def _assert_files_sorted(table_dir, table):
+    """Every parquet file of ``table`` is ordered by its ORDER BY key."""
+    keys = [*P.SORT_KEYS[table], "when"]
+    for files in _files_by_date(table_dir).values():
+        for f in files:
+            rows = pq.read_table(f, columns=keys).to_pylist()
+            ordered = [tuple(r[k] for k in keys) for r in rows]
+            assert ordered == sorted(ordered), (table, f.name)
+
+
+def _run_layout(spark, tmp_path, cfg):
     # more landing files than cores: without a rebalance the text source
     # splits each batch by file, and every split writes its own file per date
     n_files = int(os.environ["SPARK_GRAFT_CPUS"]) + 2
@@ -275,20 +285,29 @@ def test_block_mode_writes_one_sorted_file_per_date_per_batch(spark, tmp_path, c
         for body in _layout_bodies(run, n_files):
             _write_landing(tmp_path / "landing", [body])
         P.run_pipeline_once(spark, cfg)
-    out = tmp_path / "out"
+    return tmp_path / "out"
+
+
+def test_block_mode_writes_one_sorted_file_per_date_per_batch(spark, tmp_path, cfg):
+    out = _run_layout(spark, tmp_path, cfg)
     for table in ("metrics", "logs", "events"):
         by_date = _files_by_date(out / table)
         assert sorted(by_date) == ["date=2024-05-01", "date=2024-05-02"], table
         for date, files in by_date.items():
             assert len(files) == 2, (table, date, [f.name for f in files])
-            keys = [*P.SORT_KEYS[table], "when"]
-            for f in files:
-                rows = pq.read_table(f, columns=keys).to_pylist()
-                ordered = [tuple(r[k] for k in keys) for r in rows]
-                assert ordered == sorted(ordered), (table, f.name)
+        _assert_files_sorted(out / table, table)
     # the fused writer persists the batch; a rebalance under that cache
     # would escape AQE's coalescing and write one file per shuffle partition
     for table in ("metrics_gauge_lts", "metrics_counter_lts"):
         by_date = _files_by_date(out / table)
         assert sorted(by_date) == ["date=2024-05-01", "date=2024-05-02"], table
         assert all(len(files) <= 2 for files in by_date.values()), (table, by_date)
+        _assert_files_sorted(out / table, table)
+
+
+def test_uniq_rollup_files_sorted_by_name_then_when(spark, tmp_path, cfg):
+    cfg.uniq_mv = True
+    out = _run_layout(spark, tmp_path, cfg)
+    assert sorted(_files_by_date(out / "metrics_uniq_lts")) == ["date=2024-05-01", "date=2024-05-02"]
+    assert P.SORT_KEYS["metrics_uniq_lts"] == ("name",)
+    _assert_files_sorted(out / "metrics_uniq_lts", "metrics_uniq_lts")

@@ -441,17 +441,15 @@ def test_gd_memo_never_keys_on_opaque_inmemory_plans(spark):
 def test_gd_memo_sweeps_dead_session_entries(spark):
     """ADVICE r9: memo entries whose owning session has stopped are
     evicted on the next memo access — simulated with a stub whose
-    sparkSession access fails (the same code path a stopped session
-    takes), so the real shared session is never stopped mid-suite."""
+    SparkContext has ``_jsc = None`` (the state SparkContext.stop()
+    leaves), so the real shared session is never stopped mid-suite."""
+    from types import SimpleNamespace
+
     from yamon_spark.operators.curation import _GD_MEMO, _gd_memo_sweep, _logit_train_frames
     from yamon_spark.queries import table as load_table
 
-    class _DeadFrame:
-        @property
-        def sparkSession(self):
-            raise RuntimeError("session gone")
-
-    _GD_MEMO[("dead-session-key",)] = (_DeadFrame(), None)
+    stopped = SimpleNamespace(sparkContext=SimpleNamespace(_jsc=None))
+    _GD_MEMO[("dead-session-key",)] = (SimpleNamespace(sparkSession=stopped), None)
     docs = load_table(spark, "/root/testdata/sf0.001", "documents")
     f1, _ = _logit_train_frames(docs, 6, 4.0)  # access runs the sweep
     assert ("dead-session-key",) not in _GD_MEMO

@@ -26,9 +26,16 @@ from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from yamon_spark.plans.layout import tag_predicate
-from yamon_spark.streaming.pipeline import canon_tags
+from yamon_spark.streaming.pipeline import SORT_KEYS
 
 TABLES = ("metrics", "logs", "events", "metrics_gauge_lts", "metrics_counter_lts", "metrics_uniq_lts")
+
+
+def canon_tags(tags: Column) -> Column:
+    """The tags map as key-sorted array<struct<key,value>>, for the one
+    place a map cannot go: a window's PARTITION BY
+    (EXPRESSION_TYPE_IS_NOT_ORDERABLE). groupBy takes the map itself."""
+    return F.array_sort(F.map_entries(tags))
 
 
 def time_bucket(col: Column | str, seconds: int) -> Column:
@@ -196,19 +203,16 @@ class Engine:
                 "compaction dir-swap and lose freshly-appended files; stop "
                 "the pipeline first or pass force=True"
             )
-        import os as _os
-
         from yamon_spark.plans.compaction import compact_table
         from yamon_spark.plans.retention import apply_retention
-        from yamon_spark.streaming.pipeline import SORT_KEYS
 
         dropped = apply_retention(self.data_dir, ttl_days=ttl_days, today=today)
         compacted: dict[str, dict] = {}
         for t in TABLES:
-            path = _os.path.join(self.data_dir, t)
-            if not _os.path.isdir(path):
+            path = os.path.join(self.data_dir, t)
+            if not os.path.isdir(path):
                 continue
-            keys = [*SORT_KEYS.get(t, ("name", "host")), "when"]
+            keys = [*SORT_KEYS[t], "when"]
             compacted[t] = compact_table(
                 self.spark, path, target_file_bytes=target_file_bytes, sort_keys=keys
             )
@@ -216,18 +220,15 @@ class Engine:
 
     def rollup(self, mtype: str = "gauge", bucket_seconds: int = 60) -> DataFrame:
         """Re-aggregate detail metrics at an arbitrary bucket size (the
-        ad-hoc version of the 1-min LTS rollups)."""
+        ad-hoc version of the 1-min LTS rollups). Groups by the tags map
+        itself, as the pipeline's rollups do: the planner sorts each map
+        by key, so tag insertion order never splits a series."""
         agg = F.avg("value") if mtype == "gauge" else F.sum("value")
         df = self.table("metrics").where(F.col("type") == mtype)
         return (
-            df.groupBy(
-                time_bucket("when", bucket_seconds).alias("when"),
-                "host",
-                "name",
-                canon_tags(F.col("tags")).alias("tag_entries"),
-            )
+            df.groupBy(time_bucket("when", bucket_seconds).alias("when"), "host", "name", "tags")
             .agg(agg.alias("value"))
-            .select("when", "host", "name", "value", F.map_from_entries("tag_entries").alias("tags"))
+            .select("when", "host", "name", "value", "tags")
         )
 
 

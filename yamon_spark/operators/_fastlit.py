@@ -18,7 +18,9 @@ per codebook) with a bit-identical Literal:
   the JVM double equals the Python double bit-for-bit (pinned by
   tests/test_fastlit.py over every literal site's actual values).
 - Integers render exactly; the CAST pins the element type (bigint)
-  independent of magnitude-based literal coercion.
+  independent of magnitude-based literal coercion. An int outside int64
+  raises ``ValueError`` here: it would parse as a wide DECIMAL whose
+  cast fails under ANSI and turns NULL without it.
 
 The resulting plan is IDENTICAL to the F.lit form (same Literal node,
 same type) — this changes where the literal is BUILT, not what executes.
@@ -46,6 +48,8 @@ def _render(v) -> str:
             return "CAST('-0.0' AS DOUBLE)"
         return repr(v)
     if isinstance(v, int):
+        if not -(1 << 63) <= v < 1 << 63:
+            raise ValueError(f"{v} is outside the int64 range")
         return repr(v)
     raise TypeError(f"unsupported literal element type {type(v).__name__}")
 

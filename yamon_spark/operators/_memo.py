@@ -42,16 +42,25 @@ def plan_data_key(df: DataFrame, *extra) -> tuple | None:
         return None
 
 
+def _confirmed_stopped(frame) -> bool:
+    """True only when ``frame``'s session is known to have stopped:
+    ``SparkContext.stop()`` cleared its ``_jsc``, or the JVM context
+    reports ``isStopped()``. A probe that raises (a transient py4j
+    failure on a healthy session) proves nothing, so it reads as live."""
+    try:
+        jsc = frame.sparkSession.sparkContext._jsc  # noqa: SLF001
+        return jsc is None or bool(jsc.sc().isStopped())
+    except Exception:  # noqa: BLE001
+        return False
+
+
 def sweep_dead_sessions(memo: dict, frame_of=lambda v: v[0]) -> None:
     """Evict memo entries whose owning SparkSession has stopped — their
     persisted frames are unreachable through any live session and would
-    otherwise pin memory for the process lifetime (ADVICE r9).
-    ``frame_of`` extracts a DataFrame from a stored value."""
+    otherwise pin memory for the process lifetime (ADVICE r9). Only a
+    confirmed stop evicts: dropping a live session's entry would rerun
+    the chain it memoizes. ``frame_of`` extracts a DataFrame from a
+    stored value."""
     for key in list(memo):
-        try:
-            frame = frame_of(memo[key])
-            alive = not frame.sparkSession.sparkContext._jsc.sc().isStopped()  # noqa: SLF001
-        except Exception:  # noqa: BLE001
-            alive = False
-        if not alive:
+        if _confirmed_stopped(frame_of(memo[key])):
             memo.pop(key, None)

@@ -675,6 +675,19 @@ def simhash_hamming_pairs(docs: DataFrame, bits: int = 32, max_hamming: int = 2)
     contract needed."""
     from itertools import combinations
 
+    # combinatorial mask generation — NOT a 2^bits scan (range(2^32) at
+    # call time is a 4-billion-iteration hang)
+    masks = [
+        sum(1 << i for i in pos)
+        for r in range(1, max_hamming + 1)
+        for pos in combinations(range(bits), r)
+    ]
+    # one array<bigint> Literal node, not 528 CreateArray children
+    # (plan-size guard; values and coercion identical), built in one
+    # py4j round trip (r14 — see _fastlit) and before the checkpoint job,
+    # so a mask outside int64 (bits=64 gives 1 << 63) fails before any job
+    mask_lit = lit_array([int(m) for m in masks], "array<bigint>")
+
     # The fingerprint subtree feeds FOUR consumers below (distinct fps,
     # the existence probe, both doc-id attach sides); without a
     # materialization barrier each copy re-ran the whole explode + md5 +
@@ -691,21 +704,11 @@ def simhash_hamming_pairs(docs: DataFrame, bits: int = 32, max_hamming: int = 2)
     # away, so simhash()'s output orderBy would be a dead Sort in the
     # checkpoint job.
     fps = simhash(docs, bits, ordered=False).localCheckpoint()
-    # combinatorial mask generation — NOT a 2^bits scan (range(2^32) at
-    # call time is a 4-billion-iteration hang)
-    masks = [
-        sum(1 << i for i in pos)
-        for r in range(1, max_hamming + 1)
-        for pos in combinations(range(bits), r)
-    ]
     d = fps.select(F.col("simhash").alias("fa")).distinct()
     # neighbor expansion over the DISTINCT fp table; fb > fa halves the
     # space and fixes pair direction at the fp level
     nb = (
-        # one array<bigint> Literal node, not 528 CreateArray children
-        # (plan-size guard; values and coercion identical), built in one
-        # py4j round trip (r14 — see _fastlit)
-        d.select("fa", F.explode(lit_array([int(m) for m in masks], "array<bigint>")).alias("m"))
+        d.select("fa", F.explode(mask_lit).alias("m"))
         .select("fa", F.col("fa").bitwiseXOR(F.col("m")).alias("fb"))
         .where(F.col("fb") > F.col("fa"))
     )

@@ -55,6 +55,11 @@ def register(name: str, oracle: str | None, doc: str = ""):
 # a path are REPLACED mid-session the memoized plan would go stale —
 # not a supported pattern anywhere in this repo (testdata is immutable
 # per process); a new session or path sees fresh state.
+# Self-join hazard: two table() calls for the same (dir, name) return the
+# SAME DataFrame, so joining them is a same-lineage self-join whose
+# column references can raise ambiguity errors. A query that needs the
+# table twice must alias each side (df.alias("a"), df.alias("b")) and
+# select through the aliases. No query does this today.
 _TABLE_MEMO: dict[tuple, tuple] = {}
 
 

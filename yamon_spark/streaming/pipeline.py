@@ -11,7 +11,8 @@ re-expressed as Spark streams over a file landing zone):
         --> rollup MVs:     metrics_gauge_lts/  (1-min tumbling AVG)
                             metrics_counter_lts/ (1-min tumbling SUM)
             aggregated per micro-batch, grouped by host,name,tags
-            (res/schema.sql:39-50,71-82)
+            (res/schema.sql:39-50,71-82), partitioned and sorted the
+            same way by their ORDER BY keys (res/schema.sql:33,65)
 
 Semantics upgrades over the reference (SURVEY §7.4 — intended, not
 bug-compatible): at-least-once delivery with checkpointed offsets
@@ -49,20 +50,17 @@ from yamon_spark.functions.transforms import metadata_filter, metric_type_gate
 from yamon_spark.plans.layout import check_hot_tag_keys, with_hot_tag_cols, with_tag_blooms
 from yamon_spark.sources import wire
 
-# reference sort keys per table (res/schema.sql:14,98,117) minus the
-# trailing timestamp, which is appended below
+# reference sort keys of every table the pipeline writes
+# (res/schema.sql:14,33,65,98,117) minus the trailing timestamp, which
+# the writers and compaction append
 SORT_KEYS = {
     "metrics": ("name", "host"),
     "logs": ("service", "host"),
     "events": ("type", "host"),
+    "metrics_gauge_lts": ("name", "host"),
+    "metrics_counter_lts": ("name", "host"),
+    "metrics_uniq_lts": ("name",),
 }
-
-
-def canon_tags(tags: Column) -> Column:
-    """Spark can't group by MapType; canonicalize to key-sorted
-    array<struct<key,value>> (deterministic — map_entries order is
-    insertion-dependent, so sort). Restore with map_from_entries."""
-    return F.array_sort(F.map_entries(tags))
 
 
 def gauge_rollup(metrics: DataFrame) -> DataFrame:
@@ -106,22 +104,13 @@ def merge_uniq(rollup: DataFrame, bucket: Column | None = None) -> DataFrame:
 
 
 def _rollup(metrics: DataFrame, mtype: str, agg: Column) -> DataFrame:
+    # grouping by the map itself: the planner wraps it in mapsort, so
+    # {a,b} and {b,a} are one group and the output keys come out sorted
     return (
         metrics.where(F.col("type") == mtype)
-        .groupBy(
-            F.window("when", "1 minute").alias("w"),
-            "host",
-            "name",
-            canon_tags(F.col("tags")).alias("tag_entries"),
-        )
+        .groupBy(F.window("when", "1 minute").alias("w"), "host", "name", "tags")
         .agg(agg.alias("value"))
-        .select(
-            F.col("w.start").alias("when"),
-            "host",
-            "name",
-            F.col("value"),
-            F.map_from_entries("tag_entries").alias("tags"),
-        )
+        .select(F.col("w.start").alias("when"), "host", "name", "value", "tags")
     )
 
 
@@ -177,6 +166,18 @@ class PipelineConfig:
     clickhouse: "object | None" = None  # ClickHouseSinkConfig
 
 
+def _write_order(table: str) -> list[str]:
+    """Sort order of one block of ``table`` before its partitioned write.
+
+    date LEADS the sort: the partitioned write requires ordering by the
+    partition column and would otherwise insert its OWN sort on date
+    over the just-sorted data (a wasted sort per micro-batch whose
+    spill-merge can interleave equal-date rows and destroy the secondary
+    (keys, when) order that D6 min/max skipping needs). With it, this
+    sort replaces the write's, so sorting adds no operator."""
+    return ["date", *SORT_KEYS[table], "when"]
+
+
 def _write_detail_batch(batch: DataFrame, table: str, cfg: PipelineConfig) -> None:
     """Append one detail block: stamp date partition column, rebalance
     by date (one file per date per batch, AQE-sized), sort within
@@ -189,17 +190,11 @@ def _write_detail_batch(batch: DataFrame, table: str, cfg: PipelineConfig) -> No
     The rebalance lives in this write's own plan: AQE cannot coalesce a
     shuffle under the fused metrics writer's ``persist()``, so the
     cached batch must stay unshuffled."""
-    # date LEADS the sort: the partitioned write requires ordering by the
-    # partition column and would otherwise insert its OWN sort on date
-    # over the just-sorted data (a wasted sort per micro-batch whose
-    # spill-merge can interleave equal-date rows and destroy the
-    # secondary (name, host, when) order that D6 min/max skipping needs)
-    sort_cols = ["date", *SORT_KEYS[table], "when"]
     writer = (
         with_hot_tag_cols(batch, cfg.hot_tag_keys)
         .withColumn("date", F.to_date("when"))
         .hint("rebalance", "date")
-        .sortWithinPartitions(*sort_cols)
+        .sortWithinPartitions(*_write_order(table))
         .write.mode("append")
         .partitionBy("date")
     )
@@ -237,7 +232,12 @@ def _fused_metrics_writer(metrics: DataFrame, cfg: PipelineConfig) -> StreamingQ
     Each block aggregates on its own into plain appends, possibly
     several rows per minute across blocks — EXACT parity with the
     reference MVs, which aggregate each ClickHouse insert block
-    independently into a plain-MergeTree target (res/schema.sql:30,49)."""
+    independently into a plain-MergeTree target (res/schema.sql:30,49).
+    Each rollup block is written sorted by its table's ORDER BY key
+    (``SORT_KEYS``, res/schema.sql:33,65), as a MergeTree part is. The
+    rollups take no rebalance: their groupBy exchange is already
+    AQE-sized, and only the detail write reads the core-split text
+    source directly."""
     rollups = {"metrics_gauge_lts": gauge_rollup, "metrics_counter_lts": counter_rollup}
     if cfg.uniq_mv:
         rollups["metrics_uniq_lts"] = uniq_rollup
@@ -250,6 +250,7 @@ def _fused_metrics_writer(metrics: DataFrame, cfg: PipelineConfig) -> StreamingQ
                 (
                     rollup(batch)
                     .withColumn("date", F.to_date("when"))
+                    .sortWithinPartitions(*_write_order(table))
                     .write.mode("append")
                     .partitionBy("date")
                     .parquet(os.path.join(cfg.out_dir, table))
