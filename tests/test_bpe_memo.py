@@ -45,6 +45,20 @@ def test_inmemory_frames_never_memoized(spark):
     assert ma[0] == "ab" and mb[0] == "zz"
 
 
+def test_inmemory_vocab_unpersisted_after_learning(spark):
+    """A vocab nothing memoizes is released once learning is done:
+    repeated bpe_apply calls over an in-memory frame leave the session's
+    persistent-RDD count where it was."""
+    docs = spark.createDataFrame(
+        [(1, "ccdc ccdc ccdc"), (2, "cdcd cdcd")], "doc_id long, text string"
+    )
+    jsc = spark.sparkContext._jsc
+    before = jsc.getPersistentRDDs().size()
+    for _ in range(3):
+        assert bpe_apply(docs, n_merges=2).count() == 2
+    assert jsc.getPersistentRDDs().size() == before
+
+
 def test_eviction_safety_results_survive_unpersist(spark):
     """The memoized vocab is persist()ed, so a cache eviction (simulated
     with an explicit unpersist) must only cost a recompute — bpe_apply

@@ -58,6 +58,9 @@ def test_hamming_masks_bit_identical(spark):
     # 64-bit-wide masks exercise the full bigint range path
     masks64 = [1 << i for i in range(64 - 1)] + [(1 << 63) - 1]
     _assert_identical(spark, masks64, "array<bigint>")
+    # simhash_hamming_pairs ships 64-bit masks as signed BIGINT patterns:
+    # bit 0's mask 1 << 63 travels as -(1 << 63)
+    _assert_identical(spark, [-(1 << 63)] + [1 << (63 - p) for p in range(1, 64)], "array<bigint>")
 
 
 def test_adversarial_doubles_bit_identical(spark):
@@ -88,10 +91,21 @@ def test_rejects_int_outside_int64(spark):
             lit_array([v], "array<bigint>")
 
 
-def test_simhash_pairs_at_64_bits_fails_at_build(spark):
-    # 64-bit masks include 1 << 63, one past the largest bigint
-    from yamon_spark.operators.dedup import simhash_hamming_pairs
+@pytest.mark.parametrize("bits", [0, 65])
+def test_simhash_rejects_unsupported_width_before_any_job(spark, bits):
+    # widths outside 1..64 have no BIGINT-word packing; both entry
+    # points refuse them while building, before any Spark job runs
+    from yamon_spark.operators.dedup import simhash, simhash_hamming_pairs
 
+    sc = spark.sparkContext
     docs = spark.createDataFrame([(1, "a b c"), (2, "a b d")], "doc_id long, text string")
-    with pytest.raises(ValueError, match="int64"):
-        simhash_hamming_pairs(docs, bits=64, max_hamming=1)
+    group = f"simhash-width-{bits}"
+    sc.setJobGroup(group, group, interruptOnCancel=False)
+    try:
+        for build in (simhash, simhash_hamming_pairs):
+            with pytest.raises(ValueError, match="1..64"):
+                build(docs, bits=bits)
+        assert sc.statusTracker().getJobIdsForGroup(group) == []
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)

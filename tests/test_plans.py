@@ -64,7 +64,6 @@ BNLJ_OK = {
     "embed_pca_power",  # broadcast mean-row + d-element iterate vector rounds
     "source_divergence",  # broadcast of the ONE corpus-total row
     "text_tfidf_pairs",  # broadcast of the ONE corpus-count row
-    "dedup_simhash64_pairs",  # broadcast of the constant 2,080-row mask table
     "quality_logit_train",  # broadcast 1-row stats + weight frames each round
     "quality_head_calibration",  # same 1-row stats/weight broadcasts + bin agg
     "quality_threshold_sweep",  # same chain + one 27-cell conditional-sum agg

@@ -10,6 +10,7 @@ pair into one symbol).
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from yamon_spark.operators.dedup import ngram_containment_pairs, ngram_jaccard_pairs
@@ -261,12 +262,11 @@ def test_mix_budget_plan_caps_and_conserves(spark):
     assert abs(sum(r.temp_share for r in rows) - 1.0) < 0.01
 
 
-def test_simhash_hamming_pairs_semantics(spark):
+@pytest.mark.parametrize("bits", [16, 32, 64])
+def test_simhash_hamming_pairs_semantics(spark, bits):
     """Identical docs pair at Hamming 0; a doc with a disjoint vocabulary
     pairs with nothing; every emitted pair is within the ball and ordered
-    doc_a < doc_b."""
-    from pyspark.sql import functions as F
-
+    doc_a < doc_b — at one-word and two-word widths alike."""
     from yamon_spark.operators.dedup import simhash, simhash_hamming_pairs
 
     rows = [
@@ -275,17 +275,21 @@ def test_simhash_hamming_pairs_semantics(spark):
         (2, "qq ww ee rr tt yy uu ii oo pp"),  # disjoint vocab
     ]
     docs = spark.createDataFrame(rows, "doc_id long, text string")
-    pairs = {(r.doc_a, r.doc_b): r.hamming for r in simhash_hamming_pairs(docs).collect()}
+    pairs = {(r.doc_a, r.doc_b): r.hamming for r in simhash_hamming_pairs(docs, bits).collect()}
     assert pairs.get((0, 1)) == 0  # identical text -> identical fingerprint
     assert all(a < b for a, b in pairs)  # pair direction fixed
     assert all(h <= 2 for h in pairs.values())  # inside the declared ball
     # the ball membership matches the fingerprints exactly
-    fps = {r.doc_id: r.simhash for r in simhash(docs, bits=32).collect()}
+    fps = {r[0]: tuple(r[1:]) for r in simhash(docs, bits=bits).collect()}
+
+    def ham(a, b):
+        return sum(bin(x ^ y).count("1") for x, y in zip(fps[a], fps[b]))
+
     for (a, b), h in pairs.items():
-        assert bin(fps[a] ^ fps[b]).count("1") == h
+        assert ham(a, b) == h
     for a in fps:
         for b in fps:
-            if a < b and bin(fps[a] ^ fps[b]).count("1") <= 2:
+            if a < b and ham(a, b) <= 2:
                 assert (a, b) in pairs  # no ball member missed
 
 
@@ -369,19 +373,11 @@ def test_simhash64_two_word_packing_and_pairs(spark):
     """The 64-bit two-word fingerprint: hi/lo pack the first 16 md5
     nibbles exactly (brute-force recompute per doc), identical docs pair
     at Hamming 0, every pair is inside the declared ball, and no ball
-    member is missed. The mask table is C(64,1)+C(64,2) = 2,080 rows
-    and the plan broadcasts it (no shuffle for the expansion)."""
+    member is missed. The mask expansion is a literal explode, so the
+    plan has no nested-loop join."""
     import hashlib
 
-    from yamon_spark.operators.dedup import (
-        simhash64,
-        simhash64_hamming_pairs,
-        simhash64_masks,
-    )
-
-    masks = simhash64_masks(2)
-    assert len(masks) == 64 + 64 * 63 // 2 == 2080
-    assert all(0 <= mhi < 2**32 and 0 <= mlo < 2**32 for mhi, mlo in masks)
+    from yamon_spark.operators.dedup import simhash, simhash_hamming_pairs
 
     rows = [
         (0, "alpha beta gamma delta epsilon zeta eta theta"),
@@ -389,7 +385,7 @@ def test_simhash64_two_word_packing_and_pairs(spark):
         (2, "qq ww ee rr tt yy uu ii oo pp"),  # disjoint vocab
     ]
     docs = spark.createDataFrame(rows, "doc_id long, text string")
-    fps = {r.doc_id: (r.sim_hi, r.sim_lo) for r in simhash64(docs).collect()}
+    fps = {r.doc_id: (r.sim_hi, r.sim_lo) for r in simhash(docs, bits=64).collect()}
 
     def brute(text: str) -> tuple[int, int]:
         votes = [0] * 64
@@ -405,7 +401,8 @@ def test_simhash64_two_word_packing_and_pairs(spark):
     for doc_id, text in rows:
         assert fps[doc_id] == brute(text), doc_id
 
-    pairs = {(r.doc_a, r.doc_b): r.hamming for r in simhash64_hamming_pairs(docs).collect()}
+    pairs_df = simhash_hamming_pairs(docs, bits=64)
+    pairs = {(r.doc_a, r.doc_b): r.hamming for r in pairs_df.collect()}
     assert pairs.get((0, 1)) == 0
     assert all(a < b for a, b in pairs)
     assert all(h <= 2 for h in pairs.values())
@@ -420,8 +417,8 @@ def test_simhash64_two_word_packing_and_pairs(spark):
             if a < b and ham(a, b) <= 2:
                 assert (a, b) in pairs
 
-    plan = simhash64_hamming_pairs(docs)._jdf.queryExecution().executedPlan().toString()
-    assert "BroadcastExchange" in plan  # the mask table never shuffles
+    plan = pairs_df._jdf.queryExecution().executedPlan().toString()
+    assert "BroadcastNestedLoopJoin" not in plan  # masks explode from one literal
 
 
 def test_tokenizer_fertility_closed_form(spark):

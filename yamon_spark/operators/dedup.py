@@ -16,7 +16,7 @@ Four strategies, cheapest to richest:
                       verified with exact Jaccard. Hashes are md5 hex
                       strings (engine-independent total order) so the
                       DuckDB oracle reproduces signatures bit-for-bit.
-4. simhash          — 16-bit SimHash fingerprint from word unigrams
+4. simhash          — 1-64 bit SimHash fingerprint from word unigrams
                       (per-bit majority vote over md5-derived bits).
 
 Scale notes: every strategy is shuffle-by-hash-key (uniform); LSH band
@@ -530,8 +530,27 @@ def minhash_estimate_error(
     )
 
 
+def _simhash_words(bits: int) -> list[tuple[str, range]]:
+    """(column, bit positions) of each BIGINT word of a ``bits``-wide
+    fingerprint: bits 0-31 in the first word, 32-63 in the second. Bit j
+    of a word spanning positions ``span`` weighs 2^(span[-1] - j), most
+    significant bit first. One word is named ``simhash``; two are
+    ``sim_hi`` and ``sim_lo`` — two because bit 0's weight 2^63 would
+    overflow a signed BIGINT in both engines, and the split keeps every
+    value exact."""
+    if not 1 <= bits <= 64:
+        raise ValueError(f"simhash width must be 1..64 bits, got {bits}")
+    spans = [range(k, min(k + 32, bits)) for k in range(0, bits, 32)]
+    names = ["simhash"] if len(spans) == 1 else ["sim_hi", "sim_lo"]
+    return list(zip(names, spans))
+
+
 def simhash(docs: DataFrame, bits: int = 16, ordered: bool = True) -> DataFrame:
-    """Per-doc SimHash fingerprint from distinct word unigrams.
+    """Per-doc SimHash fingerprint from distinct word unigrams, 1 to 64
+    bits wide, packed into BIGINT words by :func:`_simhash_words` —
+    ``(doc_id, simhash)`` up to 32 bits, ``(doc_id, sim_hi, sim_lo)``
+    above (64 bits is the Manku et al. 2007 production operating point,
+    where the fingerprint space cannot saturate at any corpus size).
 
     Bit j of a word's hash = bit (3 - j%4) of hex nibble j//4 of
     md5(word); fingerprint bit j = 1 iff the majority of words set bit j.
@@ -541,6 +560,7 @@ def simhash(docs: DataFrame, bits: int = 16, ordered: bool = True) -> DataFrame:
     (the Hamming pair expansion) whose joins/groupBys would only throw
     the global sort away.
     """
+    words = _simhash_words(bits)
     w = F.array_distinct(words_col(F.col("text")))
     base = _spread(docs.select("doc_id", "text"), "doc_id")
     exploded = base.select("doc_id", F.explode(w).alias("word")).withColumn("h", F.md5("word"))
@@ -552,10 +572,9 @@ def simhash(docs: DataFrame, bits: int = 16, ordered: bool = True) -> DataFrame:
     # char n+1 contributes nib_n * 16^(7 - n%8), so bit (3 - j%4) of
     # nib j//4 lands at 4*(7 - (j//4)%8) + (3 - j%4) = 31 - j%32 —
     # identical bits, identical votes, identical fingerprints.
-    n_half = (bits + 31) // 32
     halves = [
         F.conv(F.substring("h", 8 * k + 1, 8), 16, 10).cast("bigint").alias(f"hf{k}")
-        for k in range(n_half)
+        for k in range(len(words))
     ]
     decoded = exploded.select("doc_id", *halves)
     # per-bit vote/fingerprint expressions built as SQL strings (r14):
@@ -568,13 +587,15 @@ def simhash(docs: DataFrame, bits: int = 16, ordered: bool = True) -> DataFrame:
         for j in range(bits)
     ]
     votes = decoded.groupBy("doc_id").agg(*bit_sums)
-    fp = F.expr(
-        " + ".join(
-            f"(CASE WHEN b{j} > 0 THEN {2 ** (bits - 1 - j)} ELSE 0 END)"
-            for j in range(bits)
+    packed = [
+        F.expr(
+            " + ".join(f"(CASE WHEN b{j} > 0 THEN {1 << (span[-1] - j)} ELSE 0 END)" for j in span)
         )
-    )
-    out = votes.select("doc_id", fp.cast("bigint").alias("simhash"))
+        .cast("bigint")
+        .alias(name)
+        for name, span in words
+    ]
+    out = votes.select("doc_id", *packed)
     return out.orderBy("doc_id") if ordered else out
 
 
@@ -661,32 +682,48 @@ def simhash_hamming_pairs(docs: DataFrame, bits: int = 32, max_hamming: int = 2)
     honest operating point for this corpus: at 16 bits the space is so
     coarse that ~30% of ALL pairs land within 3 bits (measured 3.85M
     pairs at sf0.1) — matches become vocabulary noise, not duplication.
+    At 64 bits the space never saturates, so the distinct-fingerprint
+    count is the corpus size.
 
     Scale shape — the naive plans both fail at 100 TB (all-pairs is
     quadratic; short band-buckets are corpus/2^4-sized, so bucket combos
     are quadratic too). Instead candidates come from the
     DISTINCT-fingerprint table: each distinct fp expands to its
-    C(bits,1..max_hamming) XOR-mask neighbors (528 masks at 32/2) and
-    hash-joins back against the distinct table — |distinct fps| x masks
-    rows, linear in the distinct-fingerprint count with a small constant
-    (and capped by 2^bits absolutely); the final doc-level fan-out is
-    bounded by true duplication structure (same bound every dedup op
-    has). Hamming is integer-exact (bit_count of XOR) — no rounding
-    contract needed."""
+    C(bits,1..max_hamming) XOR-mask neighbors (528 masks at 32/2, 2,080
+    at 64/2) and hash-joins back against the distinct table on every
+    word — |distinct fps| x masks rows, linear in the
+    distinct-fingerprint count with a small constant (and capped by
+    2^bits absolutely); the final doc-level fan-out is bounded by true
+    duplication structure (same bound every dedup op has). Hamming is
+    integer-exact (the sum of bit_count of each word's XOR) — no
+    rounding contract needed."""
+    from functools import reduce
     from itertools import combinations
 
+    words = _simhash_words(bits)
+    cols = [name for name, _ in words]
+    fa = [f"fa{k}" for k in range(len(words))]
+    fb = [f"fb{k}" for k in range(len(words))]
     # combinatorial mask generation — NOT a 2^bits scan (range(2^32) at
-    # call time is a 4-billion-iteration hang)
+    # call time is a 4-billion-iteration hang). Each mask is one XOR
+    # pattern over the whole fingerprint read as a bits-wide number
+    # (sim_hi above sim_lo), carried as the two's-complement BIGINT of
+    # its 64-bit value; a shift and an AND cut out each word's part. A
+    # nested array<array<bigint>> of per-word masks was measured
+    # 0.4-2.7 s slower to BUILD at 64 bits: the analyzer walks 2,080
+    # CreateArray children before constant folding.
     masks = [
         sum(1 << i for i in pos)
         for r in range(1, max_hamming + 1)
         for pos in combinations(range(bits), r)
     ]
-    # one array<bigint> Literal node, not 528 CreateArray children
-    # (plan-size guard; values and coercion identical), built in one
-    # py4j round trip (r14 — see _fastlit) and before the checkpoint job,
-    # so a mask outside int64 (bits=64 gives 1 << 63) fails before any job
-    mask_lit = lit_array([int(m) for m in masks], "array<bigint>")
+    # one array<bigint> Literal node, not a CreateArray child per mask
+    # (plan-size guard), built in one py4j round trip (r14 — see _fastlit)
+    mask_lit = lit_array([m - (1 << 64) if m >> 63 else m for m in masks], "array<bigint>")
+    word_masks = [
+        F.expr(f"shiftrightunsigned(m, {bits - 1 - span[-1]}) & {(1 << len(span)) - 1}")
+        for _, span in words
+    ]
 
     # The fingerprint subtree feeds FOUR consumers below (distinct fps,
     # the existence probe, both doc-id attach sides); without a
@@ -704,30 +741,34 @@ def simhash_hamming_pairs(docs: DataFrame, bits: int = 32, max_hamming: int = 2)
     # away, so simhash()'s output orderBy would be a dead Sort in the
     # checkpoint job.
     fps = simhash(docs, bits, ordered=False).localCheckpoint()
-    d = fps.select(F.col("simhash").alias("fa")).distinct()
-    # neighbor expansion over the DISTINCT fp table; fb > fa halves the
-    # space and fixes pair direction at the fp level
-    nb = (
-        d.select("fa", F.explode(mask_lit).alias("m"))
-        .select("fa", F.col("fa").bitwiseXOR(F.col("m")).alias("fb"))
-        .where(F.col("fb") > F.col("fa"))
+    d = fps.select(*[F.col(c).alias(a) for c, a in zip(cols, fa)]).distinct()
+    # neighbor expansion over the DISTINCT fp table; a lexicographic
+    # fb > fa over the words halves the space and fixes pair direction
+    # at the fp level
+    after = F.col(fb[-1]) > F.col(fa[-1])
+    for x, y in reversed(list(zip(fa, fb))[:-1]):
+        after = (F.col(y) > F.col(x)) | ((F.col(y) == F.col(x)) & after)
+    xors = [F.col(x).bitwiseXOR(m).alias(y) for x, y, m in zip(fa, fb, word_masks)]
+    nb = d.select(*fa, F.explode(mask_lit).alias("m")).select(*fa, *xors).where(after)
+    fpp = nb.join(d.select(*[F.col(a).alias(b) for a, b in zip(fa, fb)]), fb)  # neighbors that exist
+    a = fps.select(F.col("doc_id").alias("ida"), *[F.col(c).alias(x) for c, x in zip(cols, fa)])
+    b = fps.select(F.col("doc_id").alias("idb"), *[F.col(c).alias(x) for c, x in zip(cols, fb)])
+    hamming = reduce(
+        lambda x, y: x + y, [F.bit_count(F.col(x).bitwiseXOR(F.col(y))) for x, y in zip(fa, fb)]
     )
-    fpp = nb.join(d.select(F.col("fa").alias("fb")), "fb")  # neighbors that exist
-    a = fps.select(F.col("doc_id").alias("ida"), F.col("simhash").alias("fa"))
-    b = fps.select(F.col("doc_id").alias("idb"), F.col("simhash").alias("fb"))
     cross = (
-        fpp.join(a, "fa")
-        .join(b, "fb")
+        fpp.join(a, fa)
+        .join(b, fb)
         .select(
             F.least("ida", "idb").alias("doc_a"),
             F.greatest("ida", "idb").alias("doc_b"),
-            F.bit_count(F.col("fa").bitwiseXOR(F.col("fb"))).cast("int").alias("hamming"),
+            hamming.cast("int").alias("hamming"),
         )
     )
     # hamming-0 pairs: docs sharing a fingerprint — posting-list combos,
     # bounded by real dup-group sizes (the exact-dedup bound)
     groups = (
-        fps.groupBy("simhash")
+        fps.groupBy(*cols)
         .agg(F.array_sort(F.collect_list("doc_id")).alias("docs"))
         .where(F.size("docs") >= 2)
     )
@@ -812,130 +853,6 @@ def ngram_containment_pairs(
         .where(F.col("containment") >= threshold)
         .orderBy("doc_a", "doc_b")
     )
-
-
-def simhash64(docs: DataFrame, ordered: bool = True) -> DataFrame:
-    """64-bit SimHash fingerprints as TWO 32-bit words (sim_hi = bits
-    0-31, sim_lo = bits 32-63), each stored in a BIGINT — the Manku
-    et al. 2007 production operating point, where the fingerprint space
-    (2^64) cannot saturate at any corpus size. Two words rather than one
-    64-bit value because bit 0's weight 2^63 overflows signed BIGINT in
-    both engines; the split keeps every value exact and the Hamming
-    metric decomposes as bit_count(hi XOR) + bit_count(lo XOR).
-
-    Same majority-vote construction as :func:`simhash`: word-hash bit
-    j = bit (3 - j%4) of hex nibble j//4 of md5(word) — 64 bits consume
-    all 16 leading nibbles of the digest. One explode + one groupBy, no
-    extra shuffle versus the 32-bit path."""
-    w = F.array_distinct(words_col(F.col("text")))
-    base = _spread(docs.select("doc_id", "text"), "doc_id")
-    exploded = base.select("doc_id", F.explode(w).alias("word")).withColumn("h", F.md5("word"))
-    # 32-bit-half conv decode + shiftright bit extraction — see simhash()
-    # (r13): two conv calls per word instead of 16 instr/substring
-    # probes; bit j of half j//32 sits at position 31 - (j % 32)
-    halves = [
-        F.conv(F.substring("h", 8 * k + 1, 8), 16, 10).cast("bigint").alias(f"hf{k}")
-        for k in range(2)
-    ]
-    decoded = exploded.select("doc_id", *halves)
-    # SQL-string expression build — same rationale and equivalence
-    # argument as simhash() above (r14)
-    bit_sums = [
-        F.expr(f"sum((shiftright(hf{j // 32}, {31 - (j % 32)}) & 1) * 2 - 1)").alias(f"b{j}")
-        for j in range(64)
-    ]
-    votes = decoded.groupBy("doc_id").agg(*bit_sums)
-    word = lambda js: F.expr(  # noqa: E731
-        " + ".join(f"(CASE WHEN b{j} > 0 THEN {1 << (31 - j % 32)} ELSE 0 END)" for j in js)
-    )
-    out = votes.select(
-        "doc_id",
-        word(range(32)).cast("bigint").alias("sim_hi"),
-        word(range(32, 64)).cast("bigint").alias("sim_lo"),
-    )
-    return out.orderBy("doc_id") if ordered else out
-
-
-def simhash64_masks(max_hamming: int = 2) -> list[tuple[int, int]]:
-    """(mhi, mlo) XOR-mask pairs for every Hamming ball point at
-    distance 1..max_hamming over 64 bit positions — 2,080 masks at
-    max_hamming=2 (C(64,1) + C(64,2)). Bit p < 32 lands in the hi word
-    with weight 2^(31-p); p >= 32 in the lo word with weight 2^(63-p),
-    matching :func:`simhash64`'s packing."""
-    from itertools import combinations
-
-    out = []
-    for r in range(1, max_hamming + 1):
-        for pos in combinations(range(64), r):
-            mhi = sum(1 << (31 - p) for p in pos if p < 32)
-            mlo = sum(1 << (63 - p) for p in pos if p >= 32)
-            out.append((mhi, mlo))
-    return out
-
-
-def simhash64_hamming_pairs(docs: DataFrame, max_hamming: int = 2) -> DataFrame:
-    """SimHash near-dup pairs at the 64-bit production operating point
-    — the two-word twin of :func:`simhash_hamming_pairs`. Candidates
-    come from the DISTINCT-(hi,lo) fingerprint table cross-joined with
-    a BROADCAST 2,080-row mask table (a driver-side constant — never a
-    shuffle), XOR-expanded, and hash-joined back against the distinct
-    table on both words; the final doc fan-out is bounded by true
-    duplication structure. |distinct fps| x 2,080 rows is linear in the
-    distinct-fingerprint count, and at 64 bits that count is the corpus
-    size (no saturation), so the plan's constant is the whole story —
-    measured sub-linear at 30x in SCALE_CURVE.json. Hamming is
-    integer-exact: bit_count(hi XOR) + bit_count(lo XOR)."""
-    spark = docs.sparkSession
-    # same four-consumer shape as simhash_hamming_pairs: eager
-    # localCheckpoint runs the expensive vote chain once instead of per
-    # consumer copy (see the comment there; repartition-for-reuse probed
-    # and rejected, ordered=False drops the dead output Sort)
-    fps = simhash64(docs, ordered=False).localCheckpoint()
-    masks = spark.createDataFrame(simhash64_masks(max_hamming), "mhi bigint, mlo bigint")
-    d = fps.select(F.col("sim_hi").alias("fa_hi"), F.col("sim_lo").alias("fa_lo")).distinct()
-    nb = (
-        d.crossJoin(F.broadcast(masks))
-        .select(
-            "fa_hi",
-            "fa_lo",
-            F.col("fa_hi").bitwiseXOR(F.col("mhi")).alias("fb_hi"),
-            F.col("fa_lo").bitwiseXOR(F.col("mlo")).alias("fb_lo"),
-        )
-        # lexicographic (hi, lo) direction fix halves the space
-        .where(
-            (F.col("fb_hi") > F.col("fa_hi"))
-            | ((F.col("fb_hi") == F.col("fa_hi")) & (F.col("fb_lo") > F.col("fa_lo")))
-        )
-    )
-    exists = d.select(F.col("fa_hi").alias("fb_hi"), F.col("fa_lo").alias("fb_lo"))
-    fpp = nb.join(exists, ["fb_hi", "fb_lo"])
-    a = fps.select(F.col("doc_id").alias("ida"), F.col("sim_hi").alias("fa_hi"), F.col("sim_lo").alias("fa_lo"))
-    b = fps.select(F.col("doc_id").alias("idb"), F.col("sim_hi").alias("fb_hi"), F.col("sim_lo").alias("fb_lo"))
-    cross = (
-        fpp.join(a, ["fa_hi", "fa_lo"])
-        .join(b, ["fb_hi", "fb_lo"])
-        .select(
-            F.least("ida", "idb").alias("doc_a"),
-            F.greatest("ida", "idb").alias("doc_b"),
-            (
-                F.bit_count(F.col("fa_hi").bitwiseXOR(F.col("fb_hi")))
-                + F.bit_count(F.col("fa_lo").bitwiseXOR(F.col("fb_lo")))
-            )
-            .cast("int")
-            .alias("hamming"),
-        )
-    )
-    groups = (
-        fps.groupBy("sim_hi", "sim_lo")
-        .agg(F.array_sort(F.collect_list("doc_id")).alias("docs"))
-        .where(F.size("docs") >= 2)
-    )
-    lvl1 = groups.select("docs", F.posexplode("docs").alias("i", "doc_a"))
-    same = lvl1.select(
-        "doc_a",
-        F.explode(F.slice("docs", F.col("i") + 2, F.size("docs"))).alias("doc_b"),
-    ).select("doc_a", "doc_b", F.lit(0).cast("int").alias("hamming"))
-    return cross.unionByName(same).orderBy("doc_a", "doc_b")
 
 
 def dedup_threshold_sweep(

@@ -495,7 +495,11 @@ def _bpe_vocab_merges(docs: DataFrame, n_merges: int):
         if not top:
             break
         merges.append(top[0]["pair"])
-    if key is not None:
+    if key is None:
+        # nothing will reuse an unmemoized vocab: release its blocks (the
+        # caller's plan recomputes it from lineage) instead of leaking them
+        vocab.unpersist()
+    else:
         _BPE_MEMO[key] = (vocab, merges)
     return vocab, merges
 

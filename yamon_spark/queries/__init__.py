@@ -144,7 +144,7 @@ _DRIVER_GREEN_ROUND: dict[str, int] = {
     # r10-vintage
     "dedup_canonical": 10, "dedup_cluster_sizes": 10,
     "dedup_incremental": 10, "dedup_lsh_band_tuning": 10,
-    "dedup_simhash_pairs": 10, "doc_length_survival": 10, "domain_mix": 10,
+    "doc_length_survival": 10, "domain_mix": 10,
     "embed_intrinsic_dim": 10, "embed_kmeans": 10, "embed_pca_power": 10,
     "mix_repeat_plan": 10, "pack_sequences": 10, "q10_inner_join_dims": 10,
     "q11_left_outer_count": 10, "q12_semi_join": 10, "q24_rollup": 10,
@@ -165,7 +165,6 @@ _DRIVER_GREEN_ROUND: dict[str, int] = {
     # r11-vintage
     "bpe_apply": 11, "contamination_ngram": 11, "dedup_clusters": 11,
     "dedup_exact": 11, "dedup_jaccard": 11, "dedup_minhash_lsh": 11,
-    "dedup_simhash": 11, "dedup_simhash64": 11, "dedup_simhash64_pairs": 11,
     "dedup_survivors": 11, "embed_centroids": 11, "embed_norm_stats": 11,
     "multimodal_audio_windows": 11, "multimodal_features": 11,
     "multimodal_frames": 11, "multimodal_jpeg_roundtrip": 11,

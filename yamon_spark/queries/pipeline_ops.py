@@ -1200,7 +1200,7 @@ def _simhash64_cte() -> str:
     """CTE chain ending in `sims(doc_id, sim_hi, sim_lo)` — the two-word
     64-bit fingerprint (bit j of word-hash = bit (3 - j%4) of md5 nibble
     j//4; hi = bits 0-31 weighted 2^(31-j), lo = bits 32-63 weighted
-    2^(63-j)), mirroring operators.dedup.simhash64 exactly."""
+    2^(63-j)), mirroring operators.dedup.simhash(bits=64) exactly."""
     bit_exprs = []
     for j in range(64):
         nib = f"(strpos('0123456789abcdef', substr(h, {j // 4 + 1}, 1)) - 1)"
@@ -1281,9 +1281,9 @@ _SIMHASH64_PAIRS_ORACLE = f"""
     ),
 )
 def dedup_simhash64_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from yamon_spark.operators.dedup import simhash64
+    from yamon_spark.operators.dedup import simhash
 
-    return simhash64(table(spark, sf_dir, "documents"))
+    return simhash(table(spark, sf_dir, "documents"), bits=64)
 
 
 @register(
@@ -1292,16 +1292,16 @@ def dedup_simhash64_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     doc=(
         "SimHash near-dup pairs within Hamming<=2 over 64-bit two-word "
         "fingerprints (the Manku production configuration): distinct "
-        "(hi,lo) table cross-joined with a broadcast 2,080-row XOR-mask "
-        "table (C(64,1)+C(64,2)) and hash-joined back on both words - "
+        "(hi,lo) table expanded through the 2,080 XOR-mask neighbors "
+        "(C(64,1)+C(64,2)) and hash-joined back on both words - "
         "|distinct fps| x 2,080 rows, linear; Hamming = bit_count(hi "
         "XOR) + bit_count(lo XOR), integer-exact."
     ),
 )
 def dedup_simhash64_pairs_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from yamon_spark.operators.dedup import simhash64_hamming_pairs
+    from yamon_spark.operators.dedup import simhash_hamming_pairs
 
-    return simhash64_hamming_pairs(table(spark, sf_dir, "documents"), max_hamming=2)
+    return simhash_hamming_pairs(table(spark, sf_dir, "documents"), bits=64, max_hamming=2)
 
 
 _INCR_ORACLE = (
