@@ -5,19 +5,30 @@ local[$SPARK_GRAFT_CPUS] and print ONE JSON line:
 
 Each query executes through a noop sink (full plan incl. sorts, no
 driver collect overhead). Session startup and JIT warm-up are excluded.
+Every timed run goes through :func:`timed`, which also records the
+query's layers (build seconds, exec seconds, Spark jobs); bench_out.json
+keeps them under ``layers`` for the pass whose wall is kept.
 """
 
 from __future__ import annotations
 
+import importlib.util
 import json
 import os
 import sys
 import time
 
-sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
+ROOT = os.path.dirname(os.path.abspath(__file__))
+sys.path.insert(0, ROOT)
 
 from yamon_spark.queries import all_queries
 from yamon_spark.session import get_spark
+
+# perfbench's tracer, loaded by file path: putting perfbench/ on sys.path
+# would let its flat module names (gen, metrics, tables, run) shadow others
+_SPEC = importlib.util.spec_from_file_location("perfbench_spans", os.path.join(ROOT, "perfbench", "spans.py"))
+spans = importlib.util.module_from_spec(_SPEC)
+_SPEC.loader.exec_module(spans)
 
 # Fresh-session headline basket: the cross-round perf anchor. The warm
 # sweep's totals drift ~13%/round from JVM/session aging alone (r11->r12
@@ -46,20 +57,47 @@ FRESH_HEADLINE = [
 ]
 
 
+def tracer_for(spark, run_id: str):
+    """A perfbench Tracer whose job spans count this session's jobs."""
+    tracer = spans.Tracer(run_id)
+    tracer.sc = spark.sparkContext
+    return tracer
+
+
+def timed(tracer, name: str, build) -> dict:
+    """Run ``build()`` to Spark's noop sink through perfbench's
+    ``run_query``: the wall (2 dp, the contract's precision) is its build
+    plus exec seconds, and ``jobs`` counts the Spark jobs both launched.
+    Exceptions from the build or the action propagate."""
+    build_s, exec_s = spans.run_query(tracer, name, build)
+    # run_query appends its build, exec and query spans last; the query
+    # span carries no job count
+    jobs = sum(s.get("jobs", 0) for s in tracer.spans[-3:])
+    return {
+        "wall": round(build_s + exec_s, 2),
+        "build_s": round(build_s, 3),
+        "exec_s": round(exec_s, 3),
+        "jobs": jobs,
+    }
+
+
+def _layers(rec: dict) -> dict:
+    return {k: rec[k] for k in ("build_s", "exec_s", "jobs")}
+
+
 def fresh_one(name: str, sf_dir: str) -> None:
-    """Child-process mode: measure ONE query in this fresh JVM."""
+    """Child-process mode: measure ONE query in this fresh JVM; the
+    RESULT line carries both walls and the faster run's layers."""
     spark = get_spark("yamon-bench-fresh", data_dir=sf_dir)
     spark.sparkContext.setLogLevel("ERROR")
     build = all_queries()[name].build
     warm_dir = "/root/testdata/sf0.001"
     if os.path.isdir(warm_dir) and warm_dir != sf_dir:
         build(spark, warm_dir).write.format("noop").mode("overwrite").save()
-    walls = []
-    for _ in range(2):
-        t0 = time.perf_counter()
-        build(spark, sf_dir).write.format("noop").mode("overwrite").save()
-        walls.append(round(time.perf_counter() - t0, 2))
-    print("RESULT " + json.dumps({"walls": walls}), flush=True)
+    tracer = tracer_for(spark, "fresh")
+    recs = [timed(tracer, name, lambda: build(spark, sf_dir)) for _ in range(2)]
+    best = min(recs, key=lambda r: r["wall"])
+    print("RESULT " + json.dumps({"walls": [r["wall"] for r in recs], **_layers(best)}), flush=True)
 
 
 def fresh_headline_walls(sf_dir: str) -> dict[str, float]:
@@ -89,7 +127,7 @@ def fresh_headline_walls(sf_dir: str) -> dict[str, float]:
     return out
 
 
-def cpu_scale_probe(spark) -> dict:
+def cpu_scale_probe(spark, tracer) -> dict:
     """Core-count witness: one fixed CPU-bound job (pure compute — no
     shuffle, no input I/O, no Python) whose wall scales ~1/cores.
 
@@ -117,11 +155,7 @@ def cpu_scale_probe(spark) -> dict:
         .select(F.sum(F.length("h")).alias("s"))
     )
     job.write.format("noop").mode("overwrite").save()  # JIT warm-up
-    walls = []
-    for _ in range(2):
-        t0 = time.perf_counter()
-        job.write.format("noop").mode("overwrite").save()
-        walls.append(round(time.perf_counter() - t0, 2))
+    walls = [timed(tracer, "cpu_probe", lambda: job)["wall"] for _ in range(2)]
     return {"wall": min(walls), "rows": n}
 
 
@@ -180,15 +214,14 @@ def main() -> None:
     # the whole run and BENCH_r03 recorded no timings). Failures get a -1.0
     # sentinel in the timings map and are listed under "errors".
     errors: dict[str, str] = {}
+    tracer = tracer_for(spark, "bench")
 
-    def run_one(name: str) -> float:
-        t0 = time.perf_counter()
+    def run_one(name: str) -> dict | None:
         try:
-            qs[name].build(spark, sf_dir).write.format("noop").mode("overwrite").save()
+            return timed(tracer, name, lambda: qs[name].build(spark, sf_dir))
         except Exception as e:  # noqa: BLE001
             errors[name] = f"{type(e).__name__}: {e}"[:200]
-            return -1.0
-        return round(time.perf_counter() - t0, 2)
+            return None
 
     # Noise floor (uniform min-of-2): EVERY query is measured twice and
     # the min kept. This box shows sporadic multi-second CPU-steal
@@ -204,47 +237,44 @@ def main() -> None:
     # contention from a code regression because only the folded min was
     # recorded — the per-pass totals make a contended round visible in
     # the record itself (a quiet round has near-equal passes; a
-    # contended one shows a wide pass1/pass2 spread).
-    pass1: dict[str, float] = {}
-    for name in sorted(qs):
-        pass1[name] = run_one(name)
-    pass2: dict[str, float] = {}
-    for name in sorted(qs):
-        pass2[name] = run_one(name)
+    # contended one shows a wide pass1/pass2 spread). A failed run is
+    # None here and the -1.0 sentinel in the per-pass maps.
+    runs = [{name: run_one(name) for name in sorted(qs)} for _ in range(2)]
 
-    timings: dict[str, float] = {}
+    # per query, the fastest run that did not fail; its layers are kept
+    best: dict[str, dict] = {}
     for name in sorted(qs):
-        a, b = pass1[name], pass2[name]
-        timings[name] = b if a < 0 else (a if b < 0 else min(a, b))
+        ok_runs = [p[name] for p in runs if p[name] is not None]
+        if ok_runs:
+            best[name] = min(ok_runs, key=lambda r: r["wall"])
 
     # third-pass guard for anything still outlier-shaped (> 3x median in
     # BOTH passes — genuine heavyweights confirm themselves, doubly
     # contended ones collapse back)
-    ok = sorted(t for t in timings.values() if t >= 0)
+    ok = sorted(r["wall"] for r in best.values())
     med = ok[len(ok) // 2] if ok else 0.0
-    for name in [n for n, t in timings.items() if t > max(1.5, 3 * med)]:
+    for name in [n for n, r in best.items() if r["wall"] > max(1.5, 3 * med)]:
         third = run_one(name)
-        if third >= 0:
-            timings[name] = min(timings[name], third)
+        if third is not None and third["wall"] < best[name]["wall"]:
+            best[name] = third
 
+    timings = {name: best[name]["wall"] if name in best else -1.0 for name in sorted(qs)}
+    pass1, pass2 = ({n: r["wall"] if r else -1.0 for n, r in p.items()} for p in runs)
     total = round(sum(t for t in timings.values() if t >= 0), 3)
     sweep_attempts = [
         round(sum(t for t in p.values() if t >= 0), 2) for p in (pass1, pass2)
     ]
     # fresh-JVM anchor walls, AFTER the sweep (children are fresh
     # processes either way; running last keeps the warm sweep's thermal
-    # profile comparable to earlier rounds). SPARK_GRAFT_FRESH_HEADLINE=0
-    # skips it for quick local iterations.
-    fresh: dict[str, float] = {}
-    if os.environ.get("SPARK_GRAFT_FRESH_HEADLINE", "1") != "0":
-        fresh = fresh_headline_walls(sf_dir)
+    # profile comparable to earlier rounds)
+    fresh = fresh_headline_walls(sf_dir)
     # CPUS-contract legibility (PERF_r13 "suspect_cpus_ignored"): the
     # effective master / core count / AQE wide start ride the contract
     # line, plus one pure-compute probe whose wall actually scales with
     # cores at this SF (per-query walls don't — they are overhead-bound
     # at 17 MB input; directly measured, see OPTIMIZATION_r14.md).
     try:
-        cpu_probe = cpu_scale_probe(spark)
+        cpu_probe = cpu_scale_probe(spark, tracer)
     except Exception as e:  # noqa: BLE001 - the witness must not kill the bench
         cpu_probe = {"error": f"{type(e).__name__}: {e}"[:120]}
     init_parts = spark.conf.get(
@@ -263,12 +293,14 @@ def main() -> None:
         "queries": timings,
         "sweep_attempts": sweep_attempts,
         "sweep_passes": {"pass1": pass1, "pass2": pass2},
+        "layers": {name: _layers(r) for name, r in best.items()},
+        # seconds the tracer's own Spark calls added to the timed runs
+        "tracer_cost_s": round(tracer.cost_s, 3),
         "sf": float(sf) if sf.replace(".", "").isdigit() else sf,
         "ingest": ingest,
         "env": env,
+        "fresh_headline": fresh,
     }
-    if fresh:
-        result["fresh_headline"] = fresh
     if errors:
         result["errors"] = errors
     # Full result lands in bench_out.json; the stdout contract line must fit
@@ -280,26 +312,22 @@ def main() -> None:
     # path again (~49 cheapest ride "_rest" in r12); that is fine —
     # failures are never folded and full per-query detail stays in
     # bench_out.json.
-    with open(os.path.join(os.path.dirname(os.path.abspath(__file__)), "bench_out.json"), "w") as f:
+    with open(os.path.join(ROOT, "bench_out.json"), "w") as f:
         json.dump(result, f, indent=1)
     short = {_short_name(n): t for n, t in timings.items()}
     assert len(short) == len(timings), "short-name collision; fix _short_name"
     # stdout line drops the constant hosts=50 (kept in bench_out.json) and
-    # uses the shorter metric id; value/unit/queries/sf are unchanged
-    line = dict(
-        result,
+    # uses the shorter metric id; value/unit/queries/sf are unchanged. The
+    # two per-pass sweep totals ride the line (~20 chars); the per-pass
+    # maps, the per-query layers and the tracer's cost stay in
+    # bench_out.json
+    line = {k: v for k, v in result.items() if k not in ("sweep_passes", "layers", "tracer_cost_s")}
+    line.update(
         metric="total_wall",
         queries=short,
         # fresh-JVM anchor walls ride the line short-named and are NEVER
         # folded into _rest — they are the cross-round comparison signal
-        **(
-            {"fresh_headline": {_short_name(n): w for n, w in fresh.items()}}
-            if fresh
-            else {}
-        ),
-        # the two per-pass sweep totals ride the contract line (~20
-        # chars); full per-pass per-query maps stay in bench_out.json
-        sweep_passes=None,
+        fresh_headline={_short_name(n): w for n, w in fresh.items()},
         ingest={
             "rows_per_sec": ingest["rows_per_sec"],
             # the per-attempt record rides the contract line (~40 chars) so
@@ -309,7 +337,6 @@ def main() -> None:
             **({"attempts": ingest["attempts"]} if "attempts" in ingest else {}),
         },
     )
-    del line["sweep_passes"]
     # Hard cap: stay under the tail capture no matter how many queries are
     # registered — fold the CHEAPEST timings into one "_rest" bucket until
     # the encoded line fits (heavy hitters stay named; full detail is in

@@ -11,7 +11,6 @@ import sys
 sys.path.insert(0, ".")
 
 import duckdb
-import pandas as pd
 from pyspark.sql import SparkSession
 
 import __spark_entry__ as entrymod
@@ -34,7 +33,7 @@ print(f"entry(): {len(rows)} rows, schema={[f.name for f in df.schema.fields]}")
 assert len(rows) >= 0
 
 # 2. correctness: queries vs oracle_sql
-from yamon_spark.oracle import _canon
+from yamon_spark.oracle import _canon, compare_frames
 from yamon_spark.schema import TESTDATA_TABLES
 
 con = duckdb.connect()
@@ -62,27 +61,12 @@ for name in sorted(qs):
         fails.append((name, f"oracle error: {e}"))
         print(f"FAIL {name}: oracle error: {e}")
         continue
-    ok = len(sdf) == len(odf) and list(sdf.columns) == list(odf.columns)
-    if ok:
-        for c in sdf.columns:
-            a, b = sdf[c], odf[c]
-            if pd.api.types.is_float_dtype(a) or pd.api.types.is_float_dtype(b):
-                af = pd.to_numeric(a, errors="coerce").astype("float64")
-                bf = pd.to_numeric(b, errors="coerce").astype("float64")
-                if not ((af.isna() & bf.isna()) | (af - bf).abs().le(1e-9)).all():
-                    ok = False
-                    break
-            else:
-                aa = a.astype(object).where(pd.notna(a), None)
-                bb = b.astype(object).where(pd.notna(b), None)
-                if not aa.equals(bb):
-                    ok = False
-                    break
-    if ok:
+    r = compare_frames(name, sdf, odf)
+    if r.ok:
         print(f"PASS {name}: {len(sdf)} rows")
     else:
-        fails.append((name, f"mismatch rows {len(sdf)}/{len(odf)} col {c if ok is False else ''}"))
-        print(f"FAIL {name}: rows {len(sdf)}/{len(odf)}")
+        fails.append((name, r.detail))
+        print(f"FAIL {name}: {r.detail}")
 
 n_run = len([n for n in qs if not ONLY or n in ONLY])
 scope = f" ({len(qs) - n_run} skipped by filter)" if n_run != len(qs) else ""

@@ -106,14 +106,13 @@ def synthesize(spark, base: str, out_dir: str, factor: int) -> None:
 
 
 def time_op(build, spark, sf_dir: str, runs: int = 2) -> float:
-    """Min wall over `runs` executions through the noop sink (same
-    contention damping as bench.py on this steal-prone box)."""
-    best = float("inf")
-    for _ in range(runs):
-        t0 = time.perf_counter()
-        build(spark, sf_dir).write.format("noop").mode("overwrite").save()
-        best = min(best, time.perf_counter() - t0)
-    return best
+    """Min wall over `runs` executions through bench.py's timer, i.e. the
+    noop sink (same contention damping as bench.py on this steal-prone
+    box)."""
+    from bench import timed, tracer_for
+
+    tracer = tracer_for(spark, "scale")
+    return min(timed(tracer, "scale_op", lambda: build(spark, sf_dir))["wall"] for _ in range(runs))
 
 
 def fit_exponents(runs: dict) -> dict:
@@ -163,17 +162,7 @@ def write_curve(path: str, results: dict, factor: int, fresh: bool) -> dict:
         with open(path) as f:
             prev = json.load(f)
         out.update(prev)
-        prev_keys = set(prev.keys()) - {"ops", "factor"}
-        if "runs" not in out:
-            out["runs"] = {}
-        if "ops" in prev:  # migrate the old single-factor layout
-            out["runs"][str(prev.get("factor", "10"))] = prev["ops"]
-            # drop the legacy keys from OUT too (out.update(prev)
-            # copied them); leaving them makes every later run
-            # re-detect the legacy layout and clobber runs[factor]
-            # with this stale snapshot
-            out.pop("ops", None)
-            out.pop("factor", None)
+        prev_keys = set(prev.keys())
     # fresh-protocol results live under their own key: every wall in
     # "runs" is warm-sweep vintage, every wall in "fresh_runs" is
     # one-JVM-per-op; mixing them in one table would corrupt the

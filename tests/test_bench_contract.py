@@ -3,7 +3,8 @@
 shape — ONE parseable JSON stdout line with total/per-query timings,
 the per-pass sweep_attempts totals (added r12 so a contended round is
 distinguishable from a regression), and the ingest attempts record;
-bench_out.json additionally carries the full per-pass maps. Guards the
+bench_out.json additionally carries the full per-pass maps and each
+query's layers (build_s, exec_s, jobs) for the kept pass. Guards the
 emit path (short-name bijectivity, folding, sweep_passes stripping)
 that a full 213-query run only exercises after ~15 minutes."""
 
@@ -51,7 +52,8 @@ def test_bench_main_emits_contract_line(spark, monkeypatch, tmp_path):
         assert line["metric"] == "total_wall" and line["unit"] == "sec"
         assert line["value"] >= 0
         assert set(line["queries"]) == {"01", "ddx"}  # short names, bijective
-        assert "sweep_passes" not in line  # full maps stay in bench_out.json
+        # full per-pass maps and per-query layers stay in bench_out.json
+        assert "sweep_passes" not in line and "layers" not in line
         atts = line["sweep_attempts"]
         assert len(atts) == 2 and all(a >= 0 for a in atts)
         assert line["ingest"]["rows_per_sec"] > 0
@@ -73,6 +75,12 @@ def test_bench_main_emits_contract_line(spark, monkeypatch, tmp_path):
         for name in stub:
             passes = [full_art["sweep_passes"][p][name] for p in ("pass1", "pass2")]
             assert full_art["queries"][name] <= min(x for x in passes if x >= 0) + 1e-9
+            # the kept pass's layers: build + exec is its wall, within
+            # rounding (wall at 2 dp, layers at 3 dp)
+            layers = full_art["layers"][name]
+            assert abs(layers["build_s"] + layers["exec_s"] - full_art["queries"][name]) <= 0.006 + 1e-9
+            assert layers["jobs"] >= 1
+        assert full_art["tracer_cost_s"] >= 0
     finally:
         if saved is not None:
             with open(art_path, "w") as f:
@@ -114,7 +122,8 @@ def test_short_names_are_pinned():
 
 def test_fresh_one_subprocess_contract():
     """One real fresh-JVM child at sf0.001: prints a RESULT line with two
-    positive walls (the parent-side parser depends on this exact shape)."""
+    positive walls (the parent-side parser depends on this exact shape)
+    and the faster run's layers."""
     import subprocess
     import sys as _sys
 
@@ -127,5 +136,8 @@ def test_fresh_one_subprocess_contract():
     )
     lines = [l for l in proc.stdout.splitlines() if l.startswith("RESULT ")]
     assert lines, f"no RESULT line:\n{proc.stdout[-500:]}\n{proc.stderr[-500:]}"
-    walls = json.loads(lines[-1][len("RESULT "):])["walls"]
+    result = json.loads(lines[-1][len("RESULT "):])
+    walls = result["walls"]
     assert len(walls) == 2 and all(w > 0 for w in walls)
+    assert abs(result["build_s"] + result["exec_s"] - min(walls)) <= 0.006 + 1e-9
+    assert result["jobs"] >= 1

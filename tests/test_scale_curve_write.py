@@ -3,9 +3,8 @@
 Round 12 lost the round's de-confounding measurements (fresh_runs,
 split_jvm, partition_knee) to a stale writer that rebuilt the artifact
 dict from scratch.  These tests pin the contract: a write round-trips
-every foreign top-level key, the legacy single-factor layout migrates
-without leaving stale 'ops'/'factor' keys behind, and the guard refuses
-(raises) rather than silently dropping keys.
+every foreign top-level key, and the guard refuses (raises) rather than
+silently dropping keys.
 
 No SparkSession needed — write_curve is pure JSON plumbing.
 """
@@ -58,26 +57,6 @@ def test_fresh_mode_writes_fresh_runs_only(tmp_path):
     out = scale_curve.write_curve(path, RESULT, factor=300, fresh=True)
     assert out["fresh_runs"]["300"]["qX"]["ratio"] == 10.0
     assert "qX" not in out["runs"].get("300", {})
-
-
-def test_legacy_layout_migrates_without_stale_keys(tmp_path):
-    path = str(tmp_path / "SCALE_CURVE.json")
-    legacy = {"base": "b", "factor": 10, "ops": {"qOld": {"ratio": 3.0}}}
-    with open(path, "w") as f:
-        json.dump(legacy, f)
-    scale_curve.write_curve(path, RESULT, factor=100, fresh=False)
-    with open(path) as f:
-        once = json.load(f)
-    assert "ops" not in once and "factor" not in once
-    assert once["runs"]["10"]["qOld"]["ratio"] == 3.0
-    # second write must NOT re-detect legacy layout and clobber runs["10"]
-    scale_curve.write_curve(
-        path, {"qNew": {"t_1x_sec": 1.0, "t_10x_sec": 2.0, "ratio": 2.0}}, factor=10, fresh=False
-    )
-    with open(path) as f:
-        twice = json.load(f)
-    assert twice["runs"]["10"]["qOld"]["ratio"] == 3.0
-    assert twice["runs"]["10"]["qNew"]["ratio"] == 2.0
 
 
 def test_guard_raises_on_key_loss():

@@ -70,6 +70,13 @@ def compare_query(spark: SparkSession, con: duckdb.DuckDBPyConnection, name: str
         odf = _canon(con.execute(q.oracle).df())
     except Exception as e:  # noqa: BLE001
         return CompareResult(name, False, f"oracle error: {e}", len(sdf))
+    return compare_frames(name, sdf, odf)
+
+
+def compare_frames(name: str, sdf: pd.DataFrame, odf: pd.DataFrame) -> CompareResult:
+    """Diff a canonicalized Spark result against its canonicalized oracle
+    result: same row count, same columns, then column by column (floats to
+    1e-9 with null-ness compared exactly, everything else by equality)."""
     if len(sdf) != len(odf):
         return CompareResult(name, False, f"row count {len(sdf)} != {len(odf)}", len(sdf), len(odf))
     if list(sdf.columns) != list(odf.columns):
