@@ -1,0 +1,51 @@
+"""The document-quality decisions, each stated once.
+
+The word features, the rule gate, the quality head's training stats and
+its z-score each have one definition in ``yamon_spark/operators/``
+(``text.word_features``, ``curation._gate_fails``, ``_logit_train_frames``
+and ``curation._zscore``); every operator that needs one calls it. A
+second copy could drift from the first without any error, so this test
+counts the defining source text across the package, the way
+``test_env_reads.py`` pins the environment surface.
+"""
+
+from __future__ import annotations
+
+import os
+import re
+
+PKG = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "yamon_spark")
+
+
+def _count(pattern: str) -> dict[str, int]:
+    """Matches of the regex ``pattern`` per package file that has any."""
+    hits: dict[str, int] = {}
+    for root, _dirs, files in os.walk(PKG):
+        for f in files:
+            if f.endswith(".py"):
+                path = os.path.join(root, f)
+                with open(path) as fh:
+                    n = len(re.findall(pattern, fh.read()))
+                if n:
+                    hits[os.path.relpath(path, PKG)] = n
+    return hits
+
+
+def test_stopword_count_defined_once():
+    assert _count(re.escape("isin(*STOPWORDS)")) == {"operators/text.py": 1}
+
+
+def test_head_stats_aggregate_defined_once():
+    assert _count(re.escape('F.stddev_pop(f"x{i}")')) == {"operators/curation.py": 1}
+
+
+def test_head_zscore_defined_once():
+    assert _count(re.escape('F.col(f"m{i}")')) == {"operators/curation.py": 1}
+
+
+def test_gate_defined_once():
+    # one set of thresholds, and the only feature comparisons in the
+    # package's Python (the SQL oracles state their own) are the gate's
+    # five, in _gate_fails
+    assert _count(r"GATE_MIN_WORDS, GATE_MAX_WORDS = ") == {"operators/curation.py": 1}
+    assert _count(r"\b(n_words|avg_word_len|stop_ratio) [<>] (?!\d)") == {"operators/curation.py": 5}

@@ -69,7 +69,6 @@ BNLJ_OK = {
     "quality_threshold_sweep",  # same chain + one 27-cell conditional-sum agg
     "contamination_semantic",  # broadcast of the HARD-CAPPED (<=256) bench side
     "embedding_assign_delta",  # broadcast of the bounded |labels|-row centroid table
-    "quality_head_model",  # the 1-row stats x 1-row weights artifact join
     "quality_head_ece",  # the calibration chain's 1-row broadcasts + bin agg
     "text_bigram_logprob",  # broadcast of the ONE corpus-total row
     "text_trigram_logprob",  # broadcast of the ONE corpus-total row

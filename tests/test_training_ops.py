@@ -445,7 +445,8 @@ def test_gd_memo_sweeps_dead_session_entries(spark):
     leaves), so the real shared session is never stopped mid-suite."""
     from types import SimpleNamespace
 
-    from yamon_spark.operators.curation import _GD_MEMO, _gd_memo_sweep, _logit_train_frames
+    from yamon_spark.operators._memo import sweep_dead_sessions
+    from yamon_spark.operators.curation import _GD_MEMO, _logit_train_frames
     from yamon_spark.queries import table as load_table
 
     stopped = SimpleNamespace(sparkContext=SimpleNamespace(_jsc=None))
@@ -454,9 +455,26 @@ def test_gd_memo_sweeps_dead_session_entries(spark):
     f1, _ = _logit_train_frames(docs, 6, 4.0)  # access runs the sweep
     assert ("dead-session-key",) not in _GD_MEMO
     # live-session entries survive the sweep untouched
-    _gd_memo_sweep()
+    sweep_dead_sessions(_GD_MEMO)
     f2, _ = _logit_train_frames(docs, 6, 4.0)
     assert f1 is f2
+
+
+def test_gd_inmemory_features_unpersisted_after_training(spark):
+    """A feature frame nothing memoizes is released once the weights are
+    collected: repeated head training over an in-memory corpus leaves
+    the session's persistent-RDD count where it was."""
+    from yamon_spark.operators.curation import quality_logit_train
+
+    stop = "the and for you that"
+    rows = [(i, f"{stop} word{i} " + " ".join(f"tok{j}" for j in range(30))) for i in range(30)]
+    rows += [(100 + i, f"tiny{i} doc") for i in range(10)]
+    docs = spark.createDataFrame(rows, "doc_id long, text string")
+    jsc = spark.sparkContext._jsc
+    before = jsc.getPersistentRDDs().size()
+    for _ in range(3):
+        assert quality_logit_train(docs, iters=2, lr=4.0).count() == 5
+    assert jsc.getPersistentRDDs().size() == before
 
 
 def test_head_score_rejects_reserved_qh_columns(spark):

@@ -27,12 +27,6 @@ def test_metadata_filter_null_tags(spark):
     assert out.tags == {"k": "v"}
 
 
-def test_ignored_services_filter(spark):
-    df = spark.createDataFrame([("a",), ("b",)], "service string")
-    assert T.ignored_services_filter(["a"])(df).collect()[0].service == "b"
-    assert T.ignored_services_filter([])(df).count() == 2
-
-
 def test_priority_to_level_full_table(spark):
     df = spark.createDataFrame([(p,) for p in ["0", "1", "2", "3", "4", "5", "6", "7", "8", None]], "p string")
     got = [r.l for r in df.select(T.priority_to_level(F.col("p")).alias("l")).collect()]

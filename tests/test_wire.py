@@ -174,6 +174,9 @@ def test_parse_journald_ignored_services(spark):
     e2 = '{"SYSLOG_IDENTIFIER":"keep","MESSAGE":"y","PRIORITY":"6","__REALTIME_TIMESTAMP":"1714558800000000"}'
     rows = wire.parse_journald(_lines(spark, e1, e2), ignored_services=["noisy"]).collect()
     assert [r.service for r in rows] == ["keep"]
+    # an empty ignore list drops nothing
+    rows = wire.parse_journald(_lines(spark, e1, e2), ignored_services=[]).collect()
+    assert [r.service for r in rows] == ["noisy", "keep"]
 
 
 def test_parse_journald_priority_levels(spark):

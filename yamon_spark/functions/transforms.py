@@ -1,4 +1,6 @@
-"""Per-record ingestion transforms (SURVEY §2.2, T1-T8; the T9 webhook
+"""Per-record ingestion transforms (SURVEY §2.2, T1-T8; the T2
+ignored-services filter is ``sources/wire.parse_journald``'s
+``ignored_services``, where the reference filters too; the T9 webhook
 wrap is ``sources/http_server.IngestHTTPServer._webhook_line``).
 
 Each transform is a pure ``DataFrame -> DataFrame`` function built only
@@ -54,22 +56,6 @@ def metadata_filter(hostname: str, static_tags: dict[str, str] | None = None) ->
             )
             out = out.withColumn("tags", F.map_concat(existing, lit_tags))
         return out
-
-    return apply
-
-
-# ---------------------------------------------------------------------------
-# T2: ignored-services filter
-# ---------------------------------------------------------------------------
-
-
-def ignored_services_filter(ignored: list[str]) -> Callable[[DataFrame], DataFrame]:
-    """Drop log entries whose ``service`` is in the configured ignore set."""
-
-    def apply(df: DataFrame) -> DataFrame:
-        if not ignored:
-            return df
-        return df.where(~F.col("service").isin(ignored))
 
     return apply
 

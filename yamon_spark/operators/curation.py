@@ -30,8 +30,9 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
-from yamon_spark.operators.text import STOPWORDS, shingles_col, words_col
+from yamon_spark.operators.text import WordFeatures, shingles_col, word_features, words_col
 
 # deterministic multiplicative hash for sampling decisions — shared as
 # literals with the SQL oracle (pure int64 arithmetic, no engine RNG)
@@ -57,37 +58,61 @@ def est_tokens() -> Column:
 _shingles = shingles_col
 
 
+# The rule gate's thresholds: quality_filter's defaults, the GD head's
+# training label and Gopher rules f0/f1 all read these.
+GATE_MIN_WORDS, GATE_MAX_WORDS = 10, 1000
+GATE_MIN_AWL, GATE_MAX_AWL = 2.0, 12.0
+GATE_MIN_STOP = 0.01
+
+
+def _gate_fails(
+    f: WordFeatures,
+    min_words: int = GATE_MIN_WORDS,
+    max_words: int = GATE_MAX_WORDS,
+    min_awl: float = GATE_MIN_AWL,
+    max_awl: float = GATE_MAX_AWL,
+    min_stop: float = GATE_MIN_STOP,
+) -> dict[str, Column]:
+    """The rule gate's fail predicates in check order, keyed by the
+    reason quality_filter reports for each."""
+    return {
+        "too_short": f.n_words < min_words,
+        "too_long": f.n_words > max_words,
+        "word_len": (f.avg_word_len < min_awl) | (f.avg_word_len > max_awl),
+        "no_stopwords": f.stop_ratio < min_stop,
+    }
+
+
+def _gate_reason(fails: dict[str, Column]) -> Column:
+    """The FIRST failing rule, "ok" when none fails (deterministic CASE
+    chain, same on both engines)."""
+    reason = F  # F.when starts the chain, Column.when extends it
+    for name, fail in fails.items():
+        reason = reason.when(fail, name)
+    return reason.otherwise("ok")
+
+
 def quality_filter(
     docs: DataFrame,
-    min_words: int = 10,
-    max_words: int = 1000,
-    min_awl: float = 2.0,
-    max_awl: float = 12.0,
-    min_stop: float = 0.01,
+    min_words: int = GATE_MIN_WORDS,
+    max_words: int = GATE_MAX_WORDS,
+    min_awl: float = GATE_MIN_AWL,
+    max_awl: float = GATE_MAX_AWL,
+    min_stop: float = GATE_MIN_STOP,
     ordered: bool = True,
 ) -> DataFrame:
     """Gopher/C4-style quality gate: word-count bounds, mean-word-length
     band, minimum stopword ratio. Emits the features plus keep flag and
-    the FIRST failing rule (deterministic CASE chain, same on both
-    engines). Shuffle-free projection."""
+    the FIRST failing rule. Shuffle-free projection."""
     base = docs.select("doc_id", words_col(F.col("text")).alias("w"))
-    w = F.col("w")
-    n_words = F.size(w).cast("bigint")
-    awl = F.aggregate(w, F.lit(0.0), lambda a, x: a + F.length(x).cast("double")) / n_words
-    stop_ratio = F.size(F.filter(w, lambda x: x.isin(*STOPWORDS))).cast("double") / n_words
-    reason = (
-        F.when(n_words < min_words, "too_short")
-        .when(n_words > max_words, "too_long")
-        .when((awl < min_awl) | (awl > max_awl), "word_len")
-        .when(stop_ratio < min_stop, "no_stopwords")
-        .otherwise("ok")
-    )
+    f = word_features(F.col("w"))
+    reason = _gate_reason(_gate_fails(f, min_words, max_words, min_awl, max_awl, min_stop))
     out = (
         base.select(
             "doc_id",
-            n_words.alias("n_words"),
-            awl.alias("avg_word_len"),
-            stop_ratio.alias("stop_ratio"),
+            f.n_words.alias("n_words"),
+            f.avg_word_len.alias("avg_word_len"),
+            f.stop_ratio.alias("stop_ratio"),
             reason.alias("reason"),
         )
         .withColumn("keep", (F.col("reason") == "ok").cast("int"))
@@ -940,19 +965,10 @@ def quality_logit(docs: DataFrame) -> DataFrame:
 
     Scale shape: shuffle-free scan-projection — features and the sigmoid
     are whole-stage-codegen JVM expressions; linear in splits."""
-    w = words_col(F.col("text"))
-    n_words = F.size(w).cast("double")
-    avg_wl = F.aggregate(
-        F.transform(w, lambda x: F.length(x).cast("double")),
-        F.lit(0.0),
-        lambda a, b: a + b,
-    ) / n_words
-    stop_ratio = (
-        F.size(F.filter(w, lambda x: x.isin(*STOPWORDS))).cast("double") / n_words
-    )
+    ln_words, avg_wl, stop_ratio = _head_inputs(word_features(words_col(F.col("text"))))
     z = (
         F.lit(LOGIT_W0)
-        + F.lit(LOGIT_W_LNWORDS) * F.log(n_words)
+        + F.lit(LOGIT_W_LNWORDS) * ln_words
         + F.lit(LOGIT_W_AVGLEN) * avg_wl
         + F.lit(LOGIT_W_STOP) * stop_ratio
     )
@@ -964,6 +980,20 @@ def quality_logit(docs: DataFrame) -> DataFrame:
         # matching the oracle's CASE ... ELSE 0
         F.when(F.round(score, 4) >= 0.5, 1).otherwise(0).alias("keep"),
     ).orderBy("doc_id")
+
+
+def _head_inputs(f: WordFeatures) -> tuple[Column, Column, Column]:
+    """The heads' three raw inputs x1..x3: ln word count, mean word
+    length, stopword ratio."""
+    return F.log(f.n_words), f.avg_word_len, f.stop_ratio
+
+
+def _zscore(i: int, x: Column) -> Column:
+    """Raw input x{i} z-scored against the training stats m{i}, s{i}; a
+    zero std (constant feature) maps to divisor 1 so the centered value
+    0 passes through instead of dividing by zero."""
+    s = F.col(f"s{i}")
+    return (x - F.col(f"m{i}")) / F.when(s == 0.0, 1.0).otherwise(s)
 
 
 def _logit_z(w_prefix: str = "w"):
@@ -992,40 +1022,33 @@ def _logit_sigmoid():
 # localCheckpointed — cb33e4c) feature frame alive, which is precisely
 # the production shape: train once, serve the artifact. Bounded: a
 # handful of corpora per session; entries from STOPPED sessions are
-# evicted on the next memo access so a long-lived process cycling
-# sessions cannot accrete them (their cached blocks died with the
-# session's executors — unpersist is neither possible nor needed).
+# evicted on the next memo access (operators/_memo.sweep_dead_sessions)
+# so a long-lived process cycling sessions cannot accrete them (their
+# cached blocks died with the session's executors — unpersist is neither
+# possible nor needed).
 _GD_MEMO: dict[tuple, tuple] = {}
 
 
-def _gd_memo_sweep() -> None:
-    """Evict memo entries whose owning SparkSession has stopped — their
-    persisted frames are unreachable through any live session and would
-    otherwise pin memory for the process lifetime (ADVICE r9). Shared
-    implementation: operators/_memo.py (r14 — the BPE memo reuses it)."""
-    from yamon_spark.operators._memo import sweep_dead_sessions
-
-    sweep_dead_sessions(_GD_MEMO)
-
-
 def _logit_train_frames(docs: DataFrame, iters: int, lr: float):
-    """(standardized feature frame, trained 1-row weight frame) — the
-    shared GD core of quality_logit_train and quality_head_calibration.
+    """(standardized feature frame, deployable 1-row model frame) — the
+    shared GD core of every head query. The model row carries the
+    z-score stats (m1..m3, s1..s3) and the trained weights (w0..w3);
+    quality_head_fit returns it as is.
 
     TRAINS the linear quality head in-engine: logistic regression by
     unrolled batch gradient descent, distilling the rule gate
-    (:func:`quality_filter`'s keep verdict with default thresholds) into
-    the same three features :func:`quality_logit` scores with (ln word
-    count, average word length, stopword ratio) — closing the loop from
-    "apply a classifier" to "train the classifier the pipeline's own
-    docs justify". Returns (term, value) rows: the four learned weights
-    after `iters` rounds plus the training accuracy of the final head.
+    (:func:`_gate_fails` at its default thresholds, quality_filter's
+    keep verdict) into the same three inputs :func:`quality_logit`
+    scores with (:func:`_head_inputs`) — closing the loop from "apply a
+    classifier" to "train the classifier the pipeline's own docs
+    justify".
 
     Features are STANDARDIZED first (z-score against corpus mean and
-    population std, both rounded 4dp in a one-row broadcast stats
-    frame) — without it plain GD conditions so badly the head stalls at
-    the majority predictor; with it 12 rounds at lr 4.0 reach ~99%
-    training accuracy on this corpus (measured at sf0.01 and sf0.1).
+    population std, both rounded 4dp and collected into a one-row
+    broadcast stats frame) — without it plain GD conditions so badly
+    the head stalls at the majority predictor; with it 12 rounds at
+    lr 4.0 reach ~99% training accuracy on this corpus (measured at
+    sf0.01 and sf0.1).
 
     Determinism contract (the embedding_kmeans pattern for iterative
     float algorithms): weights start at exact 0.0; each round computes
@@ -1054,45 +1077,30 @@ def _logit_train_frames(docs: DataFrame, iters: int, lr: float):
     # Data-identity key recipe (plan + inputFiles, in-memory frames never
     # memoized) documented in operators/_memo.py — shared with the BPE
     # merge-chain memo since r14.
-    from yamon_spark.operators._memo import plan_data_key
+    from yamon_spark.operators._memo import plan_data_key, sweep_dead_sessions
 
     key = plan_data_key(docs, int(iters), float(lr))
-    _gd_memo_sweep()
+    sweep_dead_sessions(_GD_MEMO)
     if key is not None and key in _GD_MEMO:
         return _GD_MEMO[key]
     base = docs.select("doc_id", words_col(F.col("text")).alias("w")).where(F.size("w") >= 1)
-    wcol = F.col("w")
-    n_words = F.size(wcol).cast("double")
-    awl = F.aggregate(wcol, F.lit(0.0), lambda a, x: a + F.length(x).cast("double")) / n_words
-    stop_ratio = F.size(F.filter(wcol, lambda x: x.isin(*STOPWORDS))).cast("double") / n_words
-    label = (
-        F.when(n_words < 10, 0.0)
-        .when(n_words > 1000, 0.0)
-        .when((awl < 2.0) | (awl > 12.0), 0.0)
-        .when(stop_ratio < 0.01, 0.0)
-        .otherwise(1.0)
-    )
+    f = word_features(F.col("w"))
+    # the label distills the rule gate's default verdict
     raw = base.select(
-        label.alias("y"),
-        F.log(n_words).alias("x1"),
-        awl.alias("x2"),
-        stop_ratio.alias("x3"),
+        F.when(_gate_reason(_gate_fails(f)) == "ok", 1.0).otherwise(0.0).alias("y"),
+        *[x.alias(f"x{i}") for i, x in enumerate(_head_inputs(f), 1)],
     )
-    stats = raw.agg(
+    agg = raw.agg(
         *[F.round(F.avg(f"x{i}"), 4).alias(f"m{i}") for i in (1, 2, 3)],
         *[F.round(F.stddev_pop(f"x{i}"), 4).alias(f"s{i}") for i in (1, 2, 3)],
     )
-    # z-score; a zero std (constant feature) maps to divisor 1 so the
-    # centered value 0 passes through instead of dividing by zero
+    spark = docs.sparkSession
+    # the stats row is half of the model artifact: collect it once, so
+    # the model never re-derives it from the corpus
+    (stats_row,) = agg.collect()
+    stats = spark.createDataFrame([stats_row], agg.schema)
     feats = raw.crossJoin(F.broadcast(stats)).select(
-        "y",
-        *[
-            (
-                (F.col(f"x{i}") - F.col(f"m{i}"))
-                / F.when(F.col(f"s{i}") == 0.0, 1.0).otherwise(F.col(f"s{i}"))
-            ).alias(f"x{i}")
-            for i in (1, 2, 3)
-        ],
+        "y", *[_zscore(i, F.col(f"x{i}")).alias(f"x{i}") for i in (1, 2, 3)]
     )
     # materialize the 4-column feature frame once: every GD round — and
     # the downstream accuracy/calibration/threshold passes — then scans
@@ -1105,11 +1113,9 @@ def _logit_train_frames(docs: DataFrame, iters: int, lr: float):
     # test session). persist is recompute-safe by construction: worst
     # case is a re-scan, never an error. Values identical either way.
     feats = feats.persist()
-    spark = docs.sparkSession
     w = spark.createDataFrame(
         [(0.0, 0.0, 0.0, 0.0)], "w0 double, w1 double, w2 double, w3 double"
     )
-
 
     # each round references the previous weight frame exactly ONCE: the
     # update folds into the gradient aggregate (w_j is constant over the
@@ -1133,26 +1139,35 @@ def _logit_train_frames(docs: DataFrame, iters: int, lr: float):
     # embeds — and re-executes — the whole `iters`-round GD tower in its
     # own plan (measured 50 Exchange nodes in quality_logit_train's
     # executed plan before this, and the tower re-ran once per query).
-    # Bounded: exactly one 4-double row; values bit-identical (the
-    # training itself is the deterministic 4dp-rounded chain above).
-    w = spark.createDataFrame(w.limit(1).collect(), w.schema)
-    if key is not None:
-        _GD_MEMO[key] = (feats, w)
-    return feats, w
+    # Bounded: exactly one 10-double row (stats, then weights); values
+    # bit-identical (the training itself is the deterministic
+    # 4dp-rounded chain above).
+    model = spark.createDataFrame(
+        [tuple(stats_row) + tuple(w.limit(1).collect()[0])],
+        StructType(agg.schema.fields + w.schema.fields),
+    )
+    if key is None:
+        # nothing will reuse an unmemoized feature frame: release its
+        # blocks (callers' plans recompute it from lineage) instead of
+        # leaking them
+        feats.unpersist()
+    else:
+        _GD_MEMO[key] = (feats, model)
+    return feats, model
 
 
 def quality_logit_train(docs: DataFrame, iters: int = 12, lr: float = 4.0) -> DataFrame:
     """TRAIN the linear quality head in-engine (see _logit_train_frames
     for the GD core): emits (term, value) rows — the four learned
     weights after `iters` rounds plus final training accuracy."""
-    feats, w = _logit_train_frames(docs, iters, lr)
-    final = feats.crossJoin(F.broadcast(w))
+    feats, model = _logit_train_frames(docs, iters, lr)
+    final = feats.crossJoin(F.broadcast(model))
     acc = final.agg(
         F.round(
             F.avg(F.when((_logit_sigmoid() >= 0.5) == (F.col("y") >= 0.5), 1.0).otherwise(0.0)), 4
         ).alias("value")
     ).select(F.lit("train_acc").alias("term"), "value")
-    weights = w.selectExpr(
+    weights = model.selectExpr(
         "stack(4, 'w0_intercept', w0, 'w1_ln_words', w1, "
         "'w2_avg_word_len', w2, 'w3_stop_ratio', w3) AS (term, value)"
     )
@@ -1177,8 +1192,8 @@ def quality_head_calibration(
     rows. Bin edges floor(round(p,4)*n_bins) compute in IEEE double on
     both engines (identical bits -> identical bin), top bin clamps p=1.
     """
-    feats, w = _logit_train_frames(docs, iters, lr)
-    j = feats.crossJoin(F.broadcast(w))
+    feats, model = _logit_train_frames(docs, iters, lr)
+    j = feats.crossJoin(F.broadcast(model))
     p4 = F.round(_logit_sigmoid(), 4)
     b = F.least(F.floor(p4 * n_bins), F.lit(n_bins - 1)).cast("int")
     return (
@@ -1199,19 +1214,10 @@ def quality_head_fit(docs: DataFrame, iters: int = 12, lr: float = 4.0) -> DataF
     weights (w0..w3). quality_logit_train reports weights for a human;
     this is the artifact a serving path broadcasts — scoring a new doc
     needs the TRAINING stats, not the serving corpus's, or the features
-    drift with every batch. Persist it like any 1-row parquet."""
-    base = docs.select("doc_id", words_col(F.col("text")).alias("w")).where(F.size("w") >= 1)
-    feats, w = _logit_train_frames(docs, iters, lr)
-    wcol = F.col("w")
-    n_words = F.size(wcol).cast("double")
-    awl = F.aggregate(wcol, F.lit(0.0), lambda a, x: a + F.length(x).cast("double")) / n_words
-    stop_ratio = F.size(F.filter(wcol, lambda x: x.isin(*STOPWORDS))).cast("double") / n_words
-    raw = base.select(F.log(n_words).alias("x1"), awl.alias("x2"), stop_ratio.alias("x3"))
-    stats = raw.agg(
-        *[F.round(F.avg(f"x{i}"), 4).alias(f"m{i}") for i in (1, 2, 3)],
-        *[F.round(F.stddev_pop(f"x{i}"), 4).alias(f"s{i}") for i in (1, 2, 3)],
-    )
-    return stats.crossJoin(F.broadcast(w))
+    drift with every batch. The row is the one training materialized
+    (:func:`_logit_train_frames`), so fitting scans the corpus no
+    further. Persist it like any 1-row parquet."""
+    return _logit_train_frames(docs, iters, lr)[1]
 
 
 def quality_head_score(docs: DataFrame, model: DataFrame, threshold: float = 0.5) -> DataFrame:
@@ -1240,23 +1246,14 @@ def quality_head_score(docs: DataFrame, model: DataFrame, threshold: float = 0.5
     clash = [c for c in docs.columns if c in ("_qh_w", "_qh_n", "_qh_x1", "_qh_x2", "_qh_x3")]
     if clash:
         raise ValueError(f"docs columns collide with reserved _qh_* staging names: {clash}")
-    wcol = F.col("_qh_w")
-    n_words = F.size(wcol).cast("double")
     base = docs.select(*docs.columns, words_col(F.col("text")).alias("_qh_w"))
-    awl = F.aggregate(wcol, F.lit(0.0), lambda a, x: a + F.length(x).cast("double")) / n_words
-    stop_ratio = F.size(F.filter(wcol, lambda x: x.isin(*STOPWORDS))).cast("double") / n_words
+    f = word_features(F.col("_qh_w"))
     feat = base.select(
         *docs.columns,
-        n_words.alias("_qh_n"),
-        F.log(n_words).alias("_qh_x1"),
-        awl.alias("_qh_x2"),
-        stop_ratio.alias("_qh_x3"),
+        f.n_words.alias("_qh_n"),
+        *[x.alias(f"_qh_x{i}") for i, x in enumerate(_head_inputs(f), 1)],
     )
-    z = [
-        (F.col(f"_qh_x{i}") - F.col(f"m{i}"))
-        / F.when(F.col(f"s{i}") == 0.0, 1.0).otherwise(F.col(f"s{i}"))
-        for i in (1, 2, 3)
-    ]
+    z = [_zscore(i, F.col(f"_qh_x{i}")) for i in (1, 2, 3)]
     logit = F.col("w0") + F.col("w1") * z[0] + F.col("w2") * z[1] + F.col("w3") * z[2]
     p = F.when(F.col("_qh_n") >= 1, F.round(F.lit(1.0) / (F.lit(1.0) + F.exp(-logit)), 4))
     scored = feat.crossJoin(F.broadcast(model)).select(
@@ -1287,8 +1284,8 @@ def quality_threshold_sweep(docs: DataFrame, iters: int = 12, lr: float = 4.0) -
     2·tp/(2·tp+fp+fn) so only one terminal 4dp rounding happens per
     metric; thresholds are i/10.0 in IEEE double on both engines.
     Zero-denominator cells are NULL (no kept docs / no positive docs)."""
-    feats, w = _logit_train_frames(docs, iters, lr)
-    j = feats.crossJoin(F.broadcast(w))
+    feats, model = _logit_train_frames(docs, iters, lr)
+    j = feats.crossJoin(F.broadcast(model))
     p4 = F.round(_logit_sigmoid(), 4)
     ths = [i / 10.0 for i in range(1, 10)]
     aggs = []
@@ -1594,11 +1591,10 @@ def quality_score_psi(
     broadcast join, and a 1-row answer. Linear, two scans, no
     data-sized shuffle — runs at ingest cadence. The model frame is
     materialized to its single artifact row first (one bounded
-    collect — the serve-the-artifact shape): when the caller hands the
-    TRAINING PLAN itself (quality_head_fit's lazy frame), every
-    downstream reference would otherwise re-evaluate the whole
-    12-round GD chain — measured 106 Exchange nodes in this query's
-    executed plan before the materialization, 2 after (PLAN_AUDIT)."""
+    collect — the serve-the-artifact shape): a caller may hand a lazy
+    model plan, which every downstream reference would otherwise
+    re-evaluate (a lazy 12-round GD chain measured 106 Exchange nodes
+    in this query's executed plan, 2 once materialized)."""
     spark = model.sparkSession
     model = spark.createDataFrame(model.limit(1).collect(), model.schema)
     return psi_from_histograms(
@@ -1663,9 +1659,10 @@ def psi_from_histograms(
     )
 
 
-# Gopher-style rule set evaluated by quality_gopher_rules — (name, fail
-# predicate builder) in REPORT ORDER. Three rules share thresholds with
-# quality_filter's keep gate; alpha_ratio and long_word are the extra
+# Gopher-style rule set evaluated by quality_gopher_rules, in REPORT
+# ORDER. The first two rules are quality_filter's word-count and
+# word-length gate (_gate_fails); stopword_hits_low counts stopword
+# occurrences instead of a ratio; alpha_ratio and long_word are the extra
 # Gopher repetition/garbage signals the per-doc gate doesn't carry.
 GOPHER_RULES = (
     "word_count_out_of_range",
@@ -1698,9 +1695,8 @@ def quality_gopher_rules(docs: DataFrame) -> DataFrame:
     metrics agent); this is part of the training-data curation surface
     the brief adds on top (SURVEY §2.7)."""
     w = words_col(F.col("text"))
-    n_words = F.size(w).cast("double")
-    awl = F.aggregate(w, F.lit(0.0), lambda a, x: a + F.length(x).cast("double")) / n_words
-    stop_hits = F.size(F.filter(w, lambda x: x.isin(*STOPWORDS)))
+    f = word_features(w)
+    gate = _gate_fails(f)
     n_content = F.length(F.regexp_replace("text", r"\s", "")).cast("double")
     # [^a-zA-Z]: uppercase letters ARE alphabetic — counting only [a-z]
     # made the alpha_ratio_low rule fire spuriously on any corpus that
@@ -1710,9 +1706,9 @@ def quality_gopher_rules(docs: DataFrame) -> DataFrame:
     ) / F.greatest(n_content, F.lit(1.0))
     max_wl = F.array_max(F.transform(w, F.length))
     fails = [
-        ((n_words < 10) | (n_words > 1000)).alias("f0"),
-        ((awl < 2.0) | (awl > 12.0)).alias("f1"),
-        (stop_hits < 2).alias("f2"),
+        (gate["too_short"] | gate["too_long"]).alias("f0"),
+        gate["word_len"].alias("f1"),
+        (f.n_stop < 2).alias("f2"),
         (alpha_ratio < 0.8).alias("f3"),
         (max_wl > 15).alias("f4"),
     ]

@@ -1593,15 +1593,21 @@ def sq8_topk(embeddings: DataFrame, query_vec_id: int = 0, k: int = 10) -> DataF
     )
 
 
+def _recall_at_k(truth: DataFrame, approx: DataFrame, k: int) -> DataFrame:
+    """recall@k: the share of the exact top-k vec_ids the approximate
+    top-k also returns (one row; the column keeps its historical name)."""
+    return truth.join(approx, "vec_id", "semi").agg(
+        (F.count(F.lit(1)) / float(k)).alias("recall_at_10")
+    )
+
+
 def sq8_recall(embeddings: DataFrame, query_vec_id: int = 0, k: int = 10) -> DataFrame:
     """recall@k of the SQ8 index against full-precision brute force —
     the measure-don't-guess gate every compressed index ships with
     (sibling of sim_ivf_recall / sim_pq_recall)."""
     truth = cosine_topk(embeddings, query_vec_id, k).select("vec_id")
     approx = sq8_topk(embeddings, query_vec_id, k).select("vec_id")
-    return truth.join(approx, "vec_id", "semi").agg(
-        (F.count(F.lit(1)) / float(k)).alias("recall_at_10")
-    )
+    return _recall_at_k(truth, approx, k)
 
 
 # Binary sign sketch (Hamming ANN) ---------------------------------------
@@ -1675,9 +1681,7 @@ def hamming_recall(embeddings: DataFrame, query_vec_id: int = 0, k: int = 10) ->
     quantifying what 32x compression costs THIS corpus."""
     truth = cosine_topk(embeddings, query_vec_id, k).select("vec_id")
     approx = hamming_topk(embeddings, query_vec_id, k).select("vec_id")
-    return truth.join(approx, "vec_id", "semi").agg(
-        (F.count(F.lit(1)) / float(k)).alias("recall_at_10")
-    )
+    return _recall_at_k(truth, approx, k)
 
 
 def hard_negative_mining(
@@ -1738,9 +1742,7 @@ def cascade_recall(
     that justifies shipping the two-tier index over the sketch alone."""
     truth = cosine_topk(embeddings, query_vec_id, k).select("vec_id")
     approx = cascade_topk(embeddings, query_vec_id, k, shortlist).select("vec_id")
-    return truth.join(approx, "vec_id", "semi").agg(
-        (F.count(F.lit(1)) / float(k)).alias("recall_at_10")
-    )
+    return _recall_at_k(truth, approx, k)
 
 
 def ivfpq_topk(
@@ -1787,9 +1789,7 @@ def ivfpq_recall(
     how sim_pq_recall gates PQ alone."""
     truth = l2_topk(embeddings, query_vec_id, k_at).select("vec_id")
     approx = ivfpq_topk(embeddings, query_vec_id, k_at, m, k, sub_dim).select("vec_id")
-    return truth.join(approx, "vec_id", "semi").agg(
-        (F.count(F.lit(1)) / float(k_at)).alias("recall_at_10")
-    )
+    return _recall_at_k(truth, approx, k_at)
 
 
 def label_separation(embeddings: DataFrame) -> DataFrame:

@@ -13,6 +13,7 @@ regexp-split of trimmed text on whitespace runs.
 from __future__ import annotations
 
 import re
+from typing import NamedTuple
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
@@ -31,6 +32,29 @@ def words_col(text: Column) -> Column:
     return F.split(F.trim(text), r"\s+")
 
 
+class WordFeatures(NamedTuple):
+    n_words: Column  # bigint
+    avg_word_len: Column  # double, unrounded
+    stop_ratio: Column  # double, unrounded
+    n_stop: Column  # int, stopword occurrences
+
+
+def word_features(w: Column) -> WordFeatures:
+    """The document-quality features of a words array — the one
+    definition text_stats, the curation rule gate, the Gopher rules and
+    the quality heads all read. The ratios divide by the bigint word
+    count, which the engine widens to double: the same bits as a
+    double count, so the heads' ln(n_words) inputs match too."""
+    n_words = F.size(w).cast("bigint")
+    n_stop = F.size(F.filter(w, lambda x: x.isin(*STOPWORDS)))
+    return WordFeatures(
+        n_words,
+        F.aggregate(w, F.lit(0.0), lambda acc, x: acc + F.length(x).cast("double")) / n_words,
+        n_stop.cast("double") / n_words,
+        n_stop,
+    )
+
+
 def shingles_col(w: Column, ngram: int) -> Column:
     """Word n-gram shingles with the shared tail contract (FIXTURES.md):
     indices run 1..max(len-n+1, 1), so docs shorter than n yield ONE
@@ -47,15 +71,12 @@ def text_stats(docs: DataFrame) -> DataFrame:
     # split once into a materialized column; the HOFs below run
     # interpreted and would otherwise each re-split the text
     base = docs.select("doc_id", "text", words_col(F.col("text")).alias("w"))
-    w = F.col("w")
-    n_words = F.size(w).cast("bigint")
+    f = word_features(F.col("w"))
+    n_words = f.n_words
     n_chars = F.length("text").cast("bigint")
-    n_stop = F.size(F.filter(w, lambda x: x.isin(*STOPWORDS))).cast("bigint")
     n_punct = F.length(F.regexp_replace("text", "[a-z0-9 ]", "")).cast("bigint")
-    avg_word_len = F.round(
-        F.aggregate(w, F.lit(0.0), lambda acc, x: acc + F.length(x).cast("double")) / n_words, 4
-    )
-    stop_ratio = F.round(n_stop.cast("double") / n_words, 4)
+    avg_word_len = F.round(f.avg_word_len, 4)
+    stop_ratio = F.round(f.stop_ratio, 4)
     # empty document -> NULL ratio (not a crash: ANSI division by zero
     # aborts the whole job on a single zero-length text); n_words is >= 1
     # by construction (split of "" yields [""]), so only n_chars needs the

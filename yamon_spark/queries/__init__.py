@@ -138,15 +138,14 @@ _DRIVER_GREEN_ROUND: dict[str, int] = {
     "dedup_funnel": 9, "embed_label_metrics": 9, "hard_negative_mining": 9,
     "lang_id_confusion": 9, "mix_budget_plan": 9,
     "q86_seasonal_baseline": 9, "q87_level_shift": 9, "q88_autocorr": 9,
-    "q89_ewma": 9, "quality_score_psi": 9, "sim_cascade_recall": 9,
-    "sim_cascade_topk": 9, "sim_hamming_recall": 9, "sim_hamming_topk": 9,
-    "sim_sq8_recall": 9, "text_chunk_windows": 9, "vocab_growth": 9,
+    "q89_ewma": 9, "sim_cascade_topk": 9, "sim_hamming_topk": 9,
+    "text_chunk_windows": 9, "vocab_growth": 9,
     # r10-vintage
     "dedup_canonical": 10, "dedup_cluster_sizes": 10,
     "dedup_incremental": 10, "dedup_lsh_band_tuning": 10,
-    "doc_length_survival": 10, "domain_mix": 10,
-    "embed_intrinsic_dim": 10, "embed_kmeans": 10, "embed_pca_power": 10,
-    "mix_repeat_plan": 10, "pack_sequences": 10, "q10_inner_join_dims": 10,
+    "doc_length_survival": 10, "domain_mix": 10, "embed_intrinsic_dim": 10,
+    "embed_kmeans": 10, "embed_pca_power": 10, "mix_repeat_plan": 10,
+    "pack_sequences": 10, "q10_inner_join_dims": 10,
     "q11_left_outer_count": 10, "q12_semi_join": 10, "q24_rollup": 10,
     "q25_gauge_rollup_mv": 10, "q26_counter_rollup_mv": 10,
     "q38_approx_quantile": 10, "q44_union_all": 10,
@@ -157,8 +156,7 @@ _DRIVER_GREEN_ROUND: dict[str, int] = {
     "q57_conditionals": 10, "q58_regex_funcs": 10, "q65_interval_join": 10,
     "q73_unpivot": 10, "q74_lateral_explode": 10, "q75_bitmap_distinct": 10,
     "q76_zip_with": 10, "q77_cube_grouping": 10, "q78_median_stats": 10,
-    "q79_fuzzy_match": 10, "quality_gopher_rules": 10,
-    "sample_weighted": 10, "sim_centroid_margin": 10,
+    "q79_fuzzy_match": 10, "sample_weighted": 10, "sim_centroid_margin": 10,
     "source_divergence": 10, "source_overlap": 10, "text_bigrams": 10,
     "text_ngram_novelty": 10, "text_tfidf_pairs": 10,
     "train_test_split": 10,
@@ -178,9 +176,8 @@ _DRIVER_GREEN_ROUND: dict[str, int] = {
     "q91_alert_episodes": 11, "sample_stratified": 11,
     "shard_balance_report": 11, "sim_cosine_topk": 11, "sim_ivf_topk": 11,
     "sim_lsh_topk": 11, "sim_near_dup_pairs": 11, "text_boilerplate": 11,
-    "text_fingerprint": 11, "text_lang_id": 11, "text_quality_filter": 11,
-    "text_repetition": 11, "text_stats": 11, "text_token_count": 11,
-    "vocab_coverage": 11,
+    "text_fingerprint": 11, "text_lang_id": 11, "text_repetition": 11,
+    "text_token_count": 11, "vocab_coverage": 11,
     # r12-vintage
     "ann_range_search": 12, "contamination_report": 12,
     "contamination_semantic": 12, "corpus_profile": 12,
@@ -196,8 +193,7 @@ _DRIVER_GREEN_ROUND: dict[str, int] = {
     "q61_sliding_window": 12, "q62_session_window": 12,
     "q63_watermark_late_drop": 12, "q64_stateful_dedup": 12,
     "q70_scalar_pandas_udf": 12, "q71_grouped_map_zscore": 12,
-    "q80_runtime_filter": 12, "quality_drift_alarm": 12,
-    "quality_logit_train": 12, "sample_eval_slice": 12,
+    "q80_runtime_filter": 12, "sample_eval_slice": 12,
     "sample_rebalanced": 12, "sim_ivf_recall": 12,
     "sim_ivf_recall_batch": 12, "sim_knn_join": 12, "sim_near_dup_lsh": 12,
     "sim_truncation_recall": 12, "sketch_count_min": 12,
@@ -216,14 +212,12 @@ _DRIVER_GREEN_ROUND: dict[str, int] = {
     "q45_scalar_subquery": 13, "q46_in_subquery": 13, "q67_funnel": 13,
     "q69_time_range_window": 13, "q81_asof_tolerance": 13,
     "q82_deadman": 13, "q83_event_transitions": 13, "q84_mad_outliers": 13,
-    "q85_histogram_quantile": 13, "quality_head_calibration": 13,
-    "quality_head_ece": 13, "quality_head_model": 13, "quality_logit": 13,
-    "quality_threshold_sweep": 13, "sim_ivf_pareto": 13,
-    "sim_ivfpq_recall": 13, "sim_ivfpq_topk": 13, "sim_mmr_topk": 13,
-    "sim_pq_recall": 13, "sim_sq8_topk": 13, "sq8_codes": 13,
-    "text_bm25": 13, "text_mattr": 13, "text_perplexity_buckets": 13,
-    "text_pmi": 13, "text_search": 13, "text_trigram_logprob": 13,
-    "text_zipf_slope": 13, "tokenizer_fertility": 13,
+    "q85_histogram_quantile": 13, "sim_ivf_pareto": 13,
+    "sim_ivfpq_topk": 13, "sim_mmr_topk": 13, "sim_pq_recall": 13,
+    "sim_sq8_topk": 13, "sq8_codes": 13, "text_bm25": 13, "text_mattr": 13,
+    "text_perplexity_buckets": 13, "text_pmi": 13, "text_search": 13,
+    "text_trigram_logprob": 13, "text_zipf_slope": 13,
+    "tokenizer_fertility": 13,
 }
 
 

@@ -1,35 +1,15 @@
-"""Schemas and table loaders.
+"""The generated relational testdata (TPC-H-ish star schema +
+``events``/``documents``/``embeddings``, one directory per scale
+factor): the table names the oracle and ``scripts/driver_sim.py`` load,
+and the default scale-factor directory.
 
-Two schema families:
-
-1. The driver-generated relational testdata (TPC-H-ish star schema +
-   ``events``/``documents``/``embeddings``) at /root/testdata/sf*/ —
-   loaded by :func:`load_tables` / :func:`register_views`.
-
-2. The yamon-native stream schemas mirroring the reference's data model
-   (reference common/metric.go:16-23, common/log.go:5-12,
-   common/event.go:8-14 and the ClickHouse DDL res/schema.sql):
-   :data:`METRIC_SCHEMA`, :data:`LOG_SCHEMA`, :data:`EVENT_SCHEMA`.
-   Type mapping per SURVEY §1.3: DateTime64(9) -> TimestampType (µs) with
-   an optional ``when_ns`` long for ns fidelity; Enum8('gauge','counter')
-   -> StringType constrained at ingest; Map(LowCardinality(String),String)
-   -> MapType(String, String).
+The stream tables (metrics, logs, events) take their columns from the
+parsers in ``sources/wire.py``.
 """
 
 from __future__ import annotations
 
 import os
-
-from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql.types import (
-    DoubleType,
-    LongType,
-    MapType,
-    StringType,
-    StructField,
-    StructType,
-    TimestampType,
-)
 
 TESTDATA_TABLES = (
     "region",
@@ -45,55 +25,3 @@ TESTDATA_TABLES = (
 )
 
 DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-
-
-# --- yamon-native stream schemas (reference data model) -------------------
-
-# Metric: reference common/metric.go:16-23 / res/schema.sql:2-18
-METRIC_SCHEMA = StructType(
-    [
-        StructField("when", TimestampType(), False),
-        StructField("when_ns", LongType(), True),  # DateTime64(9) fidelity
-        StructField("type", StringType(), False),  # 'gauge' | 'counter'
-        StructField("host", StringType(), False),
-        StructField("name", StringType(), False),
-        StructField("value", DoubleType(), False),
-        StructField("tags", MapType(StringType(), StringType(), False), False),
-    ]
-)
-
-# LogEntry: reference common/log.go:5-12 / res/schema.sql:86-102
-LOG_SCHEMA = StructType(
-    [
-        StructField("when", TimestampType(), False),
-        StructField("host", StringType(), False),
-        StructField("service", StringType(), False),
-        StructField("level", StringType(), False),
-        StructField("data", StringType(), False),
-        StructField("tags", MapType(StringType(), StringType(), False), False),
-    ]
-)
-
-# Event: reference common/event.go:8-14 / res/schema.sql:106-121
-EVENT_SCHEMA = StructType(
-    [
-        StructField("when", TimestampType(), False),
-        StructField("host", StringType(), False),
-        StructField("type", StringType(), False),
-        StructField("data", StringType(), False),  # JSON payload
-        StructField("tags", MapType(StringType(), StringType(), False), False),
-    ]
-)
-
-METRIC_TYPES = ("gauge", "counter")  # Enum8, res/schema.sql:4
-
-
-def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    """Load every testdata table as a DataFrame (lazy parquet scans)."""
-    return {name: spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet")) for name in TESTDATA_TABLES}
-
-
-def register_views(spark: SparkSession, sf_dir: str) -> None:
-    """Register the testdata tables as temp views for spark.sql queries."""
-    for name, df in load_tables(spark, sf_dir).items():
-        df.createOrReplaceTempView(name)

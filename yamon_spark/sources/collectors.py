@@ -4,7 +4,8 @@ metric rows.
 The reference runs these as in-process goroutines reading /proc and
 emitting counters/gauges (collector/*.go). Re-expressed Spark-first:
 each collector is a pure parser ``lines DataFrame -> metrics DataFrame``
-(METRIC_SCHEMA shape) built from split/explode/filter built-ins — the
+(``when``, ``type``, ``host``, ``name``, ``value``, ``tags``; see
+``_metric``) built from split/explode/filter built-ins — the
 agent-side acquisition (reading /proc, exec'ing df) ships its raw text
 into the landing zone, and parsing/fan-out runs distributed. One
 snapshot = one lines-DataFrame; ``when`` is parse time — the same
