@@ -10,22 +10,16 @@ import pytest
 
 from pyspark.sql import functions as F
 
-from yamon_spark.engine import TABLES, Engine, time_bucket
+from yamon_spark.engine import Engine, time_bucket
 from yamon_spark.streaming import pipeline as P
 
 
-@pytest.fixture(scope="module")
-def ingested(spark, tmp_path_factory):
-    tmp = tmp_path_factory.mktemp("engine")
+def _ingest(spark, tmp, name, metrics):
+    """Land one body of ``metrics`` under ``tmp`` and commit it to
+    ``tmp/out`` with one pipeline run."""
     landing = tmp / "landing"
-    landing.mkdir()
-    metrics = []
-    # two counter series + one gauge, 90s apart
-    for i, ts in enumerate(["10:00:00", "10:01:30", "10:03:00"]):
-        metrics.append({"t": f"2024-05-01T{ts}Z", "m": "counter", "h": "x", "n": "reqs", "v": 100.0 * (i + 1), "g": {"iface": "eth0"}})
-    metrics.append({"t": "2024-05-01T10:04:30Z", "m": "counter", "h": "x", "n": "reqs", "v": 50.0, "g": {"iface": "eth0"}})  # reset
-    metrics.append({"t": "2024-05-01T10:00:10Z", "m": "gauge", "h": "x", "n": "temp", "v": 36.6, "g": {}})
-    (landing / "b.jsonl").write_text(json.dumps({"m": metrics, "l": [], "e": []}) + "\n")
+    landing.mkdir(exist_ok=True)
+    (landing / name).write_text(json.dumps({"m": metrics, "l": [], "e": []}) + "\n")
     cfg = P.PipelineConfig(
         landing_dir=str(landing),
         out_dir=str(tmp / "out"),
@@ -33,6 +27,18 @@ def ingested(spark, tmp_path_factory):
         hostname="agent",
     )
     P.run_pipeline_once(spark, cfg)
+
+
+@pytest.fixture(scope="module")
+def ingested(spark, tmp_path_factory):
+    tmp = tmp_path_factory.mktemp("engine")
+    metrics = []
+    # two counter series + one gauge, 90s apart
+    for i, ts in enumerate(["10:00:00", "10:01:30", "10:03:00"]):
+        metrics.append({"t": f"2024-05-01T{ts}Z", "m": "counter", "h": "x", "n": "reqs", "v": 100.0 * (i + 1), "g": {"iface": "eth0"}})
+    metrics.append({"t": "2024-05-01T10:04:30Z", "m": "counter", "h": "x", "n": "reqs", "v": 50.0, "g": {"iface": "eth0"}})  # reset
+    metrics.append({"t": "2024-05-01T10:00:10Z", "m": "gauge", "h": "x", "n": "temp", "v": 36.6, "g": {}})
+    _ingest(spark, tmp, "b.jsonl", metrics)
     return Engine(spark, str(tmp / "out"))
 
 
@@ -41,6 +47,23 @@ def test_sql_over_views(spark, ingested):
     assert n == 5
     lts = ingested.sql("SELECT * FROM metrics_counter_lts ORDER BY value").collect()
     assert len(lts) >= 1
+
+
+def test_sql_binds_only_the_tables_it_names(spark, ingested):
+    session = spark.newSession()
+    Engine(session, ingested.data_dir).sql("SELECT count(*) FROM metrics_counter_lts").collect()
+    views = [t.name for t in session.catalog.listTables() if t.isTemporary]
+    assert views == ["metrics_counter_lts"]
+
+
+def test_sql_sees_rows_committed_after_the_engine_was_built(spark, tmp_path):
+    gauge = {"t": "2024-05-01T10:00:00Z", "m": "gauge", "h": "x", "n": "temp", "v": 1.0, "g": {}}
+    _ingest(spark, tmp_path, "b1.jsonl", [gauge])
+    engine = Engine(spark, str(tmp_path / "out"))
+    count = "SELECT count(*) AS n FROM metrics"
+    assert engine.sql(count).first().n == 1
+    _ingest(spark, tmp_path, "b2.jsonl", [gauge, {**gauge, "t": "2024-05-02T10:00:00Z"}])
+    assert engine.sql(count).first().n == 3
 
 
 def test_tag_filter_uses_index_columns(spark, ingested):
@@ -80,11 +103,6 @@ def test_adhoc_rollup(spark, ingested):
     assert len(r) == 1 and r[0].value == 650.0  # all four samples in one 5-min bucket
     g = ingested.rollup("gauge", 60).collect()
     assert len(g) == 1 and g[0].value == 36.6
-
-
-def test_every_engine_table_has_sort_keys():
-    # the writers and Engine.maintain both take a table's order from here
-    assert set(TABLES) <= set(P.SORT_KEYS)
 
 
 def test_tag_insertion_order_never_splits_a_rollup_group(spark, tmp_path):

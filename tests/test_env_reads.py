@@ -53,4 +53,4 @@ def test_package_reads_only_the_pinned_env_vars():
                 name = _read_name(node)
                 if name is not None:
                     read.setdefault(name, []).append(os.path.relpath(path, PKG))
-    assert set(read) == {"SPARK_GRAFT_CPUS", "SPARK_GRAFT_SF_DIR", "SPARK_DRIVER_MEMORY"}, read
+    assert set(read) == {"SPARK_GRAFT_CPUS", "SPARK_DRIVER_MEMORY"}, read

@@ -1,12 +1,15 @@
-"""The document-quality decisions, each stated once.
+"""Decisions that are each stated once.
 
 The word features, the rule gate, the quality head's training stats and
 its z-score each have one definition in ``yamon_spark/operators/``
 (``text.word_features``, ``curation._gate_fails``, ``_logit_train_frames``
-and ``curation._zscore``); every operator that needs one calls it. A
-second copy could drift from the first without any error, so this test
-counts the defining source text across the package, the way
-``test_env_reads.py`` pins the environment surface.
+and ``curation._zscore``), as do the MinHash shingle hash and LSH band
+key (``dedup.shingle_hash``, ``dedup.band_key``); every operator that
+needs one calls it. The store's tables, with their sort keys and TTLs,
+are listed once, in ``plans/layout.STORE``. A second copy could drift
+from the first without any error, so this test counts the defining
+source text across the package, the way ``test_env_reads.py`` pins the
+environment surface.
 """
 
 from __future__ import annotations
@@ -49,3 +52,16 @@ def test_gate_defined_once():
     # five, in _gate_fails
     assert _count(r"GATE_MIN_WORDS, GATE_MAX_WORDS = ") == {"operators/curation.py": 1}
     assert _count(r"\b(n_words|avg_word_len|stop_ratio) [<>] (?!\d)") == {"operators/curation.py": 5}
+
+
+def test_minhash_keying_defined_once():
+    assert _count(re.escape('16, 10).cast("long") % MINHASH_P')) == {"operators/dedup.py": 1}
+    assert _count(r'F\.md5\(\s*F\.concat_ws\("\|"') == {"operators/dedup.py": 1}
+
+
+def test_rollup_tables_keyed_once():
+    # a rollup table is a key in the catalogue and in the fused writer's
+    # rollup map, and nowhere else
+    for table in ("metrics_gauge_lts", "metrics_counter_lts", "metrics_uniq_lts"):
+        keyed = _count(rf'"{table}"(?=: |\] = )')
+        assert keyed == {"plans/layout.py": 1, "streaming/pipeline.py": 1}, (table, keyed)

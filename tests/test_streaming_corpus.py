@@ -112,8 +112,7 @@ def test_engine_corpus_views_and_search(spark, tmp_path):
     )
     _run(spark, tmp_path)
     eng = Engine(spark, str(tmp_path / "out"))
-    eng.register_corpus_views()
-    assert spark.sql("SELECT count(*) FROM corpus").first()[0] == 2
+    assert eng.sql("SELECT count(*) FROM corpus").first()[0] == 2
 
     hits = eng.corpus_search("wolf", lang="de")
     plan = hits._jdf.queryExecution().executedPlan().toString()

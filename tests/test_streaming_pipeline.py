@@ -14,6 +14,7 @@ import pytest
 
 from pyspark.sql import functions as F
 
+from yamon_spark.plans.layout import STORE
 from yamon_spark.streaming import pipeline as P
 from yamon_spark.streaming import audit as A
 
@@ -269,7 +270,7 @@ def _files_by_date(table_dir):
 
 def _assert_files_sorted(table_dir, table):
     """Every parquet file of ``table`` is ordered by its ORDER BY key."""
-    keys = [*P.SORT_KEYS[table], "when"]
+    keys = [*STORE[table].sort_keys, "when"]
     for files in _files_by_date(table_dir).values():
         for f in files:
             rows = pq.read_table(f, columns=keys).to_pylist()
@@ -309,5 +310,5 @@ def test_uniq_rollup_files_sorted_by_name_then_when(spark, tmp_path, cfg):
     cfg.uniq_mv = True
     out = _run_layout(spark, tmp_path, cfg)
     assert sorted(_files_by_date(out / "metrics_uniq_lts")) == ["date=2024-05-01", "date=2024-05-02"]
-    assert P.SORT_KEYS["metrics_uniq_lts"] == ("name",)
+    assert STORE["metrics_uniq_lts"].sort_keys == ("name",)
     _assert_files_sorted(out / "metrics_uniq_lts", "metrics_uniq_lts")

@@ -137,9 +137,7 @@ def cmd_maintain(args: argparse.Namespace) -> int:
 def cmd_query(args: argparse.Namespace) -> int:
     from yamon_spark.engine import Engine
 
-    eng = Engine(_spark("yamon-query"), args.data_dir)
-    eng.register_corpus_views()
-    eng.sql(args.sql).show(args.limit, truncate=False)
+    Engine(_spark("yamon-query"), args.data_dir).sql(args.sql).show(args.limit, truncate=False)
     return 0
 
 

@@ -3,9 +3,12 @@ re-expressed as a thin facade over Spark SQL/DataFrames (SURVEY §7.1.3).
 
 The reference ships DDL and lets users write ClickHouse SQL against
 ``metrics``/``logs``/``events`` and the two LTS rollups (README.md:11-12).
-``Engine`` binds those tables (as written by the streaming pipeline) into
-a SparkSession and provides the ClickHouse-isms that don't map 1:1 to
-ANSI SQL:
+``Engine.sql`` runs such a statement over the tables the streaming
+pipeline wrote: it binds as a temp view each store table
+(``layout.STORE``) or corpus output (``layout.CORPUS_TABLES``) the
+statement names, listing its files on every call, so rows committed
+after the Engine was built are visible. ``Engine`` also provides the
+ClickHouse-isms that don't map 1:1 to ANSI SQL:
 
 - ``time_bucket``       toStartOfInterval(when, INTERVAL n unit)
 - ``rate``/``delta``    counter-series derivative (the query the
@@ -21,14 +24,12 @@ Everything returns DataFrames; compose freely with spark.sql.
 from __future__ import annotations
 
 import os
+import re
 
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from yamon_spark.plans.layout import tag_predicate
-from yamon_spark.streaming.pipeline import SORT_KEYS
-
-TABLES = ("metrics", "logs", "events", "metrics_gauge_lts", "metrics_counter_lts", "metrics_uniq_lts")
+from yamon_spark.plans.layout import CORPUS_TABLES, STORE, tag_predicate
 
 
 def canon_tags(tags: Column) -> Column:
@@ -59,37 +60,24 @@ class Engine:
         path = os.path.join(self.data_dir, name)
         return self.spark.read.parquet(path)
 
-    def register_views(self) -> None:
+    def sql(self, query: str) -> DataFrame:
+        """Run ``query`` with each store or corpus table it names (a whole
+        word, any case) bound as a temp view. A name found only in a
+        literal or a comment binds a view the statement never reads."""
         from pyspark.errors.exceptions.captured import AnalysisException
 
-        for t in TABLES:
-            path = os.path.join(self.data_dir, t)
-            if os.path.isdir(path):
+        for t in (*STORE, *CORPUS_TABLES):
+            named = re.search(rf"\b{t}\b", query, re.IGNORECASE)
+            if named and os.path.isdir(os.path.join(self.data_dir, t)):
                 try:
                     self.table(t).createOrReplaceTempView(t)
                 except AnalysisException:
                     # a sink that has committed no rows yet has no
                     # readable schema (only _SUCCESS) — skip until data lands
                     continue
-
-    def sql(self, query: str) -> DataFrame:
-        self.register_views()
         return self.spark.sql(query)
 
     # --- corpus side (streaming/corpus.py output) --------------------------
-
-    def register_corpus_views(self) -> None:
-        """Bind the curated corpus + rejects (as written by
-        streaming/corpus.py) as SQL views, when present."""
-        from pyspark.errors.exceptions.captured import AnalysisException
-
-        for t in ("corpus", "rejects"):
-            if os.path.isdir(os.path.join(self.data_dir, t)):
-                try:
-                    self.table(t).createOrReplaceTempView(t)
-                except AnalysisException:
-                    # no committed rows yet (only _SUCCESS): no schema
-                    continue
 
     def corpus_search(
         self, needle: str, lang: str | None = None, limit: int = 100
@@ -208,11 +196,11 @@ class Engine:
 
         dropped = apply_retention(self.data_dir, ttl_days=ttl_days, today=today)
         compacted: dict[str, dict] = {}
-        for t in TABLES:
+        for t, spec in STORE.items():
             path = os.path.join(self.data_dir, t)
             if not os.path.isdir(path):
                 continue
-            keys = [*SORT_KEYS[t], "when"]
+            keys = [*spec.sort_keys, "when"]
             compacted[t] = compact_table(
                 self.spark, path, target_file_bytes=target_file_bytes, sort_keys=keys
             )

@@ -26,7 +26,7 @@ design (shingle → minhash → band → bucket-join).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from yamon_spark.operators._fastlit import lit_array
@@ -319,6 +319,19 @@ def minhash_coeffs(num_hashes: int) -> list[tuple[int, int]]:
     return out
 
 
+def shingle_hash(shingle: Column) -> Column:
+    """The one MinHash base hash: a shingle's first 8 md5 hex chars as a
+    32-bit int, mod P (the batch and the per-row signatures share it)."""
+    return F.conv(F.substring(F.md5(shingle), 1, 8), 16, 10).cast("long") % MINHASH_P
+
+
+def band_key(band: int, band_size: int) -> Column:
+    """The one LSH band key: md5 of band ``band``'s signature values
+    (``sig_<i>`` columns) joined by "|" in seed order."""
+    sigs = [F.col(f"sig_{band * band_size + j}").cast("string") for j in range(band_size)]
+    return F.md5(F.concat_ws("|", *sigs))
+
+
 def minhash_signatures(docs: DataFrame, ngram: int = 3, num_hashes: int = 16) -> DataFrame:
     """One row per doc with sig_0..sig_{k-1} MinHash columns (bigint).
 
@@ -348,8 +361,7 @@ def minhash_signatures(docs: DataFrame, ngram: int = 3, num_hashes: int = 16) ->
     sh = words.select(
         "doc_id", F.explode(F.array_distinct(shingles_col(F.col("w"), ngram))).alias("shingle")
     )
-    h = F.conv(F.substring(F.md5("shingle"), 1, 8), 16, 10).cast("long") % MINHASH_P
-    hashed = sh.select("doc_id", h.alias("h"))
+    hashed = sh.select("doc_id", shingle_hash(F.col("shingle")).alias("h"))
     aggs = [
         F.min((F.lit(a) * F.col("h") + F.lit(b)) % MINHASH_P).alias(f"sig_{i}")
         for i, (a, b) in enumerate(minhash_coeffs(num_hashes))
@@ -363,13 +375,7 @@ def _band_rows(sigs: DataFrame, num_hashes: int, band_size: int) -> DataFrame:
     order) — the shared candidate-keying for corpus-wide pair search
     and incremental batch-vs-index probing."""
     n_bands = num_hashes // band_size
-    band_key_cols = [
-        F.md5(
-            F.concat_ws("|", *[F.col(f"sig_{b * band_size + j}").cast("string") for j in range(band_size)])
-        ).alias(f"bk_{b}")
-        for b in range(n_bands)
-    ]
-    keyed = sigs.select("doc_id", *band_key_cols)
+    keyed = sigs.select("doc_id", *[band_key(b, band_size).alias(f"bk_{b}") for b in range(n_bands)])
     return keyed.select(
         "doc_id",
         F.explode(
@@ -976,10 +982,8 @@ def lsh_band_tuning(
     for r in band_sizes:
         n_bands = num_hashes // r
         for b in range(n_bands):
-            key = F.md5(
-                F.concat_ws("|", *[F.col(f"sig_{b * r + j}").cast("string") for j in range(r)])
-            )
-            entries.append(F.struct(F.lit(r).alias("band_size"), F.lit(b).alias("band"), key.alias("band_key")))
+            key = band_key(b, r).alias("band_key")
+            entries.append(F.struct(F.lit(r).alias("band_size"), F.lit(b).alias("band"), key))
     rows = sigs.select(F.explode(F.array(*entries)).alias("e")).select("e.band_size", "e.band", "e.band_key")
     buckets = rows.groupBy("band_size", "band", "band_key").agg(F.count(F.lit(1)).alias("n"))
     thr = {r: round((1.0 / (num_hashes // r)) ** (1.0 / r), 4) for r in band_sizes}

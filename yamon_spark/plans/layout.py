@@ -1,4 +1,12 @@
-"""Tag-index layout helpers (SURVEY §2.4 D7, §4 optional rewrite).
+"""The store's layout: its table catalogue and its tag index
+(SURVEY §2.4 D4-D7, §4 optional rewrite).
+
+:data:`STORE` names every table the streaming pipeline writes, with its
+reference ORDER BY keys (res/schema.sql:14,33,65,98,117) and its TTL
+(res/schema.sql defaults: 30 days of detail, 365 of rollups). The
+writers, compaction (``Engine.maintain``), retention and ``Engine.sql``
+all read it. :data:`CORPUS_TABLES` names the two outputs of the
+streaming corpus pipeline, which ``Engine.sql`` binds too.
 
 The reference puts bloom-filter skip indexes on ``mapKeys(tags)`` /
 ``mapValues(tags)`` (res/schema.sql:9-10) so ``tags['k']='v'``
@@ -24,10 +32,32 @@ No Catalyst rule is needed — helper functions suffice (SURVEY §4).
 from __future__ import annotations
 
 import re
+from typing import NamedTuple
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.readwriter import DataFrameWriter
+
+
+class StoreTable(NamedTuple):
+    """One pipeline table: its ORDER BY keys minus the trailing ``when``,
+    which the writers and compaction append, and its TTL in days."""
+
+    sort_keys: tuple[str, ...]
+    ttl_days: int
+
+
+STORE = {
+    "metrics": StoreTable(("name", "host"), 30),
+    "logs": StoreTable(("service", "host"), 30),
+    "events": StoreTable(("type", "host"), 30),
+    "metrics_gauge_lts": StoreTable(("name", "host"), 365),
+    "metrics_counter_lts": StoreTable(("name", "host"), 365),
+    "metrics_uniq_lts": StoreTable(("name",), 365),
+}
+
+# the curated documents and the quality rejects (streaming/corpus.py)
+CORPUS_TABLES = ("corpus", "rejects")
 
 
 def hot_tag_col(key: str) -> str:

@@ -4,8 +4,9 @@ The reference's TTL clauses (res/schema.sql:15-18,34,66,99,118 with
 ``ttl_only_drop_parts=1``) drop whole MergeTree parts once a partition's
 date ages out. The Spark-native equivalent over date-partitioned parquet
 is a pure directory drop: O(#partitions) metadata work, zero data
-rewrite — the same cost model. Detail tables keep 30 days; rollups keep
-365 (res/schema.sql defaults).
+rewrite — the same cost model. Each table's TTL is its
+``layout.STORE`` entry: detail tables keep 30 days, rollups 365
+(res/schema.sql defaults).
 
 Records with a NULL ``when`` (missing or malformed ``t``) land in
 ``date=__HIVE_DEFAULT_PARTITION__``; its files expire by modification
@@ -19,14 +20,7 @@ import re
 import shutil
 from pathlib import Path
 
-DEFAULT_TTLS = {
-    "metrics": 30,
-    "logs": 30,
-    "events": 30,
-    "metrics_gauge_lts": 365,
-    "metrics_counter_lts": 365,
-    "metrics_uniq_lts": 365,
-}
+from yamon_spark.plans.layout import STORE
 
 _PART_RE = re.compile(r"^date=(\d{4}-\d{2}-\d{2})$")
 _NULL_PART = "date=__HIVE_DEFAULT_PARTITION__"
@@ -65,7 +59,7 @@ def apply_retention(
     location (or ``ALTER TABLE ... DROP PARTITION`` on a catalog table /
     Delta ``delete + vacuum``); the directory semantics are identical.
     """
-    ttl_days = {**DEFAULT_TTLS, **(ttl_days or {})}
+    ttl_days = {**{t: spec.ttl_days for t, spec in STORE.items()}, **(ttl_days or {})}
     # partitions are stamped from EVENT time under a UTC session, so the
     # cutoff must be today-in-UTC — the machine-local date on a UTC+13
     # host would expire a partition a full day early (ClickHouse's TTL

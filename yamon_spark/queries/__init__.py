@@ -142,7 +142,6 @@ _DRIVER_GREEN_ROUND: dict[str, int] = {
     "text_chunk_windows": 9, "vocab_growth": 9,
     # r10-vintage
     "dedup_canonical": 10, "dedup_cluster_sizes": 10,
-    "dedup_incremental": 10, "dedup_lsh_band_tuning": 10,
     "doc_length_survival": 10, "domain_mix": 10, "embed_intrinsic_dim": 10,
     "embed_kmeans": 10, "embed_pca_power": 10, "mix_repeat_plan": 10,
     "pack_sequences": 10, "q10_inner_join_dims": 10,
@@ -162,8 +161,8 @@ _DRIVER_GREEN_ROUND: dict[str, int] = {
     "train_test_split": 10,
     # r11-vintage
     "bpe_apply": 11, "contamination_ngram": 11, "dedup_clusters": 11,
-    "dedup_exact": 11, "dedup_jaccard": 11, "dedup_minhash_lsh": 11,
-    "dedup_survivors": 11, "embed_centroids": 11, "embed_norm_stats": 11,
+    "dedup_exact": 11, "dedup_jaccard": 11, "dedup_survivors": 11,
+    "embed_centroids": 11, "embed_norm_stats": 11,
     "multimodal_audio_windows": 11, "multimodal_features": 11,
     "multimodal_frames": 11, "multimodal_jpeg_roundtrip": 11,
     "multimodal_meta": 11, "multimodal_video_frames": 11,
@@ -201,16 +200,15 @@ _DRIVER_GREEN_ROUND: dict[str, int] = {
     "text_unigram_logprob": 12, "text_winnow": 12,
     # r13-vintage (freshest — back of the queue)
     "bpe_pair_counts": 13, "curriculum_mix": 13, "curriculum_plan": 13,
-    "dedup_minhash_err": 13, "dedup_semantic": 13,
-    "dedup_source_matrix": 13, "dedup_threshold_sweep": 13,
-    "dsir_weights": 13, "embed_outlier_score": 13,
-    "embedding_assign_delta": 13, "hybrid_rank_rrf": 13,
-    "multimodal_adpcm_roundtrip": 13, "multimodal_png_roundtrip": 13,
-    "pack_boundary_report": 13, "q20_hash_agg": 13, "q21_distinct_agg": 13,
-    "q22_approx_distinct": 13, "q23_grouping_sets": 13,
-    "q36_dist_windows": 13, "q37_histogram": 13, "q39_cond_aggs": 13,
-    "q45_scalar_subquery": 13, "q46_in_subquery": 13, "q67_funnel": 13,
-    "q69_time_range_window": 13, "q81_asof_tolerance": 13,
+    "dedup_semantic": 13, "dedup_source_matrix": 13,
+    "dedup_threshold_sweep": 13, "dsir_weights": 13,
+    "embed_outlier_score": 13, "embedding_assign_delta": 13,
+    "hybrid_rank_rrf": 13, "multimodal_adpcm_roundtrip": 13,
+    "multimodal_png_roundtrip": 13, "pack_boundary_report": 13,
+    "q20_hash_agg": 13, "q21_distinct_agg": 13, "q22_approx_distinct": 13,
+    "q23_grouping_sets": 13, "q36_dist_windows": 13, "q37_histogram": 13,
+    "q39_cond_aggs": 13, "q45_scalar_subquery": 13, "q46_in_subquery": 13,
+    "q67_funnel": 13, "q69_time_range_window": 13, "q81_asof_tolerance": 13,
     "q82_deadman": 13, "q83_event_transitions": 13, "q84_mad_outliers": 13,
     "q85_histogram_quantile": 13, "sim_ivf_pareto": 13,
     "sim_ivfpq_topk": 13, "sim_mmr_topk": 13, "sim_pq_recall": 13,

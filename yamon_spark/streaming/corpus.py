@@ -43,6 +43,8 @@ from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 from pyspark.sql.types import StructType
 
+from yamon_spark.plans.layout import CORPUS_TABLES
+
 DOC_WIRE_SCHEMA = (
     StructType()
     .add("doc_id", "long")
@@ -117,8 +119,7 @@ def start_corpus_pipeline(
     docs = docs.withColumn("digest", F.sha2("text", 256))
     deduped = docs.withWatermark("arrival", watermark).dropDuplicatesWithinWatermark(["digest"])
 
-    corpus_path = os.path.join(out_dir, "corpus")
-    rejects_path = os.path.join(out_dir, "rejects")
+    corpus_path, rejects_path = (os.path.join(out_dir, t) for t in CORPUS_TABLES)
 
     def write_epoch(batch: DataFrame, epoch: int) -> None:
         # doc_id must be join-unique within the batch: a repeated id with

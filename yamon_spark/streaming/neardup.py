@@ -43,7 +43,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
-from yamon_spark.operators.dedup import MINHASH_P, minhash_coeffs
+from yamon_spark.operators.dedup import MINHASH_P, band_key, minhash_coeffs, shingle_hash
 from yamon_spark.operators.text import shingles_col, words_col
 
 FLAG_SCHEMA = "doc_id long, band int, owner_doc long"
@@ -55,21 +55,14 @@ def rowwise_signature_cols(
 ) -> list[Column]:
     """MinHash signature columns computed per row (no explode/groupBy):
     sig_i = min over distinct shingles of (a_i*h + b_i) mod P, h the
-    md5-derived 32-bit shingle hash — the same math as
+    shared ``dedup.shingle_hash`` — the same math as
     operators.dedup.minhash_signatures, in streaming-safe projection
     form."""
     shd = F.array_distinct(shingles_col(words_col(text), ngram))
 
     def perm(a: int, b: int) -> Column:
         return F.array_min(
-            F.transform(
-                shd,
-                lambda s: (
-                    F.lit(a) * (F.conv(F.substring(F.md5(s), 1, 8), 16, 10).cast("long") % MINHASH_P)
-                    + F.lit(b)
-                )
-                % MINHASH_P,
-            )
+            F.transform(shd, lambda s: (F.lit(a) * shingle_hash(s) + F.lit(b)) % MINHASH_P)
         )
 
     return [perm(a, b).alias(f"sig_{i}") for i, (a, b) in enumerate(minhash_coeffs(num_hashes))]
@@ -79,19 +72,12 @@ def band_key_rows(
     docs: DataFrame, ngram: int = 3, num_hashes: int = 16, band_size: int = 4
 ) -> DataFrame:
     """(doc_id, band, band_key) rows from the per-row signatures — the
-    same md5-of-concatenated-sigs band keying as operators.dedup's
-    _band_rows, so live buckets and batch buckets collide identically."""
+    same ``dedup.band_key`` as operators.dedup's _band_rows, so live
+    buckets and batch buckets collide identically."""
     n_bands = num_hashes // band_size
     sigs = docs.select("doc_id", *rowwise_signature_cols(docs["text"], ngram, num_hashes))
     bands = [
-        F.struct(
-            F.lit(b).alias("band"),
-            F.md5(
-                F.concat_ws(
-                    "|", *[F.col(f"sig_{b * band_size + j}").cast("string") for j in range(band_size)]
-                )
-            ).alias("band_key"),
-        )
+        F.struct(F.lit(b).alias("band"), band_key(b, band_size).alias("band_key"))
         for b in range(n_bands)
     ]
     return sigs.select("doc_id", F.explode(F.array(*bands)).alias("bk")).select(

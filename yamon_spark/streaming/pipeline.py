@@ -47,20 +47,8 @@ from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
 from yamon_spark.functions.transforms import metadata_filter, metric_type_gate
-from yamon_spark.plans.layout import check_hot_tag_keys, with_hot_tag_cols, with_tag_blooms
+from yamon_spark.plans.layout import STORE, check_hot_tag_keys, with_hot_tag_cols, with_tag_blooms
 from yamon_spark.sources import wire
-
-# reference sort keys of every table the pipeline writes
-# (res/schema.sql:14,33,65,98,117) minus the trailing timestamp, which
-# the writers and compaction append
-SORT_KEYS = {
-    "metrics": ("name", "host"),
-    "logs": ("service", "host"),
-    "events": ("type", "host"),
-    "metrics_gauge_lts": ("name", "host"),
-    "metrics_counter_lts": ("name", "host"),
-    "metrics_uniq_lts": ("name",),
-}
 
 
 def gauge_rollup(metrics: DataFrame) -> DataFrame:
@@ -175,7 +163,7 @@ def _write_order(table: str) -> list[str]:
     spill-merge can interleave equal-date rows and destroy the secondary
     (keys, when) order that D6 min/max skipping needs). With it, this
     sort replaces the write's, so sorting adds no operator."""
-    return ["date", *SORT_KEYS[table], "when"]
+    return ["date", *STORE[table].sort_keys, "when"]
 
 
 def _write_detail_batch(batch: DataFrame, table: str, cfg: PipelineConfig) -> None:
@@ -234,7 +222,7 @@ def _fused_metrics_writer(metrics: DataFrame, cfg: PipelineConfig) -> StreamingQ
     reference MVs, which aggregate each ClickHouse insert block
     independently into a plain-MergeTree target (res/schema.sql:30,49).
     Each rollup block is written sorted by its table's ORDER BY key
-    (``SORT_KEYS``, res/schema.sql:33,65), as a MergeTree part is. The
+    (``layout.STORE``, res/schema.sql:33,65), as a MergeTree part is. The
     rollups take no rebalance: their groupBy exchange is already
     AQE-sized, and only the detail write reads the core-split text
     source directly."""
