@@ -66,6 +66,25 @@ def test_sql_sees_rows_committed_after_the_engine_was_built(spark, tmp_path):
     assert engine.sql(count).first().n == 3
 
 
+@pytest.mark.parametrize("metrics_dir", ["no committed rows", "missing"])
+def test_sql_drops_a_stale_view_when_its_table_cannot_be_bound(
+    spark, ingested, tmp_path, metrics_dir
+):
+    """A second Engine on the same session must not answer from the view
+    the first one bound: a table it cannot bind is unknown, as it is to
+    a fresh session."""
+    from pyspark.errors import AnalysisException
+
+    session = spark.newSession()
+    count = "SELECT count(*) AS n FROM metrics"
+    assert Engine(session, ingested.data_dir).sql(count).first().n == 5
+    if metrics_dir == "no committed rows":
+        (tmp_path / "metrics").mkdir()
+        (tmp_path / "metrics" / "_SUCCESS").touch()
+    with pytest.raises(AnalysisException, match="TABLE_OR_VIEW_NOT_FOUND"):
+        Engine(session, str(tmp_path)).sql(count)
+
+
 def test_tag_filter_uses_index_columns(spark, ingested):
     df = ingested.table("metrics")
     assert "tag_keys" not in df.columns  # one tag index: the map, no array copies

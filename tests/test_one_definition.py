@@ -6,7 +6,12 @@ its z-score each have one definition in ``yamon_spark/operators/``
 and ``curation._zscore``), as do the MinHash shingle hash and LSH band
 key (``dedup.shingle_hash``, ``dedup.band_key``); every operator that
 needs one calls it. The store's tables, with their sort keys and TTLs,
-are listed once, in ``plans/layout.STORE``. A second copy could drift
+are listed once, in ``plans/layout.STORE``. The whitespace word split
+is ``text.words_col``. The two durable-write rules live in
+``plans/durable.py``: ``write_epoch`` is the one replay-safe epoch
+overwrite (the only dynamic partition overwrite in the package), and
+``recover_swaps`` is the one recovery sweep for the crash-safe directory
+swap that compaction and the IVF rebuild share. A second copy could drift
 from the first without any error, so this test counts the defining
 source text across the package, the way ``test_env_reads.py`` pins the
 environment surface.
@@ -65,3 +70,20 @@ def test_rollup_tables_keyed_once():
     for table in ("metrics_gauge_lts", "metrics_counter_lts", "metrics_uniq_lts"):
         keyed = _count(rf'"{table}"(?=: |\] = )')
         assert keyed == {"plans/layout.py": 1, "streaming/pipeline.py": 1}, (table, keyed)
+
+
+def test_word_split_defined_once():
+    # the /proc field splits in sources/ are a different decision
+    hits = {f: n for f, n in _count(re.escape(r'r"\s+"')).items() if f.startswith("operators/")}
+    assert hits == {"operators/text.py": 1}
+
+
+def test_dynamic_partition_overwrite_defined_once():
+    assert _count("partitionOverwriteMode") == {"plans/durable.py": 1}
+
+
+def test_swap_recovery_defined_once():
+    # the restore-the-old-dir step: a hidden old copy renamed back to
+    # its missing live dir
+    assert _count(r"if not live\.exists\(\):\s+\w+\.rename\(live\)") == {"plans/durable.py": 1}
+    assert _count(r"def _(ivf_)?recover\b") == {}

@@ -993,7 +993,8 @@ def test_near_dup_pairs_sub_bucketing_default(spark):
 def test_ivf_recover_spares_unrelated_dotdirs_and_log_listing_fallback(spark, tmp_path, sf_dir):
     """ADVICE r9 regressions, both filesystem-shape contracts:
 
-    1. _ivf_recover removes ONLY the exact debris names a rebuild
+    1. The rebuild's recovery sweep (durable.recover_swaps over the
+       rebuild's suffixes) removes ONLY the exact debris names a rebuild
        creates — an unrelated dot-dir whose name merely CONTAINS
        '.rebuild-tmp' survives a sibling index's recovery sweep.
     2. _log_partition_values serves a scheme'd (non-plain-local) log
@@ -1002,11 +1003,13 @@ def test_ivf_recover_spares_unrelated_dotdirs_and_log_listing_fallback(spark, tm
     import os
 
     from yamon_spark.operators.similarity import (
-        _ivf_recover,
+        _REBUILD_DEBRIS,
+        _REBUILD_OLD,
         _log_partition_values,
         ivf_append,
         ivf_build,
     )
+    from yamon_spark.plans.durable import recover_swaps
     from yamon_spark.queries import table as load_table
 
     emb = load_table(spark, sf_dir, "embeddings")
@@ -1018,7 +1021,7 @@ def test_ivf_recover_spares_unrelated_dotdirs_and_log_listing_fallback(spark, tm
     (bystander / "keep.txt").write_text("precious")
     debris = tmp_path / ".ivf.rebuild-tmp"
     debris.mkdir()
-    _ivf_recover(tmp_path)
+    recover_swaps(tmp_path, _REBUILD_OLD, *_REBUILD_DEBRIS)
     assert bystander.is_dir() and (bystander / "keep.txt").read_text() == "precious"
     assert not debris.exists()
 

@@ -98,6 +98,41 @@ def test_corpus_pipeline_checkpoint_resume_and_cross_batch_dedup(spark, tmp_path
     assert corpus.where(F.col("doc_id") == 1).count() == 1
 
 
+def test_corpus_epoch_replay_is_idempotent(spark, tmp_path):
+    """A crash after an epoch's writes and before its commit replays the
+    epoch on restart; corpus and rejects keep one copy of its rows."""
+    base = {"lang": "en", "source": "s", "ts": "2024-05-01T10:00:00Z"}
+    _land(tmp_path / "landing", "b1.jsonl", [
+        dict(base, doc_id=1, text=GOOD),
+        dict(base, doc_id=3, text="tiny"),
+    ])
+    _run(spark, tmp_path)
+
+    def tables():
+        return {
+            t: sorted(tuple(r) for r in spark.read.parquet(str(tmp_path / "out" / t)).collect())
+            for t in ("corpus", "rejects")
+        }
+
+    before = tables()
+    # crash after epoch 0's writes, before its commit: drop its commit
+    # and what the stream logged after it (the trailing no-data batch
+    # that advances the dedup watermark)
+    ckpt = tmp_path / "ckpt"
+    for log, first in (("commits", 0), ("offsets", 1)):
+        for p in (ckpt / log).iterdir():
+            if int(p.name.lstrip(".").split(".")[0]) >= first:
+                p.unlink()
+    assert not (ckpt / "commits" / "0").exists()
+    _run(spark, tmp_path)
+
+    assert (ckpt / "commits" / "0").exists()  # the restart replayed epoch 0
+    assert tables() == before
+    for t in ("corpus", "rejects"):
+        epochs = [p.name for p in (tmp_path / "out" / t).glob("ingest_epoch*")]
+        assert epochs == ["ingest_epoch=0"], (t, epochs)
+
+
 def test_engine_corpus_views_and_search(spark, tmp_path):
     from yamon_spark.engine import Engine
 

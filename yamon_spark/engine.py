@@ -67,14 +67,16 @@ class Engine:
         from pyspark.errors.exceptions.captured import AnalysisException
 
         for t in (*STORE, *CORPUS_TABLES):
-            named = re.search(rf"\b{t}\b", query, re.IGNORECASE)
-            if named and os.path.isdir(os.path.join(self.data_dir, t)):
-                try:
-                    self.table(t).createOrReplaceTempView(t)
-                except AnalysisException:
-                    # a sink that has committed no rows yet has no
-                    # readable schema (only _SUCCESS) — skip until data lands
-                    continue
+            if not re.search(rf"\b{t}\b", query, re.IGNORECASE):
+                continue
+            try:
+                self.table(t).createOrReplaceTempView(t)
+            except AnalysisException:
+                # no dir (PATH_NOT_FOUND) or no committed rows yet (only
+                # _SUCCESS: no readable schema). Drop any view an earlier
+                # Engine bound on this session, so the statement fails
+                # with TABLE_OR_VIEW_NOT_FOUND instead of reading it.
+                self.spark.catalog.dropTempView(t)
         return self.spark.sql(query)
 
     # --- corpus side (streaming/corpus.py output) --------------------------

@@ -119,7 +119,7 @@ def dedup_budget_impact(docs: DataFrame) -> DataFrame:
     t = docs.select(
         "doc_id",
         F.sha2(F.col("text").cast("binary"), 256).alias("dg"),
-        F.size(F.split(F.trim("text"), r"\s+")).cast("double").alias("tokens"),
+        F.size(words_col(F.col("text"))).cast("double").alias("tokens"),
     )
     g = t.groupBy("dg").agg(
         F.count(F.lit(1)).cast("double").alias("n"),
@@ -154,7 +154,6 @@ def corpus_snapshot_diff(old_docs: DataFrame, new_docs: DataFrame) -> DataFrame:
     where the scalable plan is a shuffle HASH join (no sort is needed on
     a unique key — hinted explicitly so Spark does not fall back to
     sort-merge); one uniform-key shuffle, then a 4-row aggregate."""
-    toks = lambda c: F.size(F.split(F.trim(c), r"\s+")).cast("bigint")  # noqa: E731
     old = old_docs.select("doc_id", F.col("text").alias("old_text"))
     new = new_docs.select("doc_id", F.col("text").alias("new_text"))
     j = old.hint("shuffle_hash").join(new.hint("shuffle_hash"), "doc_id", "full_outer")
@@ -164,8 +163,9 @@ def corpus_snapshot_diff(old_docs: DataFrame, new_docs: DataFrame) -> DataFrame:
         .when(F.col("old_text") != F.col("new_text"), "changed")
         .otherwise("unchanged")
     )
+    toks = F.size(words_col(F.coalesce("new_text", "old_text"))).cast("bigint")
     return (
-        j.select(status.alias("status"), toks(F.coalesce("new_text", "old_text")).alias("t"))
+        j.select(status.alias("status"), toks.alias("t"))
         .groupBy("status")
         .agg(F.count(F.lit(1)).cast("bigint").alias("n_docs"), F.sum("t").alias("n_tokens"))
         .orderBy("status")

@@ -892,45 +892,30 @@ def _log_partition_values(spark, log_path: str, col: str) -> list[int]:
     # read error must not silently reset n_prior to 0 (ADVICE r10)
 
 
-def _ivf_recover(parent) -> None:
-    """Crash recovery for ivf_rebuild (compaction's contract): a leftover
-    ``.<name>.rebuild-old`` whose live dir is missing means the process
-    died mid-swap — restore it; any other rebuild tmp/old leftover is
-    stale and dropped. Tmp matching covers EXACTLY the two names a
-    rebuild creates — ``.<name>.rebuild-tmp`` and
-    ``.<name>.rebuild-tmp_centroids`` — never an arbitrary substring
-    hit (an unrelated dot-dir that merely CONTAINS '.rebuild-tmp' must
-    survive the sweep; ADVICE r9). Sweeps every rebuild leftover under
-    `parent`, so sibling indexes recover each other's debris too."""
-    import shutil
-
-    for p in list(parent.iterdir()):
-        if not p.is_dir() or not p.name.startswith("."):
-            continue
-        if p.name.endswith(".rebuild-old"):
-            live = parent / p.name[1 : -len(".rebuild-old")]
-            if not live.exists():
-                p.rename(live)
-                continue
-        if p.name.endswith((".rebuild-old", ".rebuild-tmp", ".rebuild-tmp_centroids")):
-            shutil.rmtree(p, ignore_errors=True)
+# the hidden siblings an IVF rebuild writes next to the index: the old
+# index and centroids dirs mid-swap, and the tmp index, whose centroids
+# ivf_build writes beside it as ``.<name>.rebuild-tmp_centroids``
+_REBUILD_OLD = ".rebuild-old"
+_REBUILD_TMP = ".rebuild-tmp"
+_REBUILD_DEBRIS = (_REBUILD_TMP, _REBUILD_TMP + "_centroids")
 
 
 def _ivf_read_guard(index_path: str) -> None:
     """Self-healing read path (the other half of ivf_rebuild's crash
-    contract): if the live index or centroids directory is MISSING but
-    rebuild debris exists next to it, a rebuild died inside the rename
-    window — run :func:`_ivf_recover` now instead of failing every
+    contract): if the live index or centroids directory is MISSING, a
+    rebuild may have died inside the rename window — run the rebuild's
+    recovery sweep now instead of failing every
     ivf_search/ivf_append/ivf_recall until the next rebuild happens to
     sweep. Cost on the happy path is two existence checks; recovery
     itself only ever renames/removes dot-prefixed rebuild leftovers."""
     from pathlib import Path
 
+    from yamon_spark.plans.durable import recover_swaps
+
     root = Path(index_path.rstrip("/"))
     cents = Path(index_path.rstrip("/") + "_centroids")
     if (not root.exists() or not cents.exists()) and root.parent.exists():
-        if any(".rebuild-" in p.name for p in root.parent.iterdir()):
-            _ivf_recover(root.parent)
+        recover_swaps(root.parent, _REBUILD_OLD, *_REBUILD_DEBRIS)
 
 
 def ivf_rebuild(
@@ -941,24 +926,25 @@ def ivf_rebuild(
     sags recall@k below the pipeline's floor, re-fit the coarse
     quantizer over the index's current contents and swap it in without
     a reader-visible gap. The new index + centroids build under
-    DOT-PREFIXED tmp siblings (invisible to Spark's file listing, the
-    compaction trick), then swap by directory rename: index first, then
-    centroids.
+    DOT-PREFIXED tmp siblings (invisible to Spark's file listing), then
+    swap in through ``durable.swap_dir``: index first, then centroids.
 
-    Crash contract (compaction's): each rename is atomic, but the swap is
-    FOUR renames, so three crash windows exist — (1) after
-    ``root.rename(old)``: the live INDEX dir is missing; (2) between the
-    index swap and ``cents.rename(old_cents)``: NEW index with OLD
+    Crash contract (``durable.recover_swaps``): each rename is atomic,
+    but the two swaps are FOUR renames, so three crash windows exist —
+    (1) after the index's ``live -> .rebuild-old`` rename: the live INDEX
+    dir is missing; (2) between the two swaps: NEW index with OLD
     centroids (routing degrades, results stay correct — probes rerank
-    exactly inside cells); (3) after ``cents.rename(old_cents)``: the
-    live CENTROIDS dir is missing. Windows 1 and 3 are healed by
-    restoring the ``.rebuild-old`` whose live dir is missing; recovery
-    runs both at the start of every rebuild AND lazily on the read path
-    (:func:`_ivf_read_guard` in ivf_search/ivf_append/ivf_recall), so a
-    crashed swap never strands readers until the next rebuild. Window 3's
-    restore yields OLD centroids with (possibly) a NEW index — again
-    routing-only degradation. Tmp debris (including the
-    ``.rebuild-tmp_centroids`` sibling) is dropped by substring match.
+    exactly inside cells); (3) after the centroids' ``live ->
+    .rebuild-old`` rename: the live CENTROIDS dir is missing. Windows 1
+    and 3 are healed by restoring the ``.rebuild-old`` whose live dir is
+    missing; recovery runs both at the start of every rebuild AND lazily
+    on the read path (:func:`_ivf_read_guard` in
+    ivf_search/ivf_append/ivf_recall), so a crashed swap never strands
+    readers until the next rebuild. Window 3's restore yields OLD
+    centroids with (possibly) a NEW index — again routing-only
+    degradation. The sweep drops tmp debris by exact suffix, and covers
+    every rebuild leftover under the index's parent, so sibling indexes
+    recover each other's debris too.
 
     Cost: one KMeans fit on a sample + one full assignment scan — the
     ivf_build price, paid at drift cadence (weeks), not per batch. The
@@ -966,24 +952,16 @@ def ivf_rebuild(
     (a replayed old epoch would re-add vectors the rebuild folded in)."""
     from pathlib import Path
 
-    import shutil
+    from yamon_spark.plans.durable import hidden, recover_swaps, swap_dir
 
     root = Path(index_path.rstrip("/"))
     cents = Path(index_path.rstrip("/") + "_centroids")
-    _ivf_recover(root.parent)
+    recover_swaps(root.parent, _REBUILD_OLD, *_REBUILD_DEBRIS)
     vecs = spark.read.parquet(str(root)).select("vec_id", "embedding")
-    tmp = root.parent / f".{root.name}.rebuild-tmp"
+    tmp = hidden(root, _REBUILD_TMP)
     ivf_build(vecs, str(tmp), n_cells=n_cells, sample_fraction=sample_fraction, seed=seed)
-    tmp_cents = root.parent / f"{tmp.name}_centroids"
-
-    old = root.parent / f".{root.name}.rebuild-old"
-    old_cents = root.parent / f".{cents.name}.rebuild-old"
-    root.rename(old)
-    tmp.rename(root)
-    cents.rename(old_cents)
-    tmp_cents.rename(cents)
-    shutil.rmtree(old, ignore_errors=True)
-    shutil.rmtree(old_cents, ignore_errors=True)
+    swap_dir(root, tmp, _REBUILD_OLD)
+    swap_dir(cents, root.parent / f"{tmp.name}_centroids", _REBUILD_OLD)
 
 
 def ivf_recall(

@@ -14,26 +14,24 @@ filters stay effective (other columns, such as the tag arrays older
 versions wrote, pass through). Only ``date=YYYY-MM-DD`` partitions are
 rewritten: retention ages the NULL-date partition by file mtime.
 
-The rewrite is atomic per partition: write to a DOT-PREFIXED sibling
-tmp dir, then directory-swap. The dot prefix matters twice over —
-Spark's file listing ignores paths whose name starts with ``.`` or
-``_``, so in-flight/crashed tmp and old dirs are invisible to readers
-AND distinguishable from live ``date=`` partitions (a plain
-``date=X.compact-tmp`` sibling would be DISCOVERED as a partition,
-double-counting every row and breaking date-type inference). A crash
-leaves either the original intact or a recoverable ``.compact-old``;
-``_recover`` (run at the start of every stats/compact pass) restores a
-missing live dir from its old copy and clears the rest.
+The rewrite is atomic per partition: write to the DOT-PREFIXED sibling
+``.date=X.compact-tmp``, then swap it in through ``durable.swap_dir``
+(a plain ``date=X.compact-tmp`` sibling would be DISCOVERED as a
+partition, double-counting every row and breaking date-type
+inference). A crash leaves either the original intact or a recoverable
+``.date=X.compact-old``; ``durable.recover_swaps``, run at the start of
+every stats/compact pass, restores a missing live dir from its old copy
+and clears the rest.
 """
 
 from __future__ import annotations
 
 import math
-import shutil
 from pathlib import Path
 
 from pyspark.sql import SparkSession
 
+from yamon_spark.plans.durable import hidden, recover_swaps, swap_dir
 from yamon_spark.plans.layout import with_tag_blooms
 from yamon_spark.plans.retention import _PART_RE
 
@@ -42,33 +40,13 @@ _TMP_SUFFIX = ".compact-tmp"
 _OLD_SUFFIX = ".compact-old"
 
 
-def _hidden(table_path: str, part_name: str, suffix: str) -> Path:
-    return Path(table_path) / f".{part_name}{suffix}"
-
-
-def _recover(root: Path) -> None:
-    """Crash recovery: a leftover ``.date=X.compact-old`` whose live dir
-    is missing means we died between the two renames — restore it; any
-    other leftover tmp/old dir is stale and dropped."""
-    for part in list(root.iterdir()):
-        if not part.is_dir() or not part.name.startswith("."):
-            continue
-        if part.name.endswith(_OLD_SUFFIX):
-            live = root / part.name[1 : -len(_OLD_SUFFIX)]
-            if not live.exists():
-                part.rename(live)
-                continue
-        if part.name.endswith(_OLD_SUFFIX) or part.name.endswith(_TMP_SUFFIX):
-            shutil.rmtree(part, ignore_errors=True)
-
-
 def partition_stats(table_path: str) -> dict[str, tuple[int, int]]:
     """{partition_dir_name: (n_files, total_bytes)} for dated partitions."""
     out: dict[str, tuple[int, int]] = {}
     root = Path(table_path)
     if not root.is_dir():
         return out
-    _recover(root)
+    recover_swaps(root, _OLD_SUFFIX, _TMP_SUFFIX)
     for part in sorted(root.iterdir()):
         if not part.is_dir() or not _PART_RE.match(part.name):
             continue
@@ -85,7 +63,9 @@ def compact_table(
     min_files: int = 2,
 ) -> dict[str, int]:
     """Compact every date partition with more than ``min_files`` files
-    down to ``ceil(bytes/target)`` files. Returns {partition: n_files_after}.
+    down to ``ceil(bytes/target)`` files. Each rewrite lands in its
+    hidden tmp sibling and swaps in through ``durable.swap_dir``.
+    Returns {partition: n_files_after}.
     """
     done: dict[str, int] = {}
     for part_name, (n_files, total_bytes) in partition_stats(table_path).items():
@@ -93,7 +73,7 @@ def compact_table(
         if n_files <= max(min_files, n_target):
             continue
         part_dir = Path(table_path) / part_name
-        tmp_dir = _hidden(table_path, part_name, _TMP_SUFFIX)
+        tmp_dir = hidden(part_dir, _TMP_SUFFIX)
         df = spark.read.parquet(str(part_dir)).repartition(n_target)
         # tables differ in dimension columns (e.g. the uniq MV has no
         # host); sort by whichever of the requested keys exist
@@ -107,11 +87,6 @@ def compact_table(
         hot = tuple(c[len("tag_"):] for c in df.columns if c.startswith("tag_"))
         writer = with_tag_blooms(writer, hot_keys=hot)
         writer.parquet(str(tmp_dir))
-        # atomic-ish swap: old dir out of the way (hidden), tmp in, old
-        # dropped; _recover handles a crash at any point in between
-        old_dir = _hidden(table_path, part_name, _OLD_SUFFIX)
-        part_dir.rename(old_dir)
-        tmp_dir.rename(part_dir)
-        shutil.rmtree(old_dir, ignore_errors=True)
+        swap_dir(part_dir, tmp_dir, _OLD_SUFFIX)
         done[part_name] = n_target
     return done

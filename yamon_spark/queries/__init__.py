@@ -180,8 +180,7 @@ _DRIVER_GREEN_ROUND: dict[str, int] = {
     # r12-vintage
     "ann_range_search": 12, "contamination_report": 12,
     "contamination_semantic": 12, "corpus_profile": 12,
-    "corpus_shuffle": 12, "corpus_snapshot_diff": 12,
-    "dedup_budget_impact": 12, "dedup_cap_plan": 12, "dedup_substring": 12,
+    "corpus_shuffle": 12, "dedup_cap_plan": 12, "dedup_substring": 12,
     "domain_mix_temperature": 12, "multimodal_audio_trim": 12,
     "multimodal_avi_roundtrip": 12, "multimodal_bmp_roundtrip": 12,
     "multimodal_mjpeg_roundtrip": 12, "multimodal_wav_roundtrip": 12,

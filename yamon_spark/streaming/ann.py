@@ -9,22 +9,19 @@ micro-batch is assigned to the EXISTING persisted cells via the shared
 centroid argmin, cost independent of index size) and written under the
 index root partitioned by (ingest_epoch, cell).
 
-Delivery semantics: foreachBatch is at-least-once, and a plain parquet
-append would double-write a replayed epoch. The append is made
-idempotent the same way the corpus pipeline's is — partition on the
-epoch id with dynamic partition overwrite, so a replayed batch
-OVERWRITES its own (ingest_epoch=N, cell=*) partitions instead of
-appending duplicates. Probe-side reads are unchanged: `cell` is still a
-partition column, so ivf_search/ivf_recall directory-prune on it at the
-second level.
+Delivery semantics: each epoch's vectors land through
+``durable.write_epoch``, so a replayed batch rewrites its own
+(ingest_epoch=N, cell=*) partitions instead of appending duplicates.
+Probe-side reads are unchanged: `cell` is still a partition column, so
+ivf_search/ivf_recall directory-prune on it at the second level.
 
 Observability: every epoch logs one row (n_rows, n_cells_touched,
-recall) to ``<index>_epochlog``, itself epoch-partitioned with dynamic
-overwrite (a replayed epoch rewrites its own log row — the log can
-never disagree with the data). With ``recall_every=N``, every Nth
-distinct epoch runs the one-pass :func:`ivf_recall` drift gate and
-records recall@k — the number that schedules a quantizer rebuild. The
-streaming query itself is named, so the self-metrics listener
+recall) to ``<index>_epochlog``, landed the same way (a replayed epoch
+rewrites its own log row — the log can never disagree with the data).
+With ``recall_every=N``, every Nth distinct epoch runs the one-pass
+:func:`ivf_recall` drift gate and records recall@k — the number that
+schedules a quantizer rebuild. The streaming query itself is named, so
+the self-metrics listener
 (`streaming.monitor`) reports its per-batch input rows for free.
 """
 
@@ -34,6 +31,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 from pyspark.sql.types import ArrayType, DoubleType, StructType
+
+from yamon_spark.plans.durable import write_epoch
 
 VEC_WIRE_SCHEMA = (
     StructType().add("vec_id", "long").add("embedding", ArrayType(DoubleType()))
@@ -71,13 +70,7 @@ def ivf_append_epoch(
     counts = assigned.groupBy("cell").count().collect()
     if not counts:
         return
-    (
-        assigned.withColumn("ingest_epoch", F.lit(int(epoch)))
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("ingest_epoch", "cell")
-        .parquet(index_path)
-    )
+    write_epoch(assigned, index_path, epoch, "cell")
     # cadence count from the epochlog's partition LISTING — no data read
     # (the log is epoch-partitioned, so distinct epochs ARE the directory
     # names; the previous distinct().count() re-read every prior epoch's
@@ -97,16 +90,11 @@ def ivf_append_epoch(
                 spark, index_path, recall_embeddings, k=recall_k, n_probe=recall_n_probe
             ).first()["recall"]
         )
-    (
-        spark.createDataFrame(
-            [(int(epoch), sum(r["count"] for r in counts), len(counts), recall)],
-            "ingest_epoch long, n_rows long, n_cells_touched int, recall double",
-        )
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("ingest_epoch")
-        .parquet(log_path)
+    log_row = spark.createDataFrame(
+        [(sum(r["count"] for r in counts), len(counts), recall)],
+        "n_rows long, n_cells_touched int, recall double",
     )
+    write_epoch(log_row, log_path, epoch)
 
 
 def start_ivf_maintenance(

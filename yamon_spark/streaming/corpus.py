@@ -27,11 +27,9 @@ Two delivery-semantics decisions, both learned the hard way:
   metadata time would silently discard an entire backfill of unique
   but old-timestamped documents. Arrival time is never late, so the
   operator only ever dedups — the doc's event time rides along as data.
-- foreachBatch is at-least-once; the appends are made idempotent by
-  partitioning on the epoch id with dynamic partition overwrite — a
-  replayed batch OVERWRITES its own ingest_epoch=N partitions instead
-  of appending duplicates (same replay-dedup idea as the ClickHouse
-  sink's epoch stamp).
+- foreachBatch is at-least-once; both tables land through
+  ``durable.write_epoch``, so a replayed batch rewrites its own
+  ingest_epoch=N partitions instead of appending duplicates.
 """
 
 from __future__ import annotations
@@ -43,6 +41,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 from pyspark.sql.types import StructType
 
+from yamon_spark.plans.durable import write_epoch
 from yamon_spark.plans.layout import CORPUS_TABLES
 
 DOC_WIRE_SCHEMA = (
@@ -121,7 +120,7 @@ def start_corpus_pipeline(
 
     corpus_path, rejects_path = (os.path.join(out_dir, t) for t in CORPUS_TABLES)
 
-    def write_epoch(batch: DataFrame, epoch: int) -> None:
+    def land_epoch(batch: DataFrame, epoch: int) -> None:
         # doc_id must be join-unique within the batch: a repeated id with
         # different text would fan out the quality/scrub joins into
         # cross-matched rows (dedup upstream is on the text digest only)
@@ -147,7 +146,7 @@ def start_corpus_pipeline(
                 curated = contamination_stamp(
                     curated, benchmark_shingles, ngram=contam_ngram, threshold=contam_threshold
                 )
-            (
+            curated = (
                 curated
                 .withColumn("date", F.to_date("when"))
                 .drop("text", "n_chars", "arrival")  # scrubbed text IS the corpus text
@@ -164,27 +163,19 @@ def start_corpus_pipeline(
                         F.lit("train")
                     ),
                 )
-                .withColumn("ingest_epoch", F.lit(epoch))
-                .write.mode("overwrite")
-                .option("partitionOverwriteMode", "dynamic")
-                .partitionBy("ingest_epoch", "lang", "date")
-                .parquet(corpus_path)
             )
-            (
+            rejects = (
                 scored.where(F.col("keep") == 0)
                 .select("doc_id", "lang", "source", "reason", "when")
                 .withColumn("date", F.to_date("when"))
-                .withColumn("ingest_epoch", F.lit(epoch))
-                .write.mode("overwrite")
-                .option("partitionOverwriteMode", "dynamic")
-                .partitionBy("ingest_epoch", "date")
-                .parquet(rejects_path)
             )
+            write_epoch(curated, corpus_path, epoch, "lang", "date")
+            write_epoch(rejects, rejects_path, epoch, "date")
         finally:
             batch.unpersist()
 
     return (
-        deduped.writeStream.foreachBatch(write_epoch)
+        deduped.writeStream.foreachBatch(land_epoch)
         .option("checkpointLocation", checkpoint_dir)
         .trigger(**(trigger or {"availableNow": True}))
         .start()

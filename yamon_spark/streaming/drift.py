@@ -14,10 +14,9 @@ against the frozen reference through the shared
 writes ONE psi row per epoch. A pipeline alarms on the latest row
 crossing 0.25 (retrain) or watches the 0.1–0.25 band trend.
 
-Delivery semantics: the per-epoch row is epoch-partitioned with dynamic
-partition overwrite (the IVF epochlog recipe), so a replayed
-foreachBatch epoch rewrites its own row — the monitor's history can
-never double-count a replay. State is zero: each epoch's psi depends
+Delivery semantics: each epoch's row lands through
+``durable.write_epoch``, so a replayed epoch rewrites its own row
+instead of adding a second. State is zero: each epoch's psi depends
 only on that batch and the frozen reference, so a checkpoint restart
 resumes cleanly with no rescan.
 
@@ -29,9 +28,9 @@ batch, independent of stream age and corpus size.
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
+from yamon_spark.plans.durable import write_epoch
 from yamon_spark.streaming.corpus import parse_doc_lines
 
 
@@ -45,20 +44,14 @@ def psi_epoch(
 ) -> None:
     """Idempotently record one epoch's drift row: score the batch with
     the broadcast model, histogram into deciles, PSI against the frozen
-    reference, dynamic-overwrite the (ingest_epoch=N) partition."""
+    reference, land it as epoch N (``durable.write_epoch``)."""
     from yamon_spark.operators.curation import psi_from_histograms, score_histogram
 
     new_hist = score_histogram(batch, model, n_bins).withColumnRenamed("n", "n_new")
     row = psi_from_histograms(
         ref_hist.withColumnRenamed("n", "n_ref"), new_hist, n_bins=n_bins
     )
-    (
-        row.withColumn("ingest_epoch", F.lit(int(epoch)))
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("ingest_epoch")
-        .parquet(out_path)
-    )
+    write_epoch(row, out_path, epoch)
 
 
 def start_psi_monitor(

@@ -12,11 +12,10 @@ alarms on a rule's fail_frac jumping between epochs (a crawler
 regression, an encoding bug, a garbage flood) long before the corpus
 table itself shows it.
 
-Delivery semantics: the per-epoch slice is epoch-partitioned with
-dynamic partition overwrite (the drift/media/IVF epochlog recipe), so
-a replayed foreachBatch epoch rewrites its own partition — history
-never double-counts a replay. State: none; each epoch's report depends
-only on that batch, so checkpoint restarts resume cleanly.
+Delivery semantics: each epoch's slice lands through
+``durable.write_epoch``, so a replayed epoch rewrites its own slice —
+history never double-counts a replay. State: none; each epoch's report
+depends only on that batch, so checkpoint restarts resume cleanly.
 
 100 TB shape: per batch ONE conditional-sum scan into a 5-row stack
 (quality_gopher_rules' plan — map-side partial agg, no data-sized
@@ -29,24 +28,20 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
+from yamon_spark.plans.durable import replace_partitions, write_epoch
 from yamon_spark.streaming.corpus import parse_doc_lines
 
 
 def health_epoch(batch: DataFrame, out_path: str, epoch: int) -> None:
     """Idempotently record one epoch's rule-failure slice: run the
     Gopher rule report over the batch, stamp batch size and epoch,
-    dynamic-overwrite the (ingest_epoch=N) partition."""
+    land it as epoch N (``durable.write_epoch``)."""
     from yamon_spark.operators.curation import quality_gopher_rules
 
     report = quality_gopher_rules(batch.select("doc_id", "text"))
     n_docs = batch.count()
-    (
-        report.withColumn("n_docs", F.lit(int(n_docs)).cast("bigint"))
-        .withColumn("ingest_epoch", F.lit(int(epoch)))
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("ingest_epoch")
-        .parquet(out_path)
+    write_epoch(
+        report.withColumn("n_docs", F.lit(int(n_docs)).cast("bigint")), out_path, epoch
     )
 
 
@@ -80,9 +75,10 @@ def burn_rate_epoch(
     """Refresh the live SLO burn-rate table for every 6 h block this
     batch touched: recompute q90's frame (`burn_rate_frame` — the SAME
     code path, so live and scheduled alerts cannot drift) over just
-    those blocks of the landed events table and dynamic-overwrite their
-    partitions. With ``episodes_path`` set, the q91 incident-episode
-    rollup (`alert_episodes_frame` — again the same code path) is then
+    those blocks of the landed events table and replace their ``b6``
+    partitions (``durable.replace_partitions``). With ``episodes_path``
+    set, the q91 incident-episode rollup (`alert_episodes_frame` —
+    again the same code path) is then
     recomputed from the refreshed burn table and overwritten whole: an
     episode can span 6 h blocks, and the burn table is calendar-bounded
     (<= hours in retention, ~8.8k rows/year), so the full recompute is
@@ -127,12 +123,7 @@ def burn_rate_epoch(
     br = burn_rate_frame(ev).withColumn(
         "b6", (F.unix_timestamp("ws") / 21600).cast("bigint")
     )
-    (
-        br.write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("b6")
-        .parquet(out_path)
-    )
+    replace_partitions(br, out_path, "b6")
     if episodes_path is not None:
         burn = spark.read.parquet(out_path).drop("b6")
         alert_episodes_frame(burn).write.mode("overwrite").parquet(episodes_path)

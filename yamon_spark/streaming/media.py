@@ -17,10 +17,9 @@ audio) — the classic crawl-corruption signal.
 
 Plan shape per micro-batch: one Arrow `mapInPandas` stage carries bytes
 Python-side once (the multimodal-column contract from the batch ops);
-everything after it is JVM-side. State: none. Delivery: at-least-once
-foreachBatch made idempotent by (ingest_epoch[, modality]) dynamic
-partition overwrite — a replayed epoch rewrites its own partitions in
-BOTH the media table and the rejects table (the corpus/IVF recipe).
+everything after it is JVM-side. State: none. Delivery: both the media
+table and the rejects table land through ``durable.write_epoch``, so a
+replayed epoch rewrites its own partitions in each.
 """
 
 from __future__ import annotations
@@ -34,6 +33,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 from pyspark.sql.types import StructType
+
+from yamon_spark.plans.durable import write_epoch
 
 MEDIA_WIRE_SCHEMA = (
     StructType()
@@ -137,26 +138,14 @@ def media_epoch(batch: DataFrame, out_dir: str, epoch: int) -> tuple[int, int]:
     decoded metadata frame (payloads already dropped) is persisted for
     the epoch so the two writes and the count agg share ONE decode
     pass instead of re-running the codecs three times."""
-    decoded = (
-        decode_media_batch(batch).withColumn("ingest_epoch", F.lit(int(epoch))).persist()
-    )
+    decoded = decode_media_batch(batch).persist()
     try:
         good = decoded.where(F.col("err").isNull()).drop("err")
         bad = decoded.where(F.col("err").isNotNull()).select(
-            "media_id", "modality", "n_bytes", "err", "ingest_epoch"
+            "media_id", "modality", "n_bytes", "err"
         )
-        (
-            good.write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("ingest_epoch", "modality")
-            .parquet(out_dir.rstrip("/") + "/media")
-        )
-        (
-            bad.write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("ingest_epoch")
-            .parquet(out_dir.rstrip("/") + "/rejects")
-        )
+        write_epoch(good, out_dir.rstrip("/") + "/media", epoch, "modality")
+        write_epoch(bad, out_dir.rstrip("/") + "/rejects", epoch)
         n_mismatch, n_rejects = decoded.agg(
             F.coalesce(F.sum((F.col("claim_ok") == 0).cast("long")), F.lit(0)),
             F.coalesce(F.sum(F.col("err").isNotNull().cast("long")), F.lit(0)),
