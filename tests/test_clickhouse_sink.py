@@ -112,13 +112,12 @@ def test_jdbc_url_session_settings():
     assert calls["isolationLevel"] == "NONE"
 
 
-def test_failed_insert_replays_same_epoch(spark, tmp_path):
-    """The at-least-once contract end-to-end via the INJECTED executor
-    (no monkeypatch — the declared cfg.executor seam): the first insert
-    attempt fails, the micro-batch fails with it, and a restart on the
-    same checkpoint re-sends the SAME rows with the SAME _epoch stamp —
-    the idempotency key a ReplacingMergeTree / insert-dedup target needs
-    to collapse the replay."""
+def test_failed_insert_replays_same_epoch(spark, tmp_path, monkeypatch):
+    """The at-least-once contract end-to-end through the `_jdbc_write`
+    seam: the first insert attempt fails, the micro-batch fails with it,
+    and a restart on the same checkpoint re-sends the SAME rows with the
+    SAME _epoch stamp — the idempotency key a ReplacingMergeTree /
+    insert-dedup target needs to collapse the replay."""
     sent: list[tuple[str, int, tuple]] = []
     state = {"fail_next": True}
 
@@ -130,14 +129,13 @@ def test_failed_insert_replays_same_epoch(spark, tmp_path):
         for r in rows:
             sent.append((table, r._epoch, (r.name, r.value)))
 
+    monkeypatch.setattr(CH, "_jdbc_write", flaky)
     cfg = P.PipelineConfig(
         landing_dir=str(tmp_path / "landing"),
         out_dir=str(tmp_path / "out"),
         checkpoint_dir=str(tmp_path / "ckpt"),
         hostname="agent-1",
-        clickhouse=CH.ClickHouseSinkConfig(
-            url="jdbc:clickhouse://ch:8123/yamon", executor=flaky
-        ),
+        clickhouse=CH.ClickHouseSinkConfig(url="jdbc:clickhouse://ch:8123/yamon"),
     )
     _write_landing(
         tmp_path / "landing",

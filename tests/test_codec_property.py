@@ -5,6 +5,7 @@ wrong dims silently. Pure-Python (no Spark job per example)."""
 
 from __future__ import annotations
 
+import pytest
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
@@ -112,3 +113,94 @@ def test_png_truncation_never_silently_wrong(w, h, cut):
     except Exception:
         return
     raise AssertionError(f"truncated PNG decoded to {out}")
+
+
+def _riff_payloads() -> dict[str, bytes]:
+    """One valid payload per RIFF codec sniff_decode dispatches to."""
+    import io
+    import struct
+    import wave
+
+    buf = io.BytesIO()
+    with wave.open(buf, "wb") as wf:
+        wf.setnchannels(1)
+        wf.setsampwidth(2)
+        wf.setframerate(8000)
+        wf.writeframes(struct.pack("<7h", 1, -2, 3, -4, 5, -6, 7))
+    zz = [0] * 64
+    zz[0], zz[M.JPEG_ZIGZAG.index(36)] = 10, -3
+    jpeg = M.encode_jpeg(8, 8, [zz], [8] * 64)
+    return {
+        "wav_pcm": buf.getvalue(),
+        "wav_adpcm": M.encode_adpcm_wav([100] + M.adpcm_decode([1, 9, 3, 12, 5], 100, 2), idx0=2),
+        "avi_raw": M.encode_avi(3, 2, [b"\x01" * 6, b"\x02" * 5]),
+        "avi_mjpeg": M.encode_mjpeg_avi(8, 8, [jpeg, jpeg]),
+    }
+
+
+RIFF_KINDS = sorted(_riff_payloads())
+
+
+@pytest.mark.parametrize("kind", RIFF_KINDS)
+def test_sniff_decode_on_every_prefix_returns_or_raises_valueerror(kind):
+    """Every cut of a RIFF payload either decodes or raises ValueError —
+    the one class streaming media ingest dead-letters. Any other class
+    (EOFError, RuntimeError, struct.error) would fail the batch."""
+    b = _riff_payloads()[kind]
+    assert M.sniff_decode(b)["format"] == kind
+    for cut in range(len(b)):
+        try:
+            M.sniff_decode(b[:cut])
+        except ValueError:
+            pass
+
+
+@pytest.mark.parametrize("kind", RIFF_KINDS)
+@settings(max_examples=150, deadline=None)
+@given(
+    edits=st.lists(
+        st.tuples(st.integers(min_value=0, max_value=2**16), st.integers(0, 255)),
+        min_size=1,
+        max_size=3,
+    )
+)
+def test_sniff_decode_on_corrupted_riff_returns_or_raises_valueerror(kind, edits):
+    b = bytearray(_riff_payloads()[kind])
+    for pos, val in edits:
+        b[pos % len(b)] = val
+    try:
+        M.sniff_decode(bytes(b))
+    except ValueError:
+        pass
+
+
+def test_deeply_nested_riff_lists_raise_valueerror():
+    """LIST nesting deeper than the interpreter's recursion limit is
+    still walked: the payload lacks an avih, so it is a ValueError."""
+    import struct
+
+    nested = b""
+    for _ in range(3000):
+        nested = b"LIST" + struct.pack("<I", 4 + len(nested)) + b"movi" + nested
+    avi = b"RIFF" + struct.pack("<I", 4 + len(nested)) + b"AVI " + nested
+    with pytest.raises(ValueError, match="avih"):
+        M.sniff_decode(avi)
+
+
+def test_jpeg_header_dims_are_bounded_by_its_scan():
+    """A corrupt SOF0 claiming dims its scan cannot code is rejected
+    before the pixel buffer is sized: an 8x8 JPEG relabelled 8192x8192
+    would otherwise allocate 64 MiB, and 65535x65535 4 GiB."""
+    import tracemalloc
+
+    b = M.encode_jpeg(8, 8, [[0] * 64], [8] * 64)
+    sof = b.index(b"\xff\xc0")
+    big = b[: sof + 5] + (8192).to_bytes(2, "big") * 2 + b[sof + 9 :]
+    tracemalloc.start()
+    try:
+        with pytest.raises(ValueError, match="exceed"):
+            M.decode_jpeg(big)
+        peak = tracemalloc.get_traced_memory()[1]
+    finally:
+        tracemalloc.stop()
+    assert peak < 1 << 20

@@ -344,7 +344,8 @@ def test_audio_windows_tiny_payload_oracle_parity(spark):
 
 
 def test_audio_windows_real_wav(spark):
-    """Real path: stdlib wave parses an in-memory 16-bit mono WAV."""
+    """Real path: the vendored RIFF reader parses an in-memory 16-bit
+    mono WAV written by stdlib wave."""
     import io
     import struct
     import wave

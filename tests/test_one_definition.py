@@ -11,7 +11,12 @@ is ``text.words_col``. The two durable-write rules live in
 ``plans/durable.py``: ``write_epoch`` is the one replay-safe epoch
 overwrite (the only dynamic partition overwrite in the package), and
 ``recover_swaps`` is the one recovery sweep for the crash-safe directory
-swap that compaction and the IVF rebuild share. A second copy could drift
+swap that compaction and the IVF rebuild share. In
+``operators/multimodal.py`` the RIFF container is read by one walk
+(``iter_riff``) and written by one chunk writer (``riff_chunk``), the
+image magic-byte dispatch is ``sniff_decode`` with its format map
+``CLAIM_FORMATS``, and the ``*_roundtrip`` operators share one
+per-document stage (``_per_doc``). A second copy could drift
 from the first without any error, so this test counts the defining
 source text across the package, the way ``test_env_reads.py`` pins the
 environment surface.
@@ -87,3 +92,31 @@ def test_swap_recovery_defined_once():
     # its missing live dir
     assert _count(r"if not live\.exists\(\):\s+\w+\.rename\(live\)") == {"plans/durable.py": 1}
     assert _count(r"def _(ivf_)?recover\b") == {}
+
+
+def test_riff_chunk_walk_defined_once():
+    # the even-offset pad skip is the walk's step; stdlib wave writes
+    # only, so it is no second reader
+    assert _count(r"\(\w+ & 1\)") == {"operators/multimodal.py": 1}
+    assert _count(r"def walk\(") == {}
+    assert _count(r"wave\.open\(") == {"operators/multimodal.py": 1}
+    assert _count(r'wave\.open\(\w+, "wb"\)') == {"operators/multimodal.py": 1}
+
+
+def test_riff_chunk_writer_defined_once():
+    assert _count(re.escape('fourcc + struct.pack("<I", len(data))')) == {
+        "operators/multimodal.py": 1
+    }
+
+
+def test_image_magic_dispatch_defined_once():
+    assert _count(re.escape('b[:2] == b"BM"')) == {"operators/multimodal.py": 1}
+    assert _count(r'"image": \{"bmp"') == {"operators/multimodal.py": 1}
+
+
+def test_roundtrips_share_one_stage():
+    assert _count(r"def roundtrip\b") == {}
+    assert _count(r'\.mapInPandas\([^)]*\)\s*\.orderBy\("doc_id"\)') == {"operators/multimodal.py": 1}
+    assert _count(r"return _per_doc\(docs, \w+_ROUNDTRIP_SCHEMA, row\b") == {
+        "operators/multimodal.py": 7
+    }

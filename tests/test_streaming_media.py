@@ -147,3 +147,41 @@ def test_media_monitor_observables_over_replayed_epoch(spark, tmp_path):
     assert all(
         r.type == "counter" for r in snap.collect() if r.name.startswith("yamon.media.")
     )
+
+
+def _pcm_wav_poisons() -> list[bytes]:
+    """Four malformed cuts of one 5-sample PCM16 WAV: the header cut
+    inside its fmt chunk, a fmt size of 200, a data size of 1000 over 10
+    bytes, and the bare 44-byte header (data declared, none present)."""
+    buf = io.BytesIO()
+    with wave.open(buf, "wb") as wf:
+        wf.setnchannels(1)
+        wf.setsampwidth(2)
+        wf.setframerate(8000)
+        wf.writeframes(struct.pack("<5h", 1, 2, 3, 4, 5))
+    good = buf.getvalue()
+    return [
+        good[:30],
+        good[:16] + struct.pack("<I", 200) + good[20:],
+        good[:40] + struct.pack("<I", 1000) + good[44:],
+        good[:44],
+    ]
+
+
+def test_media_epoch_dead_letters_malformed_pcm_wavs(spark, tmp_path):
+    """A malformed PCM WAV is a reject with the reader's reason, never a
+    failed batch: a failed epoch replays on every restart, so one such
+    payload would stall the stream."""
+    from yamon_spark.operators.multimodal import encode_bmp
+
+    rows = [(1, "image", encode_bmp(5, 3))]
+    rows += [(10 + i, "audio", b) for i, b in enumerate(_pcm_wav_poisons())]
+    _land(tmp_path / "landing", "b0.jsonl", rows)
+    batch = parse_media_lines(spark.read.text(str(tmp_path / "landing")))
+    assert media_epoch(batch, str(tmp_path / "store"), epoch=0) == (0, 4)
+
+    media = spark.read.parquet(str(tmp_path / "store/media")).collect()
+    assert [(r.media_id, r.format) for r in media] == [(1, "bmp")]
+    rejects = spark.read.parquet(str(tmp_path / "store/rejects")).collect()
+    assert sorted(r.media_id for r in rejects) == [10, 11, 12, 13]
+    assert all(r.err for r in rejects)

@@ -8,17 +8,26 @@ Python-side once per batch, never per row.
 Codec paths: `decode_stub=True` (default) substitutes a deterministic
 fake decoder so the Spark-side plumbing — schema, batch iteration,
 partitioning — is real and testable in any environment.
-`decode_stub=False` uses Pillow (imported lazily on the executor, so
-only worker environments need it); when Pillow is absent it raises
-NotImplementedError with the dependency named. Video frame iteration
-beyond Pillow's multi-frame formats (GIF/TIFF) would need pyav and
-stays stubbed.
+`decode_stub=False` decodes real payloads. The vendored pure-stdlib
+codecs run first: `decode_media` reads BMP, grayscale PNG and baseline
+JPEG through :func:`sniff_decode`'s magic-byte dispatch, `audio_windows`
+reads PCM16 mono WAV, and `sample_video_frames` demuxes uncompressed
+AVI. Everything else goes to Pillow (other images, resize, multi-frame
+GIF/TIFF, features) or pyav (compressed video), both imported lazily on
+the executors, so only worker environments need them; when one is
+absent the stage raises NotImplementedError with the dependency named.
+
+The RIFF container that WAV and AVI share is read by one walk,
+:func:`iter_riff`, and written by one chunk writer, :func:`riff_chunk`.
+The `*_roundtrip` operators encode and decode one synthetic payload per
+document under the oracle gate; they share one stage, :func:`_per_doc`.
 """
 
 from __future__ import annotations
 
 import math
-from collections.abc import Iterator
+import struct
+from collections.abc import Callable, Iterator
 
 import pandas as pd
 
@@ -62,8 +71,6 @@ def decode_bmp(b: bytes) -> tuple[int, int, int]:
 
     Returns (width, height, n_frames=1); raises ValueError on anything
     that is not a well-formed uncompressed BMP."""
-    import struct
-
     if len(b) < 26 or b[:2] != b"BM":
         raise ValueError("not a BMP: missing 'BM' magic")
     file_size, pixel_off = struct.unpack_from("<I4xI", b, 2)
@@ -102,7 +109,6 @@ def decode_png(b: bytes) -> tuple[int, int, int]:
     integer sum of all reconstructed pixel bytes — the value the oracle
     recomputes arithmetically, so a hash match proves inflate+unfilter
     reproduced every pixel. Raises ValueError on malformed input."""
-    import struct
     import zlib
 
     if len(b) < 8 or b[:8] != b"\x89PNG\r\n\x1a\n":
@@ -173,7 +179,6 @@ def encode_png(width: int, height: int, pix: bytes) -> bytes:
     with height >= 5 forces the decoder through ALL five unfilter paths
     — the compression and filtering are genuine, not a degenerate
     filter-0-only stream."""
-    import struct
     import zlib
 
     def chunk(ctype: bytes, data: bytes) -> bytes:
@@ -215,6 +220,45 @@ def encode_png(width: int, height: int, pix: bytes) -> bytes:
         + chunk(b"IDAT", zlib.compress(bytes(raw), 6))
         + chunk(b"IEND", b"")
     )
+
+
+def riff_chunk(fourcc: bytes, data: bytes) -> bytes:
+    """One RIFF chunk: fourcc, little-endian u32 size, the data, and a
+    pad byte after odd-length data so the next chunk starts at an even
+    offset. A LIST is ``riff_chunk(b"LIST", list_type + chunks)`` and a
+    whole file ``riff_chunk(b"RIFF", form_type + chunks)``."""
+    return fourcc + struct.pack("<I", len(data)) + data + b"\x00" * (len(data) & 1)
+
+
+def iter_riff(b: bytes, form: bytes) -> Iterator[tuple[bytes, bytes]]:
+    """The RIFF reader every WAV and AVI parser here walks through (read
+    half of :func:`riff_chunk`): check the 'RIFF' magic and the form type
+    (``b"WAVE"``, ``b"AVI "``), then yield (fourcc, data) for each chunk
+    in file order. LIST chunks are descended into (their 4-byte list
+    type is skipped and the LIST itself is not yielded) with an explicit
+    stack, so no nesting depth can overflow the interpreter's. The
+    even-offset pad byte is stepped over; a pad missing after the last
+    chunk is tolerated, as :func:`encode_adpcm_wav` writes none. Raises
+    ValueError on a wrong magic and when a chunk's declared size runs
+    past the payload."""
+    if b[:4] != b"RIFF" or b[8:12] != form:
+        raise ValueError(f"not a RIFF {form.decode().strip()} payload: missing magic")
+    resume = [(12, len(b))]  # (offset, end) of each open chunk list
+    while resume:
+        off, end = resume.pop()
+        while off + 8 <= end:
+            fourcc = b[off : off + 4]
+            (size,) = struct.unpack_from("<I", b, off + 4)
+            off += 8
+            if off + size > len(b):
+                raise ValueError(f"RIFF chunk {fourcc!r} runs past payload")
+            after = off + size + (size & 1)
+            if fourcc == b"LIST":
+                resume.append((after, end))
+                off, end = off + 4, off + size
+            else:
+                yield fourcc, b[off : off + size]
+                off = after
 
 
 DECODED_SCHEMA = (
@@ -260,37 +304,19 @@ def decode_media(media: DataFrame, decode_stub: bool = True) -> DataFrame:
 
                 dims = []
                 for b in bs:
-                    if b[:8] == b"\x89PNG\r\n\x1a\n":
-                        # vendored compressed-codec path (grayscale-8); other
-                        # color types/depths fall through to Pillow
-                        try:
-                            w, h, _pixel_sum = decode_png(b)
-                            dims.append((w, h, 1))
-                            continue
-                        except ValueError:
-                            pass
-                    if b[:2] == b"\xff\xd8":
-                        # vendored baseline decoder (SOF0 grayscale);
-                        # progressive/subsampled/color fall through to
-                        # Pillow rather than failing the batch
-                        try:
-                            w, h, _pix = decode_jpeg(b)
-                            dims.append((w, h, 1))
-                            continue
-                        except ValueError:
-                            pass
-                    if b[:2] == b"BM":
-                        # vendored real codec first (no Pillow needed), but
-                        # it covers uncompressed BMP only — fall back to
-                        # Pillow for variants it rejects (BI_BITFIELDS,
-                        # wrong bfSize, ...) rather than aborting the whole
-                        # job on one unusual-but-valid payload
-                        try:
-                            dims.append(decode_bmp(b))
-                            continue
-                        except ValueError:
-                            pass
-                    dims.append(pil_dims(b))
+                    # vendored image codecs first (no Pillow needed); other
+                    # formats, and variants the vendored decoders reject
+                    # (BI_BITFIELDS BMP, color PNG, progressive JPEG, ...),
+                    # go to Pillow rather than aborting the whole job on
+                    # one unusual-but-valid payload
+                    try:
+                        meta = sniff_decode(b)
+                    except ValueError:
+                        meta = {"format": None}
+                    if meta["format"] in CLAIM_FORMATS["image"]:
+                        dims.append((meta["width"], meta["height"], 1))
+                    else:
+                        dims.append(pil_dims(b))
             yield pd.DataFrame(
                 {
                     "doc_id": pdf["doc_id"],
@@ -314,8 +340,6 @@ def encode_bmp(width: int, height: int, bpp: int = 24) -> bytes:
     """Build a valid uncompressed BITMAPINFOHEADER BMP with zeroed
     pixels — the encode half of the vendored codec (test fixtures and
     the oracle-gated round-trip below)."""
-    import struct
-
     row = (width * bpp + 31) // 32 * 4
     pixels = b"\x00" * (row * height)
     dib = struct.pack("<IiiHHIIiiII", 40, width, height, 1, bpp, 0, len(pixels), 2835, 2835, 0, 0)
@@ -327,18 +351,29 @@ def encode_avi(width: int, height: int, frames: list[bytes]) -> bytes:
     """Build a minimal uncompressed RIFF/AVI container (encode half of
     demux_avi): hdrl LIST with an avih main header, movi LIST with one
     '00db' chunk per frame, even-offset padding."""
-    import struct
-
-    def chunk(fourcc: bytes, data: bytes) -> bytes:
-        return fourcc + struct.pack("<I", len(data)) + data + (b"\x00" if len(data) % 2 else b"")
-
     avih = bytearray(56)
     struct.pack_into("<I", avih, 16, len(frames))  # dwTotalFrames
     struct.pack_into("<II", avih, 32, width, height)
-    hdrl = chunk(b"LIST", b"hdrl" + chunk(b"avih", bytes(avih)))
-    movi = chunk(b"LIST", b"movi" + b"".join(chunk(b"00db", f) for f in frames))
-    body = b"AVI " + hdrl + movi
-    return b"RIFF" + struct.pack("<I", len(body)) + body
+    hdrl = riff_chunk(b"LIST", b"hdrl" + riff_chunk(b"avih", bytes(avih)))
+    movi = riff_chunk(b"LIST", b"movi" + b"".join(riff_chunk(b"00db", f) for f in frames))
+    return riff_chunk(b"RIFF", b"AVI " + hdrl + movi)
+
+
+def _per_doc(
+    docs: DataFrame, schema: str, row: Callable[..., tuple], inputs=("doc_id", "n_chars")
+) -> DataFrame:
+    """The stage every ``*_roundtrip`` operator runs: ``row(*inputs)``
+    (the ``inputs`` columns as Python ints) returns one output row minus
+    its leading ``doc_id``, for every doc, into ``schema`` — one
+    shuffle-free Arrow mapInPandas stage, then ordered by doc_id."""
+    names = [c.split()[0] for c in schema.split(",")]
+
+    def rows(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            out = [(v[0], *row(*map(int, v))) for v in zip(*(pdf[c] for c in inputs))]
+            yield pd.DataFrame(out, columns=names)
+
+    return docs.select(*inputs).mapInPandas(rows, schema).orderBy("doc_id")
 
 
 BMP_ROUNDTRIP_SCHEMA = "doc_id bigint, width bigint, height bigint, n_bytes bigint"
@@ -354,23 +389,12 @@ def bmp_roundtrip(docs: DataFrame) -> DataFrame:
     'the oracle verifies the stub' caveat for images). Shuffle-free
     Arrow mapInPandas, same batch shape as every decode stage."""
 
-    def roundtrip(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, ws, hs, ns = [], [], [], []
-            for doc_id, n_chars in zip(pdf["doc_id"], pdf["n_chars"]):
-                b = encode_bmp(int(n_chars) % 13 + 1, int(doc_id) % 7 + 1)
-                w, h, _ = decode_bmp(b)
-                ids.append(doc_id)
-                ws.append(w)
-                hs.append(h)
-                ns.append(len(b))
-            yield pd.DataFrame({"doc_id": ids, "width": ws, "height": hs, "n_bytes": ns})
+    def row(doc_id: int, n_chars: int) -> tuple:
+        b = encode_bmp(n_chars % 13 + 1, doc_id % 7 + 1)
+        w, h, _ = decode_bmp(b)
+        return w, h, len(b)
 
-    return (
-        docs.select("doc_id", "n_chars")
-        .mapInPandas(roundtrip, BMP_ROUNDTRIP_SCHEMA)
-        .orderBy("doc_id")
-    )
+    return _per_doc(docs, BMP_ROUNDTRIP_SCHEMA, row)
 
 
 PNG_ROUNDTRIP_SCHEMA = "doc_id bigint, width bigint, height bigint, pixel_sum bigint"
@@ -388,24 +412,12 @@ def png_roundtrip(docs: DataFrame) -> DataFrame:
     this verifies a real compressed bitstream (every production image
     format is compressed). Shuffle-free Arrow mapInPandas."""
 
-    def roundtrip(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, ws, hs, sums = [], [], [], []
-            for doc_id, n_chars in zip(pdf["doc_id"], pdf["n_chars"]):
-                d, w, h = int(doc_id), int(n_chars) % 13 + 1, int(doc_id) % 7 + 1
-                pix = bytes((d * 31 + y * w + x * 7) % 256 for y in range(h) for x in range(w))
-                w2, h2, pixel_sum = decode_png(encode_png(w, h, pix))
-                ids.append(doc_id)
-                ws.append(w2)
-                hs.append(h2)
-                sums.append(pixel_sum)
-            yield pd.DataFrame({"doc_id": ids, "width": ws, "height": hs, "pixel_sum": sums})
+    def row(d: int, n_chars: int) -> tuple:
+        w, h = n_chars % 13 + 1, d % 7 + 1
+        pix = bytes((d * 31 + y * w + x * 7) % 256 for y in range(h) for x in range(w))
+        return decode_png(encode_png(w, h, pix))
 
-    return (
-        docs.select("doc_id", "n_chars")
-        .mapInPandas(roundtrip, PNG_ROUNDTRIP_SCHEMA)
-        .orderBy("doc_id")
-    )
+    return _per_doc(docs, PNG_ROUNDTRIP_SCHEMA, row)
 
 
 WAV_ROUNDTRIP_SCHEMA = "doc_id bigint, n_samples bigint, sample_sum bigint, n_bytes bigint"
@@ -414,42 +426,31 @@ WAV_ROUNDTRIP_SCHEMA = "doc_id bigint, n_samples bigint, sample_sum bigint, n_by
 def wav_roundtrip(docs: DataFrame) -> DataFrame:
     """Audio twin of :func:`bmp_roundtrip`: synthesize a deterministic
     PCM16 signal per doc, container it as a REAL WAV via stdlib
-    ``wave``, parse it back through the same module (the
+    ``wave``, parse it back through :func:`decode_pcm_wav` (the
     ``audio_windows`` real-codec branch), emit the recovered sample
     count, exact integer sample sum, and container size. Values are
     reachable only by correctly writing AND parsing the RIFF/WAVE
-    layout; integer sums keep the oracle comparison exact."""
+    layout; integer sums keep the oracle comparison exact. The writer
+    is stdlib so that it is independent of the reader the oracle
+    checks."""
+    import io
+    import wave
 
-    def roundtrip(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import io
-        import struct
-        import wave
+    def row(doc_id: int, n_chars: int) -> tuple:
+        n = n_chars % 50 + 1
+        samples = [((doc_id * 37 + k * 11) % 2001) - 1000 for k in range(n)]
+        buf = io.BytesIO()
+        with wave.open(buf, "wb") as wf:
+            wf.setnchannels(1)
+            wf.setsampwidth(2)
+            wf.setframerate(16000)
+            wf.writeframes(struct.pack(f"<{n}h", *samples))
+        b = buf.getvalue()
+        pcm = decode_pcm_wav(b)[3]
+        back = struct.unpack(f"<{len(pcm) // 2}h", pcm)
+        return len(back), sum(back), len(b)
 
-        for pdf in batches:
-            out = {k: [] for k in ("doc_id", "n_samples", "sample_sum", "n_bytes")}
-            for doc_id, n_chars in zip(pdf["doc_id"], pdf["n_chars"]):
-                n = int(n_chars) % 50 + 1
-                samples = [((int(doc_id) * 37 + k * 11) % 2001) - 1000 for k in range(n)]
-                buf = io.BytesIO()
-                with wave.open(buf, "wb") as wf:
-                    wf.setnchannels(1)
-                    wf.setsampwidth(2)
-                    wf.setframerate(16000)
-                    wf.writeframes(struct.pack(f"<{n}h", *samples))
-                b = buf.getvalue()
-                with wave.open(io.BytesIO(b)) as rf:
-                    back = struct.unpack(f"<{rf.getnframes()}h", rf.readframes(rf.getnframes()))
-                out["doc_id"].append(doc_id)
-                out["n_samples"].append(len(back))
-                out["sample_sum"].append(sum(back))
-                out["n_bytes"].append(len(b))
-            yield pd.DataFrame(out)
-
-    return (
-        docs.select("doc_id", "n_chars")
-        .mapInPandas(roundtrip, WAV_ROUNDTRIP_SCHEMA)
-        .orderBy("doc_id")
-    )
+    return _per_doc(docs, WAV_ROUNDTRIP_SCHEMA, row)
 
 
 AVI_ROUNDTRIP_SCHEMA = (
@@ -466,27 +467,13 @@ def avi_roundtrip(docs: DataFrame) -> DataFrame:
     reachable by genuinely parsing RIFF chunk structure, so the driver
     oracle hash-verifies the real video-container path."""
 
-    def roundtrip(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = {k: [] for k in ("doc_id", "width", "height", "n_frames", "frame_bytes", "n_bytes")}
-            for doc_id, n_chars in zip(pdf["doc_id"], pdf["n_chars"]):
-                nf = int(doc_id) % 4 + 1
-                flen = int(n_chars) % 9 + 1
-                b = encode_avi(int(n_chars) % 13 + 1, int(doc_id) % 7 + 1, [b"\x00" * flen] * nf)
-                w, h, frames = demux_avi(b)
-                out["doc_id"].append(doc_id)
-                out["width"].append(w)
-                out["height"].append(h)
-                out["n_frames"].append(len(frames))
-                out["frame_bytes"].append(sum(len(f) for f in frames))
-                out["n_bytes"].append(len(b))
-            yield pd.DataFrame(out)
+    def row(doc_id: int, n_chars: int) -> tuple:
+        nf, flen = doc_id % 4 + 1, n_chars % 9 + 1
+        b = encode_avi(n_chars % 13 + 1, doc_id % 7 + 1, [b"\x00" * flen] * nf)
+        w, h, frames = demux_avi(b)
+        return w, h, len(frames), sum(len(f) for f in frames), len(b)
 
-    return (
-        docs.select("doc_id", "n_chars")
-        .mapInPandas(roundtrip, AVI_ROUNDTRIP_SCHEMA)
-        .orderBy("doc_id")
-    )
+    return _per_doc(docs, AVI_ROUNDTRIP_SCHEMA, row)
 
 
 RESIZED_SCHEMA = "doc_id bigint, payload binary, width bigint, height bigint"
@@ -567,9 +554,10 @@ def sample_frames(media: DataFrame, every_n: int = 10, decode_stub: bool = True)
 
 
 def _try_demux_avi(b: bytes):
-    """demux_avi, or None when the container is outside the vendored
-    demuxer's coverage (compressed streams etc.) — the caller then falls
-    through to pyav instead of aborting the job on one real-world AVI."""
+    """demux_avi, or None when the payload is outside the vendored
+    demuxer's coverage (not an AVI, compressed streams, ...) — the
+    caller then falls through to pyav instead of aborting the job on
+    one real-world video."""
     try:
         return demux_avi(b)
     except ValueError:
@@ -588,42 +576,36 @@ def demux_avi(b: bytes) -> tuple[int, int, list[bytes]]:
 
     Returns (width, height, [frame_bytes...]); raises ValueError on
     malformed input or compressed ('..dc') streams."""
-    import struct
+    width, height, chunks = _avi_chunks(b)
+    frames = []
+    for fourcc, data in chunks:
+        if fourcc[2:4] == b"db":  # uncompressed DIB frame
+            frames.append(data)
+        elif fourcc[2:4] == b"dc":
+            raise ValueError(
+                "compressed AVI stream; the vendored demuxer handles "
+                "uncompressed ('..db') frames — use pyav for codecs"
+            )
+    return width, height, frames
 
-    if len(b) < 12 or b[:4] != b"RIFF" or b[8:12] != b"AVI ":
-        raise ValueError("not an AVI: missing RIFF/'AVI ' magic")
-    dims: list[tuple[int, int]] = []
-    frames: list[bytes] = []
 
-    def walk(off: int, end: int) -> None:
-        while off + 8 <= end:
-            fourcc = b[off : off + 4]
-            (size,) = struct.unpack_from("<I", b, off + 4)
-            data_off = off + 8
-            if data_off + size > len(b):
-                raise ValueError("AVI chunk extends past payload")
-            if fourcc == b"LIST":
-                walk(data_off + 4, data_off + size)
-            elif fourcc == b"avih":
-                if size < 40:
-                    raise ValueError("truncated avih header")
-                dims.append(struct.unpack_from("<II", b, data_off + 32))
-            elif fourcc[2:4] == b"db":  # uncompressed DIB frame
-                frames.append(b[data_off : data_off + size])
-            elif fourcc[2:4] == b"dc":
-                raise ValueError(
-                    "compressed AVI stream; the vendored demuxer handles "
-                    "uncompressed ('..db') frames — use pyav for codecs"
-                )
-            off = data_off + size + (size & 1)  # chunks pad to even offsets
-
-    walk(12, len(b))
+def _avi_chunks(b: bytes) -> tuple[int, int, list[tuple[bytes, bytes]]]:
+    """Frame dims from the 'avih' main header (dwWidth/dwHeight at
+    offsets 32/36) and every chunk of a RIFF/AVI payload, in file order:
+    the container half both AVI demuxers share."""
+    chunks = list(iter_riff(b, b"AVI "))
+    dims = []
+    for fourcc, data in chunks:
+        if fourcc == b"avih":
+            if len(data) < 40:
+                raise ValueError("truncated avih header")
+            dims.append(struct.unpack_from("<II", data, 32))
     if not dims:
         raise ValueError("AVI missing avih main header")
     width, height = dims[0]
     if width <= 0 or height <= 0:
         raise ValueError(f"implausible AVI dims {width}x{height}")
-    return width, height, frames
+    return width, height, chunks
 
 
 VIDEO_FRAMES_SCHEMA = "doc_id bigint, frame_idx bigint, width bigint, height bigint, frame binary"
@@ -654,7 +636,7 @@ def sample_video_frames(media: DataFrame, every_n: int = 10, decode_stub: bool =
                         ws.append(16 + (sum(blk[:4]) % 64) if blk else 16)
                         hs.append(16 + (sum(blk[4:8]) % 64) if len(blk) > 4 else 16)
                         frames.append(blk)
-                elif b[:4] == b"RIFF" and b[8:12] == b"AVI " and (raw_avi := _try_demux_avi(b)):
+                elif raw_avi := _try_demux_avi(b):
                     # vendored real demuxer (uncompressed AVI, no pyav
                     # needed); a compressed AVI falls through to pyav below
                     w, h, raw = raw_avi
@@ -736,17 +718,14 @@ def audio_windows(
     MFCC all start from framed energy). One output row per analysis
     window (win samples every hop), plus the decoded sample count.
 
-    Real codec: stdlib ``wave`` parses WAV containers (16-bit PCM mono)
-    — no third-party dependency, so the real path runs anywhere. Stub
+    Real codec: :func:`decode_pcm_wav` parses WAV containers (16-bit PCM
+    mono) — no third-party dependency, so the real path runs anywhere. Stub
     codec: the raw payload bytes are interpreted as little-endian PCM16
     directly; deterministic and container-free, exercising the same
     framing math. RMS rounds to 4dp (engine-parity convention)."""
     import numpy as np
 
     def window_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import io
-        import wave
-
         for pdf in batches:
             ids, idxs, counts, rmss = [], [], [], []
             for doc_id, p in zip(pdf["doc_id"], pdf["payload"]):
@@ -754,13 +733,12 @@ def audio_windows(
                 if decode_stub:
                     pcm = b[: len(b) - (len(b) % 2)]
                 else:
-                    with wave.open(io.BytesIO(b)) as wf:
-                        if wf.getsampwidth() != 2 or wf.getnchannels() != 1:
-                            raise NotImplementedError(
-                                "real audio decoding supports 16-bit PCM mono WAV; "
-                                "other formats need a codec lib or decode_stub=True"
-                            )
-                        pcm = wf.readframes(wf.getnframes())
+                    _, channels, width, pcm = decode_pcm_wav(b)
+                    if width != 2 or channels != 1:
+                        raise NotImplementedError(
+                            "real audio decoding supports 16-bit PCM mono WAV; "
+                            "other formats need a codec lib or decode_stub=True"
+                        )
                 samples = np.frombuffer(pcm, dtype="<i2").astype(np.float64)
                 n = len(samples)
                 n_wins = max(1, (n - win) // hop + 1) if n >= win else 1
@@ -882,8 +860,6 @@ def encode_jpeg(width: int, height: int, blocks: list[list[int]], qt: list[int])
     `blocks`: one 64-entry list per 8x8 block in raster block order,
     coefficients in ZIGZAG order, already quantized. `qt`: 64 quant
     values in zigzag order (1..255)."""
-    import struct
-
     dc_tab = _jpeg_huff_encode_table(JPEG_DC_BITS, JPEG_DC_VALS)
     ac_tab = _jpeg_huff_encode_table(JPEG_AC_BITS, JPEG_AC_VALS)
     w = _JpegBitWriter()
@@ -992,8 +968,6 @@ def decode_jpeg(b: bytes) -> tuple[int, int, bytes]:
     Malformed bitstreams that would surface as struct.error/IndexError
     mid-parse (short SOF0/SOS payloads, truncated scans) are normalized
     to ValueError so decode_media's fallback contract holds."""
-    import struct
-
     try:
         return _decode_jpeg_impl(b)
     except (struct.error, IndexError) as e:
@@ -1001,8 +975,6 @@ def decode_jpeg(b: bytes) -> tuple[int, int, bytes]:
 
 
 def _decode_jpeg_impl(b: bytes) -> tuple[int, int, bytes]:
-    import struct
-
     if len(b) < 4 or b[:2] != b"\xff\xd8":
         raise ValueError("not a JPEG: missing SOI")
     qts: dict[int, list[int]] = {}
@@ -1072,6 +1044,11 @@ def _decode_jpeg_impl(b: bytes) -> tuple[int, int, bytes]:
         raise ValueError("JPEG scan references undeclared quant/Huffman table")
     qt, dct, act = qts[qt_id], dc_tabs[dc_id], ac_tabs[ac_id]
     bw, bh = (width + 7) // 8, (height + 7) // 8
+    # every block codes at least a DC code and an EOB, two bits, so a
+    # header claiming more blocks than that is rejected before the pixel
+    # buffer it would size is allocated
+    if bw * bh > 4 * (len(b) - scan_off):
+        raise ValueError(f"JPEG dims {width}x{height} exceed what its scan can code")
     r = _JpegBitReader(b, scan_off)
     img = bytearray(width * height)
     pred = 0
@@ -1156,37 +1133,19 @@ def jpeg_roundtrip(docs: DataFrame) -> DataFrame:
     ac_zz = JPEG_ZIGZAG.index(8 * 4 + 4)  # zigzag position of raster (4,4)
     qt = [8] * 64
 
-    def roundtrip(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = {k: [] for k in ("doc_id", "width", "height", "pixel_sum", "wxy_sum")}
-            for doc_id, n_chars in zip(pdf["doc_id"], pdf["n_chars"]):
-                d = int(doc_id)
-                wb, hb = int(n_chars) % 3 + 1, d % 2 + 1
-                blocks = []
-                for bidx in range(wb * hb):
-                    zz = [0] * 64
-                    zz[0] = (d * 7 + bidx * 13) % 201 - 100
-                    zz[ac_zz] = (d + bidx * 5) % 41 - 20
-                    blocks.append(zz)
-                w, h, pix = decode_jpeg(encode_jpeg(8 * wb, 8 * hb, blocks, qt))
-                psum = sum(pix)
-                wxy = sum(
-                    pix[y * w + x] * (x % 8) ** 2 * (y % 8) ** 2
-                    for y in range(h)
-                    for x in range(w)
-                )
-                out["doc_id"].append(doc_id)
-                out["width"].append(w)
-                out["height"].append(h)
-                out["pixel_sum"].append(psum)
-                out["wxy_sum"].append(wxy)
-            yield pd.DataFrame(out)
+    def row(d: int, n_chars: int) -> tuple:
+        wb, hb = n_chars % 3 + 1, d % 2 + 1
+        blocks = []
+        for bidx in range(wb * hb):
+            zz = [0] * 64
+            zz[0] = (d * 7 + bidx * 13) % 201 - 100
+            zz[ac_zz] = (d + bidx * 5) % 41 - 20
+            blocks.append(zz)
+        w, h, pix = decode_jpeg(encode_jpeg(8 * wb, 8 * hb, blocks, qt))
+        wxy = sum(pix[y * w + x] * (x % 8) ** 2 * (y % 8) ** 2 for y in range(h) for x in range(w))
+        return w, h, sum(pix), wxy
 
-    return (
-        docs.select("doc_id", "n_chars")
-        .mapInPandas(roundtrip, JPEG_ROUNDTRIP_SCHEMA)
-        .orderBy("doc_id")
-    )
+    return _per_doc(docs, JPEG_ROUNDTRIP_SCHEMA, row)
 
 
 def encode_mjpeg_avi(width: int, height: int, jpeg_frames: list[bytes]) -> bytes:
@@ -1198,22 +1157,16 @@ def encode_mjpeg_avi(width: int, height: int, jpeg_frames: list[bytes]) -> bytes
     even-padded per RIFF. This is the real MJPEG-in-AVI layout
     (OpenDML/VfW convention: each 00dc payload is a standalone baseline
     JPEG)."""
-    import struct
-
-    def chunk(fourcc: bytes, data: bytes) -> bytes:
-        return fourcc + struct.pack("<I", len(data)) + data + (b"\x00" if len(data) % 2 else b"")
-
     avih = bytearray(56)
     struct.pack_into("<I", avih, 16, len(jpeg_frames))  # dwTotalFrames
     struct.pack_into("<II", avih, 32, width, height)
     strh = bytearray(56)
     strh[0:4] = b"vids"
     strh[4:8] = b"MJPG"
-    strl = chunk(b"LIST", b"strl" + chunk(b"strh", bytes(strh)))
-    hdrl = chunk(b"LIST", b"hdrl" + chunk(b"avih", bytes(avih)) + strl)
-    movi = chunk(b"LIST", b"movi" + b"".join(chunk(b"00dc", f) for f in jpeg_frames))
-    body = b"AVI " + hdrl + movi
-    return b"RIFF" + struct.pack("<I", len(body)) + body
+    strl = riff_chunk(b"LIST", b"strl" + riff_chunk(b"strh", bytes(strh)))
+    hdrl = riff_chunk(b"LIST", b"hdrl" + riff_chunk(b"avih", bytes(avih)) + strl)
+    movi = riff_chunk(b"LIST", b"movi" + b"".join(riff_chunk(b"00dc", f) for f in jpeg_frames))
+    return riff_chunk(b"RIFF", b"AVI " + hdrl + movi)
 
 
 def demux_mjpeg_avi(b: bytes) -> tuple[int, int, list[tuple[int, int, bytes]]]:
@@ -1226,43 +1179,17 @@ def demux_mjpeg_avi(b: bytes) -> tuple[int, int, list[tuple[int, int, bytes]]]:
     (width, height, [(frame_w, frame_h, pixels), ...]); raises
     ValueError on malformed containers, non-MJPG compressed streams, or
     frame dims disagreeing with the container."""
-    import struct
-
-    if len(b) < 12 or b[:4] != b"RIFF" or b[8:12] != b"AVI ":
-        raise ValueError("not an AVI: missing RIFF/'AVI ' magic")
-    dims: list[tuple[int, int]] = []
-    handlers: list[tuple[bytes, bytes]] = []
-    raw_frames: list[bytes] = []
-
-    def walk(off: int, end: int) -> None:
-        while off + 8 <= end:
-            fourcc = b[off : off + 4]
-            (size,) = struct.unpack_from("<I", b, off + 4)
-            data_off = off + 8
-            if data_off + size > len(b):
-                raise ValueError("AVI chunk extends past payload")
-            if fourcc == b"LIST":
-                walk(data_off + 4, data_off + size)
-            elif fourcc == b"avih":
-                if size < 40:
-                    raise ValueError("truncated avih header")
-                dims.append(struct.unpack_from("<II", b, data_off + 32))
-            elif fourcc == b"strh":
-                if size < 8:
-                    raise ValueError("truncated strh header")
-                handlers.append((b[data_off : data_off + 4], b[data_off + 4 : data_off + 8]))
-            elif fourcc[2:4] == b"dc":  # compressed frame chunk
-                raw_frames.append(b[data_off : data_off + size])
-            off = data_off + size + (size & 1)
-
-    walk(12, len(b))
-    if not dims:
-        raise ValueError("AVI missing avih main header")
+    width, height, chunks = _avi_chunks(b)
+    handlers, raw_frames = [], []
+    for fourcc, data in chunks:
+        if fourcc == b"strh":
+            if len(data) < 8:
+                raise ValueError("truncated strh header")
+            handlers.append((data[:4], data[4:8]))
+        elif fourcc[2:4] == b"dc":  # compressed frame chunk
+            raw_frames.append(data)
     if (b"vids", b"MJPG") not in handlers:
         raise ValueError("compressed AVI stream is not MJPG")
-    width, height = dims[0]
-    if width <= 0 or height <= 0:
-        raise ValueError(f"implausible AVI dims {width}x{height}")
     decoded = [decode_jpeg(f) for f in raw_frames]
     for fw, fh, _ in decoded:
         if (fw, fh) != (width, height):
@@ -1298,40 +1225,23 @@ def mjpeg_roundtrip(docs: DataFrame) -> DataFrame:
     ac_zz = JPEG_ZIGZAG.index(8 * 4 + 4)
     qt = [8] * 64
 
-    def roundtrip(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = ("doc_id", "width", "height", "n_frames", "pixel_sum", "wxy_sum")
-        for pdf in batches:
-            out = {k: [] for k in cols}
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                jpegs = []
-                for fidx in range(d % 3 + 1):
-                    zz = [0] * 64
-                    zz[0] = (d * 7 + fidx * 13) % 201 - 100
-                    zz[ac_zz] = (d + fidx * 5) % 41 - 20
-                    jpegs.append(encode_jpeg(8, 8, [zz], qt))
-                w, h, frames = demux_mjpeg_avi(encode_mjpeg_avi(8, 8, jpegs))
-                psum = wxy = 0
-                for fw, fh, pix in frames:
-                    psum += sum(pix)
-                    wxy += sum(
-                        pix[y * fw + x] * (x % 8) ** 2 * (y % 8) ** 2
-                        for y in range(fh)
-                        for x in range(fw)
-                    )
-                out["doc_id"].append(doc_id)
-                out["width"].append(w)
-                out["height"].append(h)
-                out["n_frames"].append(len(frames))
-                out["pixel_sum"].append(psum)
-                out["wxy_sum"].append(wxy)
-            yield pd.DataFrame(out)
+    def row(d: int) -> tuple:
+        jpegs = []
+        for fidx in range(d % 3 + 1):
+            zz = [0] * 64
+            zz[0] = (d * 7 + fidx * 13) % 201 - 100
+            zz[ac_zz] = (d + fidx * 5) % 41 - 20
+            jpegs.append(encode_jpeg(8, 8, [zz], qt))
+        w, h, frames = demux_mjpeg_avi(encode_mjpeg_avi(8, 8, jpegs))
+        psum = wxy = 0
+        for fw, fh, pix in frames:
+            psum += sum(pix)
+            wxy += sum(
+                pix[y * fw + x] * (x % 8) ** 2 * (y % 8) ** 2 for y in range(fh) for x in range(fw)
+            )
+        return w, h, len(frames), psum, wxy
 
-    return (
-        docs.select("doc_id")
-        .mapInPandas(roundtrip, MJPEG_ROUNDTRIP_SCHEMA)
-        .orderBy("doc_id")
-    )
+    return _per_doc(docs, MJPEG_ROUNDTRIP_SCHEMA, row, inputs=("doc_id",))
 
 
 def audio_trim(
@@ -1467,9 +1377,12 @@ def encode_adpcm_wav(samples: list[int], idx0: int = 0, rate: int = 16000) -> by
     require (total sample count — it is what bounds nibble padding on
     decode), and one data block [int16 sample0, uint8 index, reserved 0,
     packed nibbles low-first]. sample0 is emitted verbatim; the nibbles
-    encode samples[1:] against (sample0, idx0)."""
-    import struct
+    encode samples[1:] against (sample0, idx0).
 
+    One deviation from RIFF: the final data chunk is written with no pad
+    byte when its length is odd, so the file is 64 + n // 2 bytes (the
+    size the roundtrip oracle recomputes). :func:`iter_riff` tolerates
+    the missing pad after the last chunk."""
     n = len(samples)
     codes = adpcm_encode(samples[1:], samples[0], idx0)
     nib = bytearray()
@@ -1483,13 +1396,47 @@ def encode_adpcm_wav(samples: list[int], idx0: int = 0, rate: int = 16000) -> by
     fmt = struct.pack(
         "<HHIIHHHH", 0x11, 1, rate, rate * block_align // spb, block_align, 4, 2, spb
     )
-    fact = struct.pack("<I", n)
     chunks = (
-        b"fmt " + struct.pack("<I", len(fmt)) + fmt
-        + b"fact" + struct.pack("<I", len(fact)) + fact
-        + b"data" + struct.pack("<I", len(block)) + block
+        riff_chunk(b"fmt ", fmt)
+        + riff_chunk(b"fact", struct.pack("<I", n))
+        + b"data" + struct.pack("<I", len(block)) + block  # unpadded, see above
     )
     return b"RIFF" + struct.pack("<I", 4 + len(chunks)) + b"WAVE" + chunks
+
+
+def _wave_chunks(b: bytes) -> tuple[tuple, int | None, bytes]:
+    """The fmt fields (tag, channels, rate, byte rate, block align, bits
+    per sample), the fact sample count (None when absent) and the data
+    bytes of a RIFF/WAVE payload. Raises ValueError on malformed input."""
+    fmt = fact_n = data = None
+    for cid, body in iter_riff(b, b"WAVE"):
+        if cid == b"fmt ":
+            if len(body) < 16:
+                raise ValueError("truncated fmt chunk")
+            fmt = struct.unpack_from("<HHIIHH", body)
+        elif cid == b"fact":
+            if len(body) < 4:
+                raise ValueError("truncated fact chunk")
+            (fact_n,) = struct.unpack_from("<I", body)
+        elif cid == b"data":
+            data = body
+    if fmt is None or data is None:
+        raise ValueError("missing fmt or data chunk")
+    return fmt, fact_n, data
+
+
+def decode_pcm_wav(b: bytes) -> tuple[int, int, int, bytes]:
+    """Parse a PCM WAV (format tag 1) from its fmt and data chunks into
+    (sample_rate, channels, sample width in bytes, frames), the frame
+    bytes cut to whole frames as stdlib ``wave`` reads them. Raises
+    ValueError on malformed input (the decode_jpeg error contract)."""
+    (tag, channels, rate, _, _, bits), _, data = _wave_chunks(b)
+    if tag != 1:
+        raise ValueError(f"not a PCM WAV (tag={tag:#x})")
+    width = (bits + 7) // 8
+    if not channels or not width:
+        raise ValueError(f"implausible PCM WAV: {channels} channels of {bits}-bit samples")
+    return rate, channels, width, data[: len(data) - len(data) % (channels * width)]
 
 
 def decode_adpcm_wav(b: bytes) -> tuple[int, list[int]]:
@@ -1498,28 +1445,7 @@ def decode_adpcm_wav(b: bytes) -> tuple[int, list[int]]:
     (low nibble first), decode recursion, fact-count crop of the final
     block's pad nibble. Raises ValueError on malformed input (the
     decode_jpeg error contract)."""
-    import struct
-
-    if len(b) < 12 or b[:4] != b"RIFF" or b[8:12] != b"WAVE":
-        raise ValueError("not a RIFF/WAVE file")
-    off, end = 12, len(b)
-    fmt = fact_n = data = None
-    while off + 8 <= end:
-        cid, clen = b[off : off + 4], struct.unpack("<I", b[off + 4 : off + 8])[0]
-        body = b[off + 8 : off + 8 + clen]
-        if cid == b"fmt ":
-            if len(body) < 16:
-                raise ValueError("truncated fmt chunk")
-            fmt = struct.unpack("<HHIIHH", body[:16])
-        elif cid == b"fact":
-            if len(body) < 4:
-                raise ValueError("truncated fact chunk")
-            fact_n = struct.unpack("<I", body[:4])[0]
-        elif cid == b"data":
-            data = body
-        off += 8 + clen + (clen & 1)
-    if fmt is None or data is None:
-        raise ValueError("missing fmt or data chunk")
+    fmt, fact_n, data = _wave_chunks(b)
     if fmt[0] != 0x11 or fmt[1] != 1:
         raise ValueError(f"not mono IMA-ADPCM (tag={fmt[0]:#x}, ch={fmt[1]})")
     block_align = fmt[4]  # (tag, ch, rate, byterate, BLOCK ALIGN, bits)
@@ -1578,35 +1504,31 @@ def adpcm_roundtrip(docs: DataFrame) -> DataFrame:
     sample_sum pins the full container parse + decode recursion
     (header state, nibble order, step/index tables, fact-count crop)."""
 
-    def roundtrip(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = {k: [] for k in ("doc_id", "n_samples", "sample_sum", "code_sum", "n_bytes")}
-            for doc_id, n_chars in zip(pdf["doc_id"], pdf["n_chars"]):
-                did, n = int(doc_id), int(n_chars) % 41 + 8
-                p0 = (did * 29) % 2001 - 1000
-                i0 = did % 8
-                codes = [
-                    ((did * 7 + k * 13) % 6) | (8 if (did + k * 5) % 2 == 1 else 0)
-                    for k in range(1, n)
-                ]
-                samples = [p0] + adpcm_decode(codes, p0, i0)
-                wav = encode_adpcm_wav(samples, idx0=i0)
-                _, back = decode_adpcm_wav(wav)
-                if back != samples:  # pragma: no cover - lattice guarantee
-                    raise ValueError(f"ADPCM roundtrip drift on doc {did}")
-                enc = adpcm_encode(samples[1:], p0, i0)
-                out["doc_id"].append(doc_id)
-                out["n_samples"].append(len(back))
-                out["sample_sum"].append(sum(back))
-                out["code_sum"].append(sum(enc))
-                out["n_bytes"].append(len(wav))
-            yield pd.DataFrame(out)
+    def row(did: int, n_chars: int) -> tuple:
+        n = n_chars % 41 + 8
+        p0 = (did * 29) % 2001 - 1000
+        i0 = did % 8
+        codes = [
+            ((did * 7 + k * 13) % 6) | (8 if (did + k * 5) % 2 == 1 else 0) for k in range(1, n)
+        ]
+        samples = [p0] + adpcm_decode(codes, p0, i0)
+        wav = encode_adpcm_wav(samples, idx0=i0)
+        _, back = decode_adpcm_wav(wav)
+        if back != samples:  # pragma: no cover - lattice guarantee
+            raise ValueError(f"ADPCM roundtrip drift on doc {did}")
+        return len(back), sum(back), sum(adpcm_encode(samples[1:], p0, i0)), len(wav)
 
-    return (
-        docs.select("doc_id", "n_chars")
-        .mapInPandas(roundtrip, ADPCM_ROUNDTRIP_SCHEMA)
-        .orderBy("doc_id")
-    )
+    return _per_doc(docs, ADPCM_ROUNDTRIP_SCHEMA, row)
+
+
+# which detected formats satisfy which claimed modality: the format
+# names sniff_decode returns, grouped by modality (decode_media reads the
+# image set; streaming media ingest checks a crawler's claim against it)
+CLAIM_FORMATS = {
+    "image": {"bmp", "png", "jpeg"},
+    "audio": {"wav_pcm", "wav_adpcm"},
+    "video": {"avi_raw", "avi_mjpeg"},
+}
 
 
 def sniff_decode(b: bytes) -> dict:
@@ -1618,13 +1540,10 @@ def sniff_decode(b: bytes) -> dict:
     dimensions as None). Raises ValueError for unknown magics and for
     payloads whose container lies about its contents — the dead-letter
     trigger (one bad payload must route to rejects, never kill the
-    batch). Formats: BMP, PNG, baseline JPEG, RIFF/WAVE (PCM16 via
-    stdlib wave, IMA-ADPCM 0x11 via the vendored decoder), RIFF/AVI
-    (raw 'vids' and MJPG — MJPG frames are fully JPEG-decoded)."""
-    import io
-    import struct
-    import wave
-
+    batch). Formats (the names in :data:`CLAIM_FORMATS`): BMP, PNG,
+    baseline JPEG, RIFF/WAVE (PCM and IMA-ADPCM 0x11, both through
+    :func:`iter_riff`), RIFF/AVI (raw 'vids' and MJPG — MJPG frames are
+    fully JPEG-decoded)."""
     out = {
         "format": None,
         "width": None,
@@ -1642,32 +1561,16 @@ def sniff_decode(b: bytes) -> dict:
     if b[:2] == b"\xff\xd8":
         w, h, _ = decode_jpeg(b)
         return dict(out, format="jpeg", width=w, height=h, n_frames=1)
-    if len(b) >= 12 and b[:4] == b"RIFF" and b[8:12] == b"WAVE":
-        # fmt tag decides the decoder: 0x01 PCM16 (stdlib), 0x11 IMA-ADPCM
-        off = 12
-        tag = None
-        while off + 8 <= len(b):
-            cid, clen = b[off : off + 4], struct.unpack("<I", b[off + 4 : off + 8])[0]
-            if cid == b"fmt " and clen >= 2:
-                if off + 10 > len(b):
-                    raise ValueError("truncated fmt chunk")
-                tag = struct.unpack("<H", b[off + 8 : off + 10])[0]
-                break
-            off += 8 + clen + (clen & 1)
-        if tag == 0x11:
+    if b[:4] == b"RIFF" and b[8:12] == b"WAVE":
+        # the fmt tag decides the decoder: 0x11 IMA-ADPCM, else PCM
+        if _wave_chunks(b)[0][0] == 0x11:
             rate, samples = decode_adpcm_wav(b)
             return dict(out, format="wav_adpcm", n_samples=len(samples), sample_rate=rate)
-        try:
-            with wave.open(io.BytesIO(b)) as wf:
-                return dict(
-                    out,
-                    format="wav_pcm",
-                    n_samples=wf.getnframes(),
-                    sample_rate=wf.getframerate(),
-                )
-        except wave.Error as e:
-            raise ValueError(f"malformed WAV: {e}") from e
-    if len(b) >= 12 and b[:4] == b"RIFF" and b[8:12] == b"AVI ":
+        rate, channels, width, frames = decode_pcm_wav(b)
+        return dict(
+            out, format="wav_pcm", n_samples=len(frames) // (channels * width), sample_rate=rate
+        )
+    if b[:4] == b"RIFF" and b[8:12] == b"AVI ":
         try:
             # demux_mjpeg_avi fully DECODES every frame (entropy + IDCT)
             w, h, frames = demux_mjpeg_avi(b)

@@ -163,16 +163,14 @@ _DRIVER_GREEN_ROUND: dict[str, int] = {
     "bpe_apply": 11, "contamination_ngram": 11, "dedup_clusters": 11,
     "dedup_exact": 11, "dedup_jaccard": 11, "dedup_survivors": 11,
     "embed_centroids": 11, "embed_norm_stats": 11,
-    "multimodal_audio_windows": 11, "multimodal_features": 11,
-    "multimodal_frames": 11, "multimodal_jpeg_roundtrip": 11,
-    "multimodal_meta": 11, "multimodal_video_frames": 11,
-    "q01_filter_project": 11, "q02_pushdown_predicates": 11,
-    "q03_distinct": 11, "q13_anti_join": 11, "q14_range_join": 11,
-    "q15_asof_join": 11, "q16_cross_join_pairs": 11, "q40_global_topk": 11,
-    "q41_union_distinct": 11, "q42_intersect": 11, "q43_except": 11,
-    "q66_hll_rollup_merge": 11, "q68_cohort_retention": 11,
-    "q72_grouped_agg_udaf": 11, "q90_burn_rate": 11,
-    "q91_alert_episodes": 11, "sample_stratified": 11,
+    "multimodal_features": 11, "multimodal_frames": 11,
+    "multimodal_video_frames": 11, "q01_filter_project": 11,
+    "q02_pushdown_predicates": 11, "q03_distinct": 11, "q13_anti_join": 11,
+    "q14_range_join": 11, "q15_asof_join": 11, "q16_cross_join_pairs": 11,
+    "q40_global_topk": 11, "q41_union_distinct": 11, "q42_intersect": 11,
+    "q43_except": 11, "q66_hll_rollup_merge": 11,
+    "q68_cohort_retention": 11, "q72_grouped_agg_udaf": 11,
+    "q90_burn_rate": 11, "q91_alert_episodes": 11, "sample_stratified": 11,
     "shard_balance_report": 11, "sim_cosine_topk": 11, "sim_ivf_topk": 11,
     "sim_lsh_topk": 11, "sim_near_dup_pairs": 11, "text_boilerplate": 11,
     "text_fingerprint": 11, "text_lang_id": 11, "text_repetition": 11,
@@ -181,18 +179,15 @@ _DRIVER_GREEN_ROUND: dict[str, int] = {
     "ann_range_search": 12, "contamination_report": 12,
     "contamination_semantic": 12, "corpus_profile": 12,
     "corpus_shuffle": 12, "dedup_cap_plan": 12, "dedup_substring": 12,
-    "domain_mix_temperature": 12, "multimodal_audio_trim": 12,
-    "multimodal_avi_roundtrip": 12, "multimodal_bmp_roundtrip": 12,
-    "multimodal_mjpeg_roundtrip": 12, "multimodal_wav_roundtrip": 12,
-    "pq_codes": 12, "pq_topk": 12, "q27_pivot": 12, "q28_percentiles": 12,
-    "q29_heavy_hitters": 12, "q30_topk_per_group": 12,
-    "q31_counter_delta": 12, "q32_moving_avg": 12, "q33_running_sum": 12,
-    "q34_counter_rate": 12, "q35_gap_fill": 12, "q60_tumbling_window": 12,
-    "q61_sliding_window": 12, "q62_session_window": 12,
-    "q63_watermark_late_drop": 12, "q64_stateful_dedup": 12,
-    "q70_scalar_pandas_udf": 12, "q71_grouped_map_zscore": 12,
-    "q80_runtime_filter": 12, "sample_eval_slice": 12,
-    "sample_rebalanced": 12, "sim_ivf_recall": 12,
+    "domain_mix_temperature": 12, "pq_codes": 12, "pq_topk": 12,
+    "q27_pivot": 12, "q28_percentiles": 12, "q29_heavy_hitters": 12,
+    "q30_topk_per_group": 12, "q31_counter_delta": 12, "q32_moving_avg": 12,
+    "q33_running_sum": 12, "q34_counter_rate": 12, "q35_gap_fill": 12,
+    "q60_tumbling_window": 12, "q61_sliding_window": 12,
+    "q62_session_window": 12, "q63_watermark_late_drop": 12,
+    "q64_stateful_dedup": 12, "q70_scalar_pandas_udf": 12,
+    "q71_grouped_map_zscore": 12, "q80_runtime_filter": 12,
+    "sample_eval_slice": 12, "sample_rebalanced": 12, "sim_ivf_recall": 12,
     "sim_ivf_recall_batch": 12, "sim_knn_join": 12, "sim_near_dup_lsh": 12,
     "sim_truncation_recall": 12, "sketch_count_min": 12,
     "text_bigram_logprob": 12, "text_entropy": 12, "text_pii_scrub": 12,
@@ -202,9 +197,8 @@ _DRIVER_GREEN_ROUND: dict[str, int] = {
     "dedup_semantic": 13, "dedup_source_matrix": 13,
     "dedup_threshold_sweep": 13, "dsir_weights": 13,
     "embed_outlier_score": 13, "embedding_assign_delta": 13,
-    "hybrid_rank_rrf": 13, "multimodal_adpcm_roundtrip": 13,
-    "multimodal_png_roundtrip": 13, "pack_boundary_report": 13,
-    "q20_hash_agg": 13, "q21_distinct_agg": 13, "q22_approx_distinct": 13,
+    "hybrid_rank_rrf": 13, "pack_boundary_report": 13, "q20_hash_agg": 13,
+    "q21_distinct_agg": 13, "q22_approx_distinct": 13,
     "q23_grouping_sets": 13, "q36_dist_windows": 13, "q37_histogram": 13,
     "q39_cond_aggs": 13, "q45_scalar_subquery": 13, "q46_in_subquery": 13,
     "q67_funnel": 13, "q69_time_range_window": 13, "q81_asof_tolerance": 13,

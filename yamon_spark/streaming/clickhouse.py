@@ -34,7 +34,6 @@ from __future__ import annotations
 
 import os
 from dataclasses import dataclass, field
-from typing import Callable, Optional
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -66,12 +65,6 @@ class ClickHouseSinkConfig:
     session_settings: dict[str, str] = field(
         default_factory=lambda: {"async_insert": "1"}
     )
-    # injectable write executor: (prepared_df, cfg, table) -> None.
-    # None = the real JDBC path (_jdbc_write). This is the DECLARED seam
-    # — CI injects a recording/failing fake to exercise the epoch-stamp
-    # and failure->checkpoint-replay contract without a ClickHouse
-    # server; a live deployment leaves it None.
-    executor: Optional[Callable[[DataFrame, "ClickHouseSinkConfig", str], None]] = None
 
 
 def _jdbc_write(df: DataFrame, cfg: ClickHouseSinkConfig, table: str) -> None:
@@ -121,7 +114,7 @@ def clickhouse_sink(
     is at-least-once (see module docstring for the dedup pairing)."""
 
     def write_epoch(batch: DataFrame, epoch: int) -> None:
-        (cfg.executor or _jdbc_write)(prepare_rows(batch, table, epoch), cfg, table)
+        _jdbc_write(prepare_rows(batch, table, epoch), cfg, table)
 
     return (
         df.writeStream.foreachBatch(write_epoch)

@@ -50,14 +50,6 @@ DECODED_SCHEMA = (
     "claim_ok int, err string"
 )
 
-# which detected formats satisfy which claimed modality
-_CLAIM_FORMATS = {
-    "image": {"bmp", "png", "jpeg"},
-    "audio": {"wav_pcm", "wav_adpcm"},
-    "video": {"avi_raw", "avi_mjpeg"},
-}
-
-
 def parse_media_lines(lines: DataFrame, col: str = "value") -> DataFrame:
     """One JSON media record per landed line -> typed rows with the
     payload decoded from base64 to binary; unparseable lines drop via
@@ -76,8 +68,9 @@ def decode_media_batch(media: DataFrame) -> DataFrame:
     one Arrow stage, one output row per payload — decoded metadata for
     the good rows, the decoder's ValueError message for the bad ones
     (err IS NULL partitions the two populations). claim_ok records
-    whether the DETECTED format satisfies the CLAIMED modality."""
-    from yamon_spark.operators.multimodal import sniff_decode
+    whether the DETECTED format satisfies the CLAIMED modality
+    (``multimodal.CLAIM_FORMATS``)."""
+    from yamon_spark.operators.multimodal import CLAIM_FORMATS, sniff_decode
 
     def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in it:
@@ -119,7 +112,7 @@ def decode_media_batch(media: DataFrame) -> DataFrame:
                 out["n_samples"].append(row["n_samples"])
                 out["sample_rate"].append(row["sample_rate"])
                 out["n_bytes"].append(len(b))
-                ok = row["format"] in _CLAIM_FORMATS.get(claim, set()) if err is None else None
+                ok = row["format"] in CLAIM_FORMATS.get(claim, set()) if err is None else None
                 out["claim_ok"].append(None if ok is None else int(ok))
                 out["err"].append(err)
             yield pd.DataFrame(out)
